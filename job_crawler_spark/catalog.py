@@ -16,8 +16,6 @@ plain parquet + JSON manifests (SURVEY.md §7.3 "Iceberg availability"):
 - overwrite_partition = replace only the files tagged with one partition
   value (Iceberg dynamic partition overwrite / ``DELETE WHERE part = v``
   then append): per-round commits stay O(round), not O(table);
-- merge_upsert = copy-on-write MERGE (Iceberg ``MERGE INTO t USING s ON
-  t.key = s.key WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT``);
 - read(version=k) = time travel, which is what mid-frontier resume uses;
 - row_count = manifest/footer metadata only (Iceberg carries record counts
   in manifests) — table stats never cost a Spark scan.
@@ -36,7 +34,7 @@ parquet footer on demand).
 
 On a real cluster you'd swap this for the Iceberg Spark catalog with zero
 changes above this module — the engine only calls read/append/overwrite/
-merge_upsert/snapshot_id/expire_snapshots.
+overwrite_partition/snapshot_id/expire_snapshots.
 """
 
 from __future__ import annotations
@@ -324,31 +322,6 @@ class Catalog:
 
                 total += pq.ParquetFile(self._entry_path(e)).metadata.num_rows
         return total
-
-    def merge_upsert(
-        self, spark: SparkSession, name: str, source: DataFrame, key: str
-    ) -> int:
-        """Copy-on-write MERGE keyed on a natural key (e.g. url, main.py:141).
-
-        Matched target rows are replaced by source rows; unmatched source rows
-        are inserted. Equivalent Iceberg SQL::
-
-            MERGE INTO name t USING source s ON t.<key> = s.<key>
-            WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
-
-        Scale note: this stand-in rewrites the whole table (copy-on-write
-        over ALL files). Real Iceberg MERGE prunes to the data files whose
-        key ranges overlap the source (manifest min/max stats) and rewrites
-        only those; with merge-on-read it writes delete files and touches no
-        data file at all. Swap in the Iceberg catalog for that behavior —
-        the call site does not change.
-        """
-        if not self.exists(name):
-            return self.overwrite(source, name)
-        target = self.read(spark, name)
-        kept = target.join(source.select(key), on=key, how="left_anti")
-        merged = kept.unionByName(source)
-        return self.overwrite(merged, name)
 
     def expire_snapshots(
         self, name: str, keep_last: int = 5, pin_floor: int | None = None

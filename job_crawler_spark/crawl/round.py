@@ -13,18 +13,18 @@ the north rule's round-based URL-frontier crawl:
     5. expand outlinks -> new frontier candidates, dedup:
          Bloom prefilter (broadcast shards) -> exact anti-join vs seen
     6. COMMIT, in replay-idempotent order:
-         documents (MERGE by doc_id) -> seen (anti-join append) ->
+         documents (round-keyed append) -> seen (anti-join append) ->
          seen_shards (OR-merge) -> frontier (overwrite) ->
          crawl_log (per-partition lineage, round-keyed rewrite) ->
          checkpoint marker (LAST)
 
 Because the checkpoint marker commits last and every earlier write is
-idempotent (MERGE / anti-join-append / OR / overwrite-derived-from-snapshot),
-a job killed mid-round replays exactly that round and converges to the same
-state — the kill-and-resume contract of BASELINE.json. Determinism: batch
-selection is a pure function of the frontier snapshot (total order
-(priority DESC, url_canon ASC)), fetch/parse are deterministic, so replayed
-rounds are bit-identical.
+idempotent (round-keyed rewrite / anti-join-append / snapshot-derived
+overwrite), a job killed mid-round replays exactly that round and converges
+to the same state — the kill-and-resume contract of BASELINE.json.
+Determinism: batch selection is a pure function of the frontier snapshot
+(total order (priority DESC, url_canon ASC)), fetch/parse are deterministic,
+so replayed rounds are bit-identical.
 
 Failed fetches are committed to ``seen`` (no retry) and counted in lineage —
 the reference's errors-degrade-never-raise policy (main.py:241-243).
@@ -74,6 +74,11 @@ PENDING_SCHEMA = T.StructType(
     ]
 )
 
+# Largest merged seen filter the engine broadcasts to every executor; a
+# bigger one is probed routed (candidates shuffled to their shard's reducer,
+# peak task memory one shard — the 10^10-key design point).
+BROADCAST_FILTER_MAX_BYTES = 256 << 20
+
 
 @dataclass
 class CrawlEngine:
@@ -81,35 +86,23 @@ class CrawlEngine:
     catalog: Catalog
     robots: DataFrame
     round_seconds: int = 60
+    # Politeness scheduling is always two-phase salted (real crawl rounds
+    # have truncating budgets). Salt width (SURVEY §7.3): each round records
+    # the written frontier's hottest-host pending count (a one-column
+    # aggregate riding the commit path) and the NEXT round sizes its
+    # phase-1 salt as ceil(hottest / salt_target_rows), clamped to
+    # [1, 256] — so a mild frontier doesn't pay 32-way pre-rank fan-out and
+    # a 10^9-row hot host still gets bounded window partitions.
+    # Correctness-neutral for ANY bucket count (top-k of per-bucket top-ks
+    # == global top-k); the first round after a cold resume falls back to
+    # the static salt_buckets.
     salt_buckets: int = 32
-    # True by default: real crawl rounds have truncating budgets, so the
-    # adaptive stats probe in schedule_batch would pay an extra full pass
-    # over the frontier every round just to conclude "salt". Set to None to
-    # re-enable adaptive detection, False for uncapped drain rounds.
-    salted: bool | None = True
-    # Adaptive salt sizing (SURVEY §7.3): each round records the written
-    # frontier's hottest-host pending count (a one-column aggregate riding
-    # the commit path) and the NEXT round sizes its phase-1 salt as
-    # ceil(hottest / salt_target_rows), clamped to [1, 256] — so a mild
-    # frontier doesn't pay 32-way pre-rank fan-out and a 10^9-row hot host
-    # still gets bounded window partitions. Correctness-neutral for ANY
-    # bucket count (top-k of per-bucket top-ks == global top-k); the first
-    # round after a cold resume falls back to the static salt_buckets.
-    salt_auto: bool = True
     salt_target_rows: int = 1 << 16
     # URL-seen prefilter backend: "bloom" (default) or "cuckoo" (deletable).
     # Correctness-neutral either way — the exact anti-join is authoritative.
+    # The probe is broadcast while the merged filter fits under
+    # BROADCAST_FILTER_MAX_BYTES and routed beyond it.
     seen_filter: str = "bloom"
-    # How candidate URLs consult the filter: "broadcast" ships the whole
-    # filter to every executor (shuffle-free; right while it fits),
-    # "routed" shuffles candidates to their shard's reducer and probes only
-    # that shard (peak task memory = one shard, independent of filter size
-    # — the 10^10-key design point). "auto" (default) picks by the merged
-    # filter's configured size: broadcast while it fits under
-    # broadcast_filter_max_bytes, routed beyond — so callers scaling the
-    # filter up never have to remember to flip the flag.
-    probe_mode: str = "auto"
-    broadcast_filter_max_bytes: int = 256 << 20
     bloom_shards: int = 64
     bloom_bits: int = 1 << 20
     bloom_k: int = 5
@@ -117,17 +110,6 @@ class CrawlEngine:
     # the same footprint as the bloom default, NOT bloom_bits (a 1<<20-bucket
     # table would be 8 MiB/shard, 512 MiB broadcast per round)
     cuckoo_buckets: int = 1 << 14
-    # documents commit strategy: "mor" (default) = merge-on-read — append a
-    # round-keyed partition per round (O(round) commit, like real Iceberg
-    # MoR; read through read_docs(), fold superseded copies with
-    # compact_docs()); "cow" = copy-on-write MERGE (whole-table rewrite per
-    # round — the Iceberg-MERGE parity mode, exact table = visible rows).
-    docs_mode: str = "mor"
-    # Auto-compaction policy (mor mode): run() compacts the documents table
-    # when the re-crawl backlog (victims force_recrawl re-admitted, each of
-    # which leaves one superseded copy once refetched) reaches this fraction
-    # of the table's physical rows. The trigger is free: an in-memory
-    # counter vs a manifest row count — no table scan.
     # Opt-in crawler-trap demotion (operators/traps.py): each round profiles
     # the pending frontier's per-host URL-space signals (path diversity /
     # template collapse / query diversity / depth) and excludes trap-flagged
@@ -164,6 +146,14 @@ class CrawlEngine:
     # admission. Default None for the same parity/policy reasons as
     # `redirects`.
     dust_rules: DataFrame | None = None
+    # Documents are merge-on-read: each round appends a round-keyed
+    # partition (O(round) commit, like real Iceberg MoR); read_docs()
+    # resolves superseded copies, compact_docs() folds them away.
+    # Auto-compaction policy: run() compacts the documents table when the
+    # re-crawl backlog (victims force_recrawl re-admitted, each of which
+    # leaves one superseded copy once refetched) reaches this fraction of
+    # the table's physical rows. The trigger is free: an in-memory counter
+    # vs a manifest row count — no table scan.
     auto_compact: bool = True
     compact_superseded_frac: float = 0.2
     # The backlog counter is in-memory and lost on restart, so every
@@ -174,7 +164,7 @@ class CrawlEngine:
     compact_check_rounds: int = 16
     stats: list[dict] = field(default_factory=list)
     # hottest-host pending count of the latest written frontier (driver-side
-    # cache feeding salt_auto; None until a round commits in-process)
+    # cache sizing the salt width; None until a round commits in-process)
     _hot_pending: int | None = field(default=None, init=False, repr=False)
     # URLs force_recrawl re-admitted since the last compaction (upper bound
     # on superseded doc copies being created by subsequent rounds)
@@ -185,15 +175,6 @@ class CrawlEngine:
         if self.seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(
                 f"seen_filter must be 'bloom' or 'cuckoo', got {self.seen_filter!r}"
-            )
-        if self.probe_mode not in ("auto", "broadcast", "routed"):
-            raise ValueError(
-                f"probe_mode must be 'auto', 'broadcast' or 'routed', got "
-                f"{self.probe_mode!r}"
-            )
-        if self.docs_mode not in ("cow", "mor"):
-            raise ValueError(
-                f"docs_mode must be 'cow' or 'mor', got {self.docs_mode!r}"
             )
 
     # table names
@@ -278,11 +259,9 @@ class CrawlEngine:
         return self.bloom_shards * self.cuckoo_buckets * 4 * 2
 
     def _resolved_probe_mode(self) -> str:
-        if self.probe_mode != "auto":
-            return self.probe_mode
         return (
             "routed"
-            if self._filter_bytes() > self.broadcast_filter_max_bytes
+            if self._filter_bytes() > BROADCAST_FILTER_MAX_BYTES
             else "broadcast"
         )
 
@@ -455,15 +434,15 @@ class CrawlEngine:
         row = dict(row) if row is not None else self._latest_ckpt_row(round_no)
         row.update(updates)
         marker = self.spark.createDataFrame([row], schema=CHECKPOINT_SCHEMA)
-        self._round_keyed_write(self.T_CKPT, marker, CHECKPOINT_SCHEMA, round_no)
+        self._round_keyed_write(self.T_CKPT, marker, round_no)
 
     def _effective_salt_buckets(self) -> int:
         """Phase-1 salt width for the next schedule: sized from the latest
-        written frontier's hottest-host pending count when salt_auto is on
-        and a round has committed in-process; the static salt_buckets
-        otherwise (cold resume / first round). Any value >= 1 yields
-        bit-identical schedules — this only tunes window-partition size."""
-        if not self.salt_auto or self._hot_pending is None:
+        written frontier's hottest-host pending count once a round has
+        committed in-process; the static salt_buckets otherwise (cold
+        resume / first round). Any value >= 1 yields bit-identical
+        schedules — this only tunes window-partition size."""
+        if self._hot_pending is None:
             return self.salt_buckets
         import math
 
@@ -489,7 +468,7 @@ class CrawlEngine:
 
         spark, cat = self.spark, self.catalog
         self._check_bloom_params()
-        self._check_docs_mode()
+        self._check_docs_schema()
         ck_row = self._pinned_ckpt_row(round_no)
         fv = int(ck_row["frontier_v"])
         sv = int(ck_row["seen_v"])
@@ -538,7 +517,6 @@ class CrawlEngine:
         batch = schedule_batch(
             sched_in, self.robots, self.round_seconds,
             self._effective_salt_buckets(),
-            salted=self.salted,
         ).cache()
         n_scheduled = batch.count()
         _mark("schedule")
@@ -548,18 +526,10 @@ class CrawlEngine:
 
         # schedule log: the deterministic crawl order (host, host_rank) this
         # round — the bit-reproducibility artifact the oracle test checks.
-        sched_schema = T.StructType(
-            [
-                T.StructField("round", T.IntegerType(), False),
-                T.StructField("host", T.StringType(), False),
-                T.StructField("host_rank", T.IntegerType(), False),
-                T.StructField("url_canon", T.StringType(), False),
-            ]
-        )
         sched = batch.select(
             F.lit(round_no).alias("round"), "host", "host_rank", "url_canon"
         )
-        self._round_keyed_write(self.T_SCHED, sched, sched_schema, round_no)
+        self._round_keyed_write(self.T_SCHED, sched, round_no)
         _mark("sched_write")
 
         fetched = fetcher.fetch_pages(batch).cache()
@@ -624,20 +594,14 @@ class CrawlEngine:
         docs = docs.observe(
             docs_obs, F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("s")
         )
-        if self.docs_mode == "mor":
-            # merge-on-read: append this round's docs as a round-keyed
-            # partition (O(round) commit); superseded copies (only possible
-            # after a forced re-crawl) are resolved at read time by
-            # read_docs()'s latest-wins window, and compact_docs() is the
-            # Iceberg-compaction analog that folds them away.
-            self._round_keyed_write(
-                self.T_DOCS,
-                docs.withColumn("round", F.lit(round_no)),
-                None,
-                round_no,
-            )
-        else:
-            cat.merge_upsert(spark, self.T_DOCS, docs, key="doc_id")
+        # merge-on-read: append this round's docs as a round-keyed partition
+        # (O(round) commit); superseded copies (only possible after a forced
+        # re-crawl) are resolved at read time by read_docs()'s latest-wins
+        # window, and compact_docs() is the Iceberg-compaction analog that
+        # folds them away.
+        self._round_keyed_write(
+            self.T_DOCS, docs.withColumn("round", F.lit(round_no)), round_no
+        )
         _mark("fetch_parse_merge_docs")
 
         latest_seen = cat.read(spark, self.T_SEEN, schema=schemas.SEEN_SCHEMA)
@@ -658,9 +622,7 @@ class CrawlEngine:
         shard_delta = self._build_filter_shards(
             batch.select("url_canon")
         ).withColumn("round", F.lit(round_no))
-        self._round_keyed_write(
-            self.T_SHARDS, shard_delta, self._filter_schema(), round_no
-        )
+        self._round_keyed_write(self.T_SHARDS, shard_delta, round_no)
         shards_v = cat.snapshot_id(self.T_SHARDS)
         _mark("shard_delta_write")
 
@@ -673,26 +635,22 @@ class CrawlEngine:
         frontier_v = cat.overwrite(new_frontier, self.T_FRONTIER)
         _mark("frontier_write")
 
-        if self.salt_auto and self.salted is not False:
-            # hottest-host pending count of the frontier the NEXT round will
-            # schedule from — read back from the just-written snapshot (one
-            # pruned string column, hash agg) rather than recomputing the
-            # union's lineage. Feeds _effective_salt_buckets. Skipped when
-            # salted=False (uncapped drain rounds): schedule_batch never
-            # enters the salting phase there, so the stat would be dead
-            # weight — a full-frontier aggregate per round at 10^9 rows.
-            hot = (
-                cat.read(
-                    spark, self.T_FRONTIER, version=frontier_v,
-                    schema=PENDING_SCHEMA,
-                )
-                .groupBy("host")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(F.max("n").alias("hot"))
-                .collect()[0].hot
+        # hottest-host pending count of the frontier the NEXT round will
+        # schedule from — read back from the just-written snapshot (one
+        # pruned string column, hash agg) rather than recomputing the
+        # union's lineage. Feeds _effective_salt_buckets.
+        hot = (
+            cat.read(
+                spark, self.T_FRONTIER, version=frontier_v,
+                schema=PENDING_SCHEMA,
             )
-            self._hot_pending = int(hot) if hot is not None else None
-            _mark("host_stats")
+            .groupBy("host")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(F.max("n").alias("hot"))
+            .collect()[0].hot
+        )
+        self._hot_pending = int(hot) if hot is not None else None
+        _mark("host_stats")
 
         # per-partition lineage (round-keyed rewrite = replay-idempotent)
         lineage = (
@@ -709,17 +667,17 @@ class CrawlEngine:
         lineage = lineage.withColumn(
             "spans_parsed", F.lit(int(spans_count)).cast("long")
         ).select(schemas.CRAWL_LOG_SCHEMA.fieldNames())
-        self._round_keyed_write(self.T_LOG, lineage, schemas.CRAWL_LOG_SCHEMA, round_no)
+        self._round_keyed_write(self.T_LOG, lineage, round_no)
         _mark("lineage_write")
 
         n_fetched = fetched.filter(F.col("fetch_ok")).count()
         _mark("stats")
         # table stats from manifest metadata (row counts ride in the
-        # manifests) — no full-table re-scan per round. In mor docs mode
-        # docs_total counts PHYSICAL rows: equal to read_docs().count()
-        # until a forced re-crawl leaves a superseded copy; compact_docs()
-        # restores equality — the same approximate-until-compaction stats
-        # semantics Iceberg MoR has with pending deletes.
+        # manifests) — no full-table re-scan per round. docs_total counts
+        # PHYSICAL rows: equal to read_docs().count() until a forced
+        # re-crawl leaves a superseded copy; compact_docs() restores
+        # equality — the same approximate-until-compaction stats semantics
+        # Iceberg MoR has with pending deletes.
         stats_row = {
             "round": round_no,
             "scheduled": int(n_scheduled),
@@ -735,7 +693,7 @@ class CrawlEngine:
             "shards_v": int(shards_v),
         }
         ckpt = spark.createDataFrame([stats_row], schema=CHECKPOINT_SCHEMA)
-        self._round_keyed_write(self.T_CKPT, ckpt, CHECKPOINT_SCHEMA, round_no)
+        self._round_keyed_write(self.T_CKPT, ckpt, round_no)
 
         batch.unpersist()
         fetched.unpersist()
@@ -747,13 +705,10 @@ class CrawlEngine:
             return {**stats_row, "done": False, "phase_seconds": _phases}
         return {**stats_row, "done": False}
 
-    def _round_keyed_write(
-        self, name: str, df: DataFrame, schema: T.StructType, round_no: int
-    ) -> None:
+    def _round_keyed_write(self, name: str, df: DataFrame, round_no: int) -> None:
         """Replace exactly this round's files (dynamic partition overwrite):
         a replay deletes-and-rewrites only its own round's data, so the
         commit costs O(round) — not O(total history) — per round."""
-        del schema  # kept in the signature for call-site self-documentation
         self.catalog.overwrite_partition(df, name, round_no)
 
     def expire_old_snapshots(self, keep_last: int = 5) -> None:
@@ -776,14 +731,12 @@ class CrawlEngine:
                     name, keep_last=keep_last, pin_floor=pins.get(name)
                 )
 
-    # -- documents read/compaction (merge-on-read mode) -------------------------
+    # -- documents read/compaction (merge-on-read) -----------------------------
     def read_docs(self, version: int | None = None) -> DataFrame:
-        """The documents table as users see it: in cow mode the stored rows;
-        in mor mode latest-wins per doc_id (max round; copies within one
-        round are bit-identical by determinism, so any pick is the same)."""
+        """The documents table as users see it: latest-wins per doc_id (max
+        round; copies within one round are bit-identical by determinism, so
+        any pick is the same)."""
         docs = self.catalog.read(self.spark, self.T_DOCS, version=version)
-        if self.docs_mode == "cow" or "round" not in docs.columns:
-            return docs
         from pyspark.sql import Window
 
         w = Window.partitionBy("doc_id").orderBy(F.col("round").desc())
@@ -798,8 +751,6 @@ class CrawlEngine:
         full rewrite, amortized across however many rounds ran since the
         last compaction — run it on a schedule, not per round. Keeps the
         round column (partition tags survive) so replay semantics hold."""
-        if self.docs_mode != "mor":
-            return self.catalog.snapshot_id(self.T_DOCS)
         docs = self.catalog.read(self.spark, self.T_DOCS)
         from pyspark.sql import Window
 
@@ -825,22 +776,15 @@ class CrawlEngine:
         latest.unpersist()
         return v
 
-    def _check_docs_mode(self) -> None:
-        """A mor catalog has a round column in documents; resuming it in cow
-        mode (or vice versa) would silently mix semantics — refuse."""
+    def _check_docs_schema(self) -> None:
+        """A documents table without a round column was written by the
+        removed copy-on-write mode; appending round-keyed partitions to it
+        would mix schemas — refuse."""
         schema = self.catalog.table_schema(self.T_DOCS)
-        if schema is None:
-            return
-        has_round = "round" in schema.fieldNames()
-        if has_round and self.docs_mode != "mor":
+        if schema is not None and "round" not in schema.fieldNames():
             raise ValueError(
-                "documents table is merge-on-read (has a round column); "
-                "configure CrawlEngine(docs_mode='mor') to resume it"
-            )
-        if not has_round and self.docs_mode != "cow":
-            raise ValueError(
-                "documents table is copy-on-write; configure "
-                "CrawlEngine(docs_mode='cow') to resume it"
+                "documents table has no round column (a copy-on-write "
+                "catalog); the engine only resumes merge-on-read catalogs"
             )
 
     # -- incremental seed ingestion (streaming/continuous crawl) ---------------
@@ -1063,8 +1007,8 @@ class CrawlEngine:
         self, *, base_interval: int = 1, max_interval: int = 64
     ) -> DataFrame:
         """Change-rate-adaptive revisit schedule (operators/revisit.py)
-        computed from the engine's OWN fetch history: the mor documents
-        table keeps one round-keyed copy per successful fetch, so
+        computed from the engine's OWN fetch history: the merge-on-read
+        documents table keeps one round-keyed copy per successful fetch, so
         (doc_id, round, xxhash64(spans)) is exactly the operator's
         (url, round, content hash) contract — failed fetches never wrote a
         docs row and correctly contribute no observation.
@@ -1077,17 +1021,9 @@ class CrawlEngine:
         fetch (the bounded-history tradeoff any 10^10-URL scheduler makes;
         at scale the schedule state lives in the same table the compactor
         already maintains, no side state).
-
-        Requires ``docs_mode='mor'`` — cow keeps only the latest copy, so
-        there is no history to adapt to.
         """
         from job_crawler_spark.operators.revisit import revisit_schedule
 
-        if self.docs_mode != "mor":
-            raise ValueError(
-                "revisit_due requires docs_mode='mor' "
-                "(cow keeps no per-round fetch history)"
-            )
         docs = self.catalog.read(self.spark, self.T_DOCS)
         hist = docs.select(
             F.col("doc_id").alias("url_canon"),
@@ -1114,7 +1050,7 @@ class CrawlEngine:
         ``budget``, so a bounded recrawl allowance is spent on the URLs
         whose content actually churns). Inherits force_recrawl's
         idempotence and its cuckoo-backend requirement; the re-fetched
-        copies supersede in mor and feed the auto-compaction backlog."""
+        copies supersede the old ones and feed the auto-compaction backlog."""
         from job_crawler_spark.operators.revisit import due_urls
 
         victims = due_urls(
@@ -1170,7 +1106,7 @@ class CrawlEngine:
 
     def _maybe_compact(self) -> bool:
         """Auto-compaction policy (run() calls this between rounds): compact
-        the mor documents table once the re-crawl backlog reaches
+        the documents table once the re-crawl backlog reaches
         compact_superseded_frac of the table's physical rows. The check is
         metadata-only (in-memory counter vs manifest row count). Safe by
         construction: docs versions are never pinned in checkpoints, and
@@ -1186,11 +1122,7 @@ class CrawlEngine:
         aggregate) — superseded copies therefore get folded within a
         bounded number of rounds even across restarts, and the streaming
         loop calls this too (crawl_stream.process_batch)."""
-        if (
-            self.docs_mode != "mor"
-            or not self.auto_compact
-            or not self.catalog.exists(self.T_DOCS)
-        ):
+        if not self.auto_compact or not self.catalog.exists(self.T_DOCS):
             return False
         self._rounds_since_compact_check += 1
         physical = int(self.catalog.row_count(self.T_DOCS))

@@ -20,7 +20,8 @@ Sandbox sizing: shards sized for the simulated scale. Real-scale parameters
 only the current round's new URLs to the affected shards (round-keyed
 deltas).
 
-Two probe strategies, chosen by the engine's ``probe_mode``:
+Two probe strategies; the engine picks one from the merged filter's
+configured size:
 
 - ``broadcast`` (split_by_bloom): ship the whole filter to every executor,
   probe in-place — shuffle-free, right while the filter fits a broadcast

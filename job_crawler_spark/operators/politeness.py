@@ -87,10 +87,14 @@ def schedule_batch(
     robots: DataFrame,
     round_seconds: int = 60,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    salted: bool | None = None,
+    salted: bool = True,
 ) -> DataFrame:
     """Pick this round's fetch batch: per-host top-``budget`` by
     (priority DESC, url_canon ASC), robots-respecting, skew-proof.
+
+    ``salted=False`` skips the phase-1 pre-rank; pass it only when no
+    host's budget truncates (e.g. an uncapped drain round), where phase 1
+    would sort every row and filter none. Either way the result is the same.
 
     Returns the scheduled rows with their final per-host ``host_rank``
     (1-based) — rank order IS the deterministic crawl order within a host.
@@ -101,33 +105,16 @@ def schedule_batch(
 
     order = [F.col("priority").desc(), F.col("url_canon").asc()]
 
-    # Adaptive phase selection: the salted pre-rank only helps when budgets
-    # actually truncate hosts (it bounds any single window partition to
-    # ~salt_buckets*budget rows). When every host fits its budget (e.g. an
-    # uncapped drain round), phase 1 sorts the world and filters nothing —
-    # skip it. The per-host stats are a 20-row aggregate: free.
-    if salted is None:
-        stats = (
-            allowed.groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("__budget").alias("b"))
-            .agg(F.max(F.col("n") - F.col("b")).alias("over"))
-            .collect()
-        )
-        needs_salting = bool(
-            stats and stats[0].over is not None and stats[0].over > 0
-        )
-    else:  # caller knows whether budgets truncate (skips the stats job)
-        needs_salting = salted
-
     survivors = allowed
-    if needs_salting:
-        # phase 1: salted local top-k
-        salted = allowed.withColumn(
+    if salted:
+        # phase 1: salted local top-k — bounds any single window partition
+        # to ~salt_buckets*budget rows
+        bucketed = allowed.withColumn(
             "__salt", F.pmod(F.xxhash64(F.col("url_canon")), F.lit(salt_buckets))
         )
         w_local = Window.partitionBy("host", "__salt").orderBy(*order)
         survivors = (
-            salted.withColumn("__lr", F.row_number().over(w_local))
+            bucketed.withColumn("__lr", F.row_number().over(w_local))
             .filter(F.col("__lr") <= F.col("__budget"))
             .drop("__lr", "__salt")
         )

@@ -14,7 +14,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_driver_mem() -> str:
+    """About half the machine's physical memory, never above 16g: the local
+    driver JVM also hosts every executor, and the Python workers need the
+    other half."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(16 << 10, kib // 2048)}m"
+
+
+# the deployment override, else the cores this process may run on
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -50,7 +61,10 @@ def get_spark(
         # Broadcast threshold: dims (robots, vocab tables) are tiny; 64 MB
         # keeps the politeness/robots joins broadcast at any realistic size.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # local-mode shuffle goes through spark.local.dir; tmpfs removes the
         # single-disk bottleneck that otherwise serializes multi-core runs

@@ -20,8 +20,8 @@ per-round stats.
 Cluster notes baked into the engine, not this script: AQE + skew-join
 splitting, Arrow batching for every pandas-UDF stage, shuffle partitions
 sized ~2-3x total cores (set via --conf at submit), broadcast-or-routed
-seen-filter probes (auto-selected from configured filter size;
---probe-mode forces either), salted politeness windows for hot-domain skew.
+seen-filter probes (selected from the configured filter size), merge-on-read
+documents, salted politeness windows for hot-domain skew.
 """
 
 from __future__ import annotations
@@ -40,9 +40,6 @@ def main() -> None:
     ap.add_argument("--round-seconds", type=int, default=3000)
     ap.add_argument("--seen-filter", choices=("bloom", "cuckoo"),
                     default="bloom")
-    ap.add_argument("--probe-mode", choices=("auto", "broadcast", "routed"),
-                    default="auto")
-    ap.add_argument("--docs-mode", choices=("mor", "cow"), default="mor")
     ap.add_argument("--no-auto-compact", action="store_true",
                     help="disable between-round mor compaction policy")
     ap.add_argument("--salt-target-rows", type=int, default=1 << 16,
@@ -75,8 +72,6 @@ def main() -> None:
         robots=synth.robots_df(spark),
         round_seconds=args.round_seconds,
         seen_filter=args.seen_filter,
-        probe_mode=args.probe_mode,
-        docs_mode=args.docs_mode,
         auto_compact=not args.no_auto_compact,
         salt_target_rows=args.salt_target_rows,
     )

@@ -1,4 +1,4 @@
-"""Snapshot catalog: atomic commits, append, merge, time travel, retention."""
+"""Snapshot catalog: atomic commits, append, time travel, retention."""
 
 from __future__ import annotations
 
@@ -33,20 +33,6 @@ def test_time_travel(spark, cat):
     cat.append(spark.range(5), "t")
     assert cat.read(spark, "t", version=0).count() == 5
     assert cat.read(spark, "t", version=1).count() == 10
-
-
-def test_merge_upsert_by_key(spark, cat):
-    t = spark.createDataFrame(
-        [("u1", "old"), ("u2", "old")], "url string, v string"
-    )
-    cat.overwrite(t, "jobs")
-    src = spark.createDataFrame(
-        [("u2", "new"), ("u3", "new")], "url string, v string"
-    )
-    cat.merge_upsert(spark, "jobs", src, key="url")
-    rows = {r.url: r.v for r in cat.read(spark, "jobs").collect()}
-    # matched row replaced, unmatched inserted, untouched kept (S6 semantics)
-    assert rows == {"u1": "old", "u2": "new", "u3": "new"}
 
 
 def test_missing_table_with_schema_is_empty(spark, cat):

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from job_crawler_spark.catalog import Catalog
 from job_crawler_spark.crawl import oracle
+from job_crawler_spark.crawl import round as crawl_round
 from job_crawler_spark.crawl.round import CrawlEngine
 from job_crawler_spark.sources import synth
 
@@ -340,72 +341,87 @@ def test_transient_write_failure_mid_commit_converges(spark, tmp_path):
         assert a == b, table
 
 
-def test_routed_probe_engine_matches_oracle(spark, tmp_path):
-    """probe_mode='routed' (shard-routed cogroup, no broadcast) is
-    correctness-neutral: identical seen set and crawl order as the oracle."""
-    eng = CrawlEngine(
+def _probe_engine(spark, tmp_path, name, **sizes):
+    return CrawlEngine(
         spark=spark,
-        catalog=Catalog(str(tmp_path / "routed")),
+        catalog=Catalog(str(tmp_path / name)),
         robots=synth.robots_df(spark),
         round_seconds=ROUND_SECONDS,
-        probe_mode="routed",
-        bloom_shards=8,
-        bloom_bits=1 << 16,
-        bloom_k=5,
+        **sizes,
     )
+
+
+def test_probe_mode_auto_selects_by_filter_size(spark, tmp_path, monkeypatch):
+    """The seen-filter probe is broadcast while the configured merged
+    filter fits under BROADCAST_FILTER_MAX_BYTES and routed beyond it."""
+    # threshold logic, no data needed: default sizes (8 MiB) broadcast...
+    assert _probe_engine(spark, tmp_path, "default")._resolved_probe_mode() == (
+        "broadcast"
+    )
+    # ...a 10^10-key-shaped config (1024 shards x 512 MiB bloom) routes
+    big = _probe_engine(
+        spark, tmp_path, "big", bloom_shards=1024, bloom_bits=1 << 32, bloom_k=5
+    )
+    assert big._resolved_probe_mode() == "routed"
+    # ...and a small filter routes once the threshold is pushed below it
+    small = _probe_engine(
+        spark, tmp_path, "small", bloom_shards=8, bloom_bits=1 << 16, bloom_k=5
+    )
+    assert small._resolved_probe_mode() == "broadcast"
+    monkeypatch.setattr(crawl_round, "BROADCAST_FILTER_MAX_BYTES", 1024)
+    assert small._resolved_probe_mode() == "routed"
+
+
+def test_routed_probe_engine_matches_oracle(spark, tmp_path, monkeypatch):
+    """The routed probe (shard-routed cogroup, no broadcast) is correctness-
+    neutral: identical seen set and crawl order as the oracle."""
+    monkeypatch.setattr(crawl_round, "BROADCAST_FILTER_MAX_BYTES", 1024)
+    eng = _probe_engine(
+        spark, tmp_path, "routed", bloom_shards=8, bloom_bits=1 << 16, bloom_k=5
+    )
+    assert eng._resolved_probe_mode() == "routed"
     eng.bootstrap(synth.seed_frontier(spark, 200))
     eng.run(2)
     want = oracle.crawl(200, synth.robots_rows(), 2, round_seconds=ROUND_SECONDS)
     got_seen = {
-        r.url_canon for r in eng.catalog.read(spark, eng.T_SEEN).collect()
+        r.url_canon: r.first_round
+        for r in eng.catalog.read(spark, eng.T_SEEN).collect()
     }
-    assert got_seen == set(want["seen"])
-
-
-def test_mor_docs_mode_matches_cow(spark, tmp_path):
-    """Merge-on-read documents (O(round) append commits) must be user-
-    indistinguishable from copy-on-write MERGE: identical read_docs()
-    content, identical seen set; mode mismatch on resume refuses."""
-    def mk(name, mode):
-        return CrawlEngine(
-            spark=spark,
-            catalog=Catalog(str(tmp_path / name)),
-            robots=synth.robots_df(spark),
-            round_seconds=ROUND_SECONDS,
-            docs_mode=mode,
-            bloom_shards=8,
-            bloom_bits=1 << 16,
-            bloom_k=5,
+    assert got_seen == want["seen"]
+    got_rounds: dict[int, list] = {}
+    for r in eng.catalog.read(spark, eng.T_SCHED).collect():
+        got_rounds.setdefault(r.round, []).append(
+            (r.host, r.host_rank, r.url_canon)
         )
+    assert [sorted(got_rounds[r]) for r in sorted(got_rounds)] == want[
+        "crawl_order"
+    ]
 
-    cow = mk("cow", "cow")
-    cow.bootstrap(synth.seed_frontier(spark, 200))
-    cow.run(2)
-    mor = mk("mor", "mor")
-    mor.bootstrap(synth.seed_frontier(spark, 200))
-    mor.run(2)
 
-    def doc_map(eng):
+def test_copy_on_write_catalog_refused_and_compaction_clean(spark, tmp_path):
+    """compact_docs() on a clean crawl (no superseded copies) leaves
+    read_docs() unchanged; a documents table without a round column (a
+    catalog written by the removed copy-on-write mode) refuses to resume
+    rather than mix schemas."""
+    eng = _engine(spark, tmp_path, "docs")
+    eng.bootstrap(synth.seed_frontier(spark, 200))
+    eng.run(2)
+
+    def doc_map():
         return {
             r.doc_id: [tuple(s) for s in r.spans]
             for r in eng.read_docs().select("doc_id", "spans").collect()
         }
 
-    assert doc_map(cow) == doc_map(mor)
-    a = {r.url_canon for r in cow.catalog.read(spark, cow.T_SEEN).collect()}
-    b = {r.url_canon for r in mor.catalog.read(spark, mor.T_SEEN).collect()}
-    assert a == b
+    before = doc_map()
+    eng.compact_docs()
+    assert doc_map() == before
 
-    # resuming a mor catalog in cow mode refuses (and vice versa)
-    with pytest.raises(ValueError, match="merge-on-read"):
-        mk("mor", "cow").run_round(2)
-    with pytest.raises(ValueError, match="copy-on-write"):
-        mk("cow", "mor").run_round(2)
-
-    # compaction folds nothing on the clean path but preserves content
-    before = doc_map(mor)
-    mor.compact_docs()
-    assert doc_map(mor) == before
+    cat = eng.catalog
+    cat.overwrite(cat.read(spark, eng.T_DOCS).drop("round"), eng.T_DOCS)
+    resumed = _engine(spark, tmp_path, "docs")
+    with pytest.raises(ValueError, match="no round column"):
+        resumed.run_round(resumed.next_round())
 
 
 def test_mor_force_recrawl_updates_doc_latest_wins(spark, tmp_path):
@@ -416,7 +432,6 @@ def test_mor_force_recrawl_updates_doc_latest_wins(spark, tmp_path):
         catalog=Catalog(str(tmp_path / "morfr")),
         robots=synth.robots_df(spark),
         round_seconds=ROUND_SECONDS,
-        docs_mode="mor",
         seen_filter="cuckoo",
         bloom_shards=8,
         cuckoo_buckets=1 << 10,
@@ -509,7 +524,6 @@ def test_compact_folds_fully_superseded_round(spark, tmp_path):
         catalog=Catalog(str(tmp_path / "fullsup")),
         robots=synth.robots_df(spark),
         round_seconds=ROUND_SECONDS,
-        docs_mode="mor",
         seen_filter="cuckoo",
         bloom_shards=8,
         cuckoo_buckets=1 << 10,
@@ -588,62 +602,6 @@ def test_force_recrawl_rerun_repins_after_late_crash(spark, tmp_path):
     assert target in resched
 
 
-def test_probe_mode_auto_selects_by_filter_size(spark, tmp_path):
-    """probe_mode='auto' (the default) resolves to broadcast while the
-    configured merged filter fits under broadcast_filter_max_bytes and to
-    routed beyond it — and the routed auto path produces the same crawl
-    state as explicit broadcast."""
-    # threshold logic, no data needed: sandbox default sizes broadcast...
-    small = _engine(spark, tmp_path, "auto_small")
-    assert small.probe_mode == "auto"
-    assert small._resolved_probe_mode() == "broadcast"
-    # ...a 10^10-key-shaped config (1024 shards x 512 MiB bloom) routes
-    big = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "auto_big")),
-        robots=synth.robots_df(spark),
-        round_seconds=ROUND_SECONDS,
-        bloom_shards=1024,
-        bloom_bits=1 << 32,
-        bloom_k=5,
-    )
-    assert big._resolved_probe_mode() == "routed"
-    # explicit override still wins
-    forced = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "auto_forced")),
-        robots=synth.robots_df(spark),
-        round_seconds=ROUND_SECONDS,
-        probe_mode="broadcast",
-        bloom_shards=1024,
-        bloom_bits=1 << 32,
-        bloom_k=5,
-    )
-    assert forced._resolved_probe_mode() == "broadcast"
-
-    # end-to-end: an auto engine pushed over the threshold (tiny max_bytes)
-    # routes and converges to the same state as explicit broadcast
-    auto_routed = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "auto_routed")),
-        robots=synth.robots_df(spark),
-        round_seconds=ROUND_SECONDS,
-        broadcast_filter_max_bytes=1024,
-        bloom_shards=8,
-        bloom_bits=1 << 16,
-        bloom_k=5,
-    )
-    assert auto_routed._resolved_probe_mode() == "routed"
-    auto_routed.bootstrap(synth.seed_frontier(spark, 200))
-    auto_routed.run(2)
-    want = oracle.crawl(200, synth.robots_rows(), 2, round_seconds=ROUND_SECONDS)
-    got_seen = {
-        r.url_canon
-        for r in auto_routed.catalog.read(spark, auto_routed.T_SEEN).collect()
-    }
-    assert got_seen == set(want["seen"])
-
-
 def test_auto_compaction_bounds_physical_rows(spark, tmp_path):
     """run() auto-compacts the mor documents table once the force_recrawl
     backlog crosses compact_superseded_frac of physical rows — a long crawl
@@ -654,7 +612,6 @@ def test_auto_compaction_bounds_physical_rows(spark, tmp_path):
         catalog=Catalog(str(tmp_path / "autocompact")),
         robots=synth.robots_df(spark),
         round_seconds=ROUND_SECONDS,
-        docs_mode="mor",
         seen_filter="cuckoo",
         bloom_shards=8,
         cuckoo_buckets=1 << 10,
@@ -680,7 +637,7 @@ def test_auto_compaction_bounds_physical_rows(spark, tmp_path):
 
 
 def test_adaptive_salt_buckets_from_hot_host(spark, tmp_path):
-    """salt_auto: each round records the written frontier's hottest-host
+    """Derived salt width: each round records the written frontier's hottest-host
     pending count and the next schedule sizes its phase-1 salt from it
     (clamped to [1, 256]); a cold engine falls back to the static width.
     Bucket width is correctness-neutral (test_two_phase_equals_single_phase

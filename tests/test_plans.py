@@ -117,7 +117,7 @@ def test_neardup_ann_is_blocked_shuffle_hash_no_selfjoin(spark, queries):
 
 
 def test_schedule_batch_uncapped_skips_salting(spark):
-    """The adaptive scheduler must not pay the salted pre-rank when budgets
+    """The scheduler must not pay the salted pre-rank when budgets
     never truncate (salted=False fast path): exactly one window."""
     from job_crawler_spark.operators.politeness import schedule_batch
     from job_crawler_spark.sources import synth

@@ -134,24 +134,6 @@ def test_engine_revisit_round_closes_the_loop(spark, tmp_path):
     assert n_docs >= 3
 
 
-def test_engine_revisit_requires_mor(spark, tmp_path):
-    from job_crawler_spark.catalog import Catalog
-    from job_crawler_spark.crawl.round import CrawlEngine
-    from job_crawler_spark.sources import synth
-
-    eng = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "cw")),
-        robots=synth.robots_df(spark),
-        round_seconds=30,
-        docs_mode="cow",
-    )
-    import pytest
-
-    with pytest.raises(ValueError, match="mor"):
-        eng.revisit_due()
-
-
 def test_single_exchange_plan(spark):
     """The lag/row_number window and BOTH hash aggregates must share one
     hash exchange on url_canon — the groupBy reuses the window's
