@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,6 +78,29 @@ PENDING_SCHEMA = T.StructType(
 # bigger one is probed routed (candidates shuffled to their shard's reducer,
 # peak task memory one shard — the 10^10-key design point).
 BROADCAST_FILTER_MAX_BYTES = 256 << 20
+
+# seen_filter -> (backend module, the engine fields that follow bloom_shards
+# in its build_shards/collect_shards signature, broadcast probe, routed probe)
+_SEEN_FILTERS = {
+    "bloom": (
+        bloom, ("bloom_bits", "bloom_k"),
+        bloom.split_by_bloom, bloom.split_by_bloom_routed,
+    ),
+    "cuckoo": (
+        cuckoo, ("cuckoo_buckets",),
+        cuckoo.split_by_cuckoo, cuckoo.split_by_cuckoo_routed,
+    ),
+}
+
+
+def _latest_wins(docs: DataFrame) -> DataFrame:
+    """One row per doc_id: the copy from the highest round."""
+    w = Window.partitionBy("doc_id").orderBy(F.col("round").desc())
+    return (
+        docs.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 @dataclass
@@ -172,10 +195,14 @@ class CrawlEngine:
     _rounds_since_compact_check: int = field(default=0, init=False, repr=False)
 
     def __post_init__(self) -> None:
-        if self.seen_filter not in ("bloom", "cuckoo"):
+        if self.seen_filter not in _SEEN_FILTERS:
             raise ValueError(
                 f"seen_filter must be 'bloom' or 'cuckoo', got {self.seen_filter!r}"
             )
+        (
+            self._filter, self._filter_fields,
+            self._split_broadcast, self._split_routed,
+        ) = _SEEN_FILTERS[self.seen_filter]
 
     # table names
     T_FRONTIER = "frontier"
@@ -196,10 +223,15 @@ class CrawlEngine:
         ]
     )
 
+    def _filter_params(self) -> tuple[int, ...]:
+        """The backend's parameters after n_shards, read from the fields on
+        every call (a resume check compares them with the catalog's)."""
+        return tuple(getattr(self, f) for f in self._filter_fields)
+
     def _meta_tuple(self) -> tuple[str, int, int, int]:
-        if self.seen_filter == "bloom":
-            return ("bloom", self.bloom_shards, self.bloom_bits, self.bloom_k)
-        return ("cuckoo", self.bloom_shards, self.cuckoo_buckets, 0)
+        # cuckoo persists its n_buckets as m_bits and k = 0
+        m, k = (*self._filter_params(), 0)[:2]
+        return (self.seen_filter, self.bloom_shards, m, k)
 
     def _check_bloom_params(self) -> None:
         """The persisted shard bitmaps/tables are only meaningful under the
@@ -234,29 +266,26 @@ class CrawlEngine:
     # crash-and-replay rewrites its own delta instead of re-merging into an
     # already-merged table. Bloom OR-merge happens to be idempotent, but
     # cuckoo fingerprint insertion is NOT — deltas make replay exact for
-    # both. collect() merges all rounds' deltas when broadcasting.
+    # both. The backend's from_rows merges a shard's round deltas: all of
+    # them on the driver for the broadcast probe, one shard's per reducer
+    # for the routed probe.
 
     def _filter_schema(self) -> T.StructType:
-        base = bloom.SHARD_SCHEMA if self.seen_filter == "bloom" else cuckoo.SHARD_SCHEMA
         return T.StructType(
-            list(base.fields) + [T.StructField("round", T.IntegerType(), False)]
+            list(self._filter.SHARD_SCHEMA.fields)
+            + [T.StructField("round", T.IntegerType(), False)]
         )
 
     def _build_filter_shards(self, keys: DataFrame) -> DataFrame:
-        if self.seen_filter == "bloom":
-            return bloom.build_shards(
-                keys, "url_canon", self.bloom_shards, self.bloom_bits, self.bloom_k
-            )
-        return cuckoo.build_shards(
-            keys, "url_canon", self.bloom_shards, self.cuckoo_buckets
+        return self._filter.build_shards(
+            keys, "url_canon", self.bloom_shards, *self._filter_params()
         )
 
     def _filter_bytes(self) -> int:
         """Configured size of the MERGED filter (all shards) in bytes."""
-        if self.seen_filter == "bloom":
-            return self.bloom_shards * (self.bloom_bits // 8)
-        # cuckoo: buckets x 4 slots x 2-byte fingerprints per shard
-        return self.bloom_shards * self.cuckoo_buckets * 4 * 2
+        return self.bloom_shards * self._filter.shard_bytes(
+            *self._filter_params()
+        )
 
     def _resolved_probe_mode(self) -> str:
         return (
@@ -267,26 +296,13 @@ class CrawlEngine:
 
     def _split_new_vs_seen(self, not_pending: DataFrame, shards_df: DataFrame):
         shards_df = shards_df.drop("round")
+        params = self._filter_params()
         if self._resolved_probe_mode() == "routed":
-            if self.seen_filter == "bloom":
-                return bloom.split_by_bloom_routed(
-                    not_pending, shards_df,
-                    self.bloom_shards, self.bloom_bits, self.bloom_k,
-                    "url_canon",
-                )
-            return cuckoo.split_by_cuckoo_routed(
-                not_pending, shards_df,
-                self.bloom_shards, self.cuckoo_buckets, "url_canon",
+            return self._split_routed(
+                not_pending, shards_df, self.bloom_shards, *params, "url_canon"
             )
-        if self.seen_filter == "bloom":
-            shards = bloom.collect_shards(
-                shards_df, self.bloom_shards, self.bloom_bits, self.bloom_k
-            )
-            return bloom.split_by_bloom(not_pending, self.spark, shards, "url_canon")
-        shards = cuckoo.collect_shards(
-            shards_df, self.bloom_shards, self.cuckoo_buckets
-        )
-        return cuckoo.split_by_cuckoo(not_pending, self.spark, shards, "url_canon")
+        shards = self._filter.collect_shards(shards_df, self.bloom_shards, *params)
+        return self._split_broadcast(not_pending, self.spark, shards, "url_canon")
 
     # -- bootstrap -------------------------------------------------------------
     def _apply_redirects(self, canon: DataFrame) -> DataFrame:
@@ -324,10 +340,10 @@ class CrawlEngine:
             )
         return canon
 
-    def bootstrap(self, raw_frontier: DataFrame) -> None:
-        """Seed the frontier: canonicalize, drop null/invalid urls, rewrite
-        through the optional redirect map, first-wins dedup on canonical
-        URL by (priority DESC, url ASC)."""
+    def _admit(self, raw_frontier: DataFrame) -> DataFrame:
+        """Seed admission (bootstrap and ingest_seeds): canonicalize, drop
+        null/invalid urls, rewrite through the optional redirect map, then
+        first-wins dedup on canonical URL by (priority DESC, url ASC)."""
         canon = self._apply_redirects(
             raw_frontier.filter(F.col("url").isNotNull())
             .withColumn("url_canon", canonicalize_url_col(F.col("url")))
@@ -337,12 +353,15 @@ class CrawlEngine:
         # survivor per canon URL: highest priority, then smallest raw url —
         # total order => deterministic under any partitioning; min_by
         # aggregate form (map-side combine, no per-key sort)
-        deduped = first_wins_agg(
+        return first_wins_agg(
             canon.withColumn("neg_priority", -F.col("priority")),
             ["url_canon"],
             ["neg_priority", "url"],
         ).select("url_canon", "host", "depth", "priority", "round")
-        fv = self.catalog.overwrite(deduped, self.T_FRONTIER)
+
+    def bootstrap(self, raw_frontier: DataFrame) -> None:
+        """Seed the frontier with the admitted seeds (see _admit)."""
+        fv = self.catalog.overwrite(self._admit(raw_frontier), self.T_FRONTIER)
         empty_seen = self.spark.createDataFrame([], schema=schemas.SEEN_SCHEMA)
         sv = self.catalog.overwrite(empty_seen, self.T_SEEN)
         empty_shards = self.spark.createDataFrame([], schema=self._filter_schema())
@@ -375,18 +394,18 @@ class CrawlEngine:
         row = ck.agg(F.max("round").alias("m")).collect()[0]
         return 0 if row.m is None else int(row.m) + 1
 
-    def _pinned_ckpt_row(self, round_no: int) -> dict:
-        """The full winning checkpoint row of round_no - 1: the state this
-        round's inputs are read as-of. Replays therefore recompute from
-        identical inputs even when later snapshots already exist. Returned
-        whole so callers that go on to repin the same row (the adoption
-        branch) don't pay a second read+collect job."""
+    def _latest_ckpt_row(self, round_no: int) -> dict:
+        """The full winning checkpoint row of a round. Round N reads its
+        inputs as-of round N-1's row, so replays recompute from identical
+        inputs even when later snapshots already exist. Returned whole so
+        callers that go on to repin the same row (the adoption branch)
+        don't pay a second read+collect job."""
         # manifest-stats pruned read: at 10^6 stored rounds this touches
         # the one file whose round range covers the target, not the table
         ck = self.catalog.read_pruned(
             self.spark,
             self.T_CKPT,
-            {"round": (round_no - 1, round_no - 1)},
+            {"round": (round_no, round_no)},
             schema=CHECKPOINT_SCHEMA,
         )
         # newest-version row wins if a legacy (untagged) catalog ever holds
@@ -398,30 +417,34 @@ class CrawlEngine:
         )
         if not row:
             raise RuntimeError(
-                f"no checkpoint for round {round_no - 1}; bootstrap first or "
+                f"no checkpoint for round {round_no}; bootstrap first or "
                 f"resume from next_round()"
             )
         return row[0].asDict()
 
     def _pinned_versions(self, round_no: int) -> tuple[int, int, int]:
-        """(frontier_v, seen_v, shards_v) pins — see _pinned_ckpt_row."""
-        r = self._pinned_ckpt_row(round_no)
+        """(frontier_v, seen_v, shards_v) pins round_no reads as-of."""
+        r = self._latest_ckpt_row(round_no - 1)
         return int(r["frontier_v"]), int(r["seen_v"]), int(r["shards_v"])
 
-    def _latest_ckpt_row(self, round_no: int) -> dict:
-        """The winning checkpoint row for a round (latest repin supersedes)."""
-        ck = self.catalog.read_pruned(
-            self.spark,
-            self.T_CKPT,
-            {"round": (round_no, round_no)},
-            schema=CHECKPOINT_SCHEMA,
-        )
-        return (
-            ck.orderBy(F.col("frontier_v").desc(), F.col("seen_v").desc())
-            .limit(1)
-            .collect()[0]
-            .asDict()
-        )
+    def _last_committed(self) -> tuple[int, dict, int]:
+        """(last committed round, its checkpoint row, latest frontier
+        version) for the admin ops that build on the latest state. An
+        unpinned OVERWRITE ahead of the pin is a crashed round; its replay
+        owns the frontier, and adopting it here would corrupt the replay's
+        inputs — refuse. Unpinned appends (a crashed ingest) are fine."""
+        last = self.next_round() - 1
+        ck_row = self._latest_ckpt_row(last)
+        pinned_fv = int(ck_row["frontier_v"])
+        latest_fv = self.catalog.snapshot_id(self.T_FRONTIER)
+        if latest_fv != pinned_fv and not self.catalog.is_pure_append(
+            self.T_FRONTIER, pinned_fv, latest_fv
+        ):
+            raise RuntimeError(
+                "unpinned non-append frontier state detected (crashed "
+                "round?); replay it first: run_round(next_round())"
+            )
+        return last, ck_row, latest_fv
 
     def _repin_checkpoint(
         self, round_no: int, updates: dict, row: dict | None = None
@@ -469,7 +492,7 @@ class CrawlEngine:
         spark, cat = self.spark, self.catalog
         self._check_bloom_params()
         self._check_docs_schema()
-        ck_row = self._pinned_ckpt_row(round_no)
+        ck_row = self._latest_ckpt_row(round_no - 1)
         fv = int(ck_row["frontier_v"])
         sv = int(ck_row["seen_v"])
         shv = int(ck_row["shards_v"])
@@ -737,14 +760,7 @@ class CrawlEngine:
         round; copies within one round are bit-identical by determinism, so
         any pick is the same)."""
         docs = self.catalog.read(self.spark, self.T_DOCS, version=version)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("doc_id").orderBy(F.col("round").desc())
-        return (
-            docs.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "round")
-        )
+        return _latest_wins(docs).drop("round")
 
     def compact_docs(self) -> int:
         """Fold superseded doc copies away (Iceberg compaction analog): one
@@ -752,14 +768,7 @@ class CrawlEngine:
         last compaction — run it on a schedule, not per round. Keeps the
         round column (partition tags survive) so replay semantics hold."""
         docs = self.catalog.read(self.spark, self.T_DOCS)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("doc_id").orderBy(F.col("round").desc())
-        latest = (
-            docs.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = _latest_wins(docs)
         # rewrite per round partition so future replays still target their
         # own round's files only — over ALL stored rounds, not just those
         # with surviving rows: a fully-superseded round's partition must be
@@ -808,34 +817,8 @@ class CrawlEngine:
         the latest version is always a complete state, and repinning it
         completes any crashed predecessor. Returns the number admitted."""
         spark, cat = self.spark, self.catalog
-        canon = (
-            raw_frontier.filter(F.col("url").isNotNull())
-            .withColumn("url_canon", canonicalize_url_col(F.col("url")))
-            .withColumn("host", host_col(F.col("url")))
-            .filter(F.col("host") != "")
-        )
-        canon = self._apply_redirects(canon)
-        deduped = first_wins_agg(
-            canon.withColumn("neg_priority", -F.col("priority")),
-            ["url_canon"],
-            ["neg_priority", "url"],
-        ).select("url_canon", "host", "depth", "priority", "round")
-
-        last = self.next_round() - 1
-        ck_row = self._latest_ckpt_row(last)
-
-        pinned_fv = int(ck_row["frontier_v"])
-        latest_fv = cat.snapshot_id(self.T_FRONTIER)
-        if latest_fv != pinned_fv and not cat.is_pure_append(
-            self.T_FRONTIER, pinned_fv, latest_fv
-        ):
-            # unpinned OVERWRITE ahead of the pin = a crashed round; its
-            # replay owns the frontier — adopting it here would corrupt
-            # the replay's inputs
-            raise RuntimeError(
-                "unpinned non-append frontier state detected (crashed "
-                "round?); replay it first: run_round(next_round())"
-            )
+        deduped = self._admit(raw_frontier)
+        last, ck_row, latest_fv = self._last_committed()
 
         seen = cat.read(spark, self.T_SEEN, schema=schemas.SEEN_SCHEMA)
         frontier = cat.read(spark, self.T_FRONTIER, schema=PENDING_SCHEMA)
@@ -897,17 +880,8 @@ class CrawlEngine:
                 "(bloom bits cannot be deleted)"
             )
         spark, cat = self.spark, self.catalog
-        last = self.next_round() - 1
-        ck_row = self._latest_ckpt_row(last)
+        last, ck_row, _ = self._last_committed()
         pinned_fv = int(ck_row["frontier_v"])
-        latest_fv = cat.snapshot_id(self.T_FRONTIER)
-        if latest_fv != pinned_fv and not cat.is_pure_append(
-            self.T_FRONTIER, pinned_fv, latest_fv
-        ):
-            raise RuntimeError(
-                "unpinned non-append frontier state detected (crashed "
-                "round?); replay it first: run_round(next_round())"
-            )
 
         urls = urls.select("url_canon").distinct()
         seen = cat.read(spark, self.T_SEEN, schema=schemas.SEEN_SCHEMA)

@@ -20,16 +20,14 @@ Sandbox sizing: shards sized for the simulated scale. Real-scale parameters
 only the current round's new URLs to the affected shards (round-keyed
 deltas).
 
-Two probe strategies; the engine picks one from the merged filter's
-configured size:
-
-- ``broadcast`` (split_by_bloom): ship the whole filter to every executor,
-  probe in-place — shuffle-free, right while the filter fits a broadcast
-  (up to a few hundred MB).
-- ``routed`` (split_by_bloom_routed): shuffle candidates to their shard's
-  reducer and probe ONLY that shard via cogroup — peak memory per task is
-  ONE shard regardless of n_shards, nothing broadcast. The 12.5 GB design
-  point runs this way; it costs one extra shuffle of the candidate batch.
+What this module owns: the shard hash both backends use (``_h64_triple``,
+``_triples_arr``, ``shard_of``, ``shard_ids`` — cuckoo.py imports them) and
+the Bloom format: ``BloomShards`` (build, OR-merge of round deltas in
+``from_rows``, probe), ``SHARD_SCHEMA`` and ``build_shards``. The Spark
+probe scaffold is operators/seen_probe.py; ``split_by_bloom`` (broadcast)
+and ``split_by_bloom_routed`` (shard-routed, for filters beyond a
+broadcast — the 12.5 GB design point) are thin calls into it, and the
+engine picks one from the merged filter's configured size.
 
 Hashing is hashlib.blake2b — stable across Python processes (unlike
 ``hash()``), no external deps, and independent of Spark's xxhash64 so a JVM
@@ -39,14 +37,14 @@ upgrade can never silently re-index the bitmaps.
 from __future__ import annotations
 
 import hashlib
-import math
-from collections.abc import Iterator
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from job_crawler_spark.operators import seen_probe
 
 
 def _h64_triple(key: str) -> tuple[int, int, int]:
@@ -85,6 +83,11 @@ def shard_of(key: str, n_shards: int) -> int:
     return _h64_triple(key)[0] % n_shards
 
 
+def shard_ids(keys, n_shards: int) -> "np.ndarray":
+    """(n,) int32 shard_of for a batch of keys, one digest per key."""
+    return (_triples_arr(keys)[:, 0] % np.uint64(n_shards)).astype(np.int32)
+
+
 def _probe_positions(key: str, m_bits: int, k: int) -> list[int]:
     # Probe base/step come from DIFFERENT hash words than the shard id: with
     # a shared word, n_shards | m_bits makes probe 0 of every key in shard s
@@ -94,14 +97,6 @@ def _probe_positions(key: str, m_bits: int, k: int) -> list[int]:
     # force the step odd so probes cycle through the full bitmap
     h3 |= 1
     return [((h2 + i * h3) % m_bits) for i in range(k)]
-
-
-def optimal_bits(n_keys: int, fpr: float = 0.01) -> int:
-    return max(64, int(-n_keys * math.log(fpr) / (math.log(2) ** 2)))
-
-
-def optimal_k(m_bits: int, n_keys: int) -> int:
-    return max(1, int(round(m_bits / max(n_keys, 1) * math.log(2))))
 
 
 class BloomShards:
@@ -135,40 +130,44 @@ class BloomShards:
     def might_contain_batch(self, keys) -> "np.ndarray":
         """Vectorized might_contain over a key batch — bit-identical to
         the scalar form (parity pinned in tests/test_dedup_bloom.py): one
-        digest per key, all bitmaps stacked into one matrix, the k probe
-        lookups as a single fancy-indexed gather."""
-        n = len(keys)
-        if n == 0:
-            return np.zeros(0, dtype=bool)
-        stride = self.m_bits // 8 + 1
-        mat = np.zeros((self.n_shards, stride), dtype=np.uint8)
-        for s, bm in self.bitmaps.items():
-            mat[int(s), : len(bm)] = bm
+        digest per key, keys grouped by shard id, and each present shard's
+        bitmap probed in place with one fancy-indexed gather. No stacked
+        copy of the filter: a routed probe holding one shard touches only
+        that shard's bitmap."""
+        hit = np.zeros(len(keys), dtype=bool)
+        if not len(keys):
+            return hit
         tr = _triples_arr(keys)
-        shard_ids = (tr[:, 0] % np.uint64(self.n_shards)).astype(np.int64)
-        pos = _positions_arr(tr, self.m_bits, self.k)
-        vals = mat[shard_ids[:, None], pos >> 3]
-        bits = (vals >> (pos & 7).astype(np.uint8)) & 1
-        hit = bits.all(axis=1)
-        # empty shards (no bitmap row) must report False even though the
-        # zero matrix row already does; keep the explicit mask for parity
-        # with the dict-miss branch of the scalar form
-        present = np.zeros(self.n_shards, dtype=bool)
-        for s in self.bitmaps:
-            present[int(s)] = True
-        return hit & present[shard_ids]
+        shard = tr[:, 0] % np.uint64(self.n_shards)
+        order = np.argsort(shard, kind="stable")
+        for rows in np.split(order, np.flatnonzero(np.diff(shard[order])) + 1):
+            bm = self.bitmaps.get(int(shard[rows[0]]))
+            if bm is None:
+                continue  # absent shard: nothing inserted there
+            pos = _positions_arr(tr[rows], self.m_bits, self.k)
+            bits = (bm[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
+            hit[rows] = bits.all(axis=1)
+        return hit
 
-    # -- (de)serialization for the seen_shards table / broadcast --------------
+    # -- (de)serialization for the seen_shards table ---------------------------
     def to_rows(self) -> list[tuple[int, bytes]]:
         return [(s, bm.tobytes()) for s, bm in sorted(self.bitmaps.items())]
 
     @classmethod
     def from_rows(
-        cls, rows: list[tuple[int, bytes]], n_shards: int, m_bits: int, k: int
+        cls, rows: Iterable[tuple[int, bytes]], n_shards: int, m_bits: int, k: int
     ) -> "BloomShards":
+        """Load ``(shard, bitmap)`` rows. Duplicate shard ids are OR-merged —
+        the engine stores per-ROUND shard deltas (replay-idempotent
+        rewrite), so several rows per shard are normal."""
         bs = cls(n_shards, m_bits, k)
         for s, blob in rows:
-            bs.bitmaps[int(s)] = np.frombuffer(blob, dtype=np.uint8).copy()
+            arr = np.frombuffer(blob, dtype=np.uint8)
+            bm = bs.bitmaps.get(int(s))
+            if bm is None:
+                bs.bitmaps[int(s)] = arr.copy()
+            else:
+                bm |= arr
         return bs
 
     def merge(self, other: "BloomShards") -> "BloomShards":
@@ -191,6 +190,12 @@ SHARD_SCHEMA = T.StructType(
 )
 
 
+def shard_bytes(m_bits: int, k: int) -> int:
+    """Configured size of one shard's bitmap (the engine's broadcast-vs-
+    routed threshold input; ``k`` keeps the build_shards parameter order)."""
+    return m_bits // 8
+
+
 def build_shards(
     keys: DataFrame, key_col: str, n_shards: int, m_bits: int, k: int
 ) -> DataFrame:
@@ -204,80 +209,26 @@ def build_shards(
         # tests/test_dedup_bloom.py): one digest per key, positions in
         # bulk, bits set with bitwise_or.at instead of a per-bit Python
         # loop — the shard-delta write was an engine-round hot phase.
-        keys = list(pdf[key_col])
-        if not keys:
-            return pd.DataFrame({"shard": [], "bitmap": []})
-        tr = _triples_arr(keys)
-        shard_ids = (tr[:, 0] % np.uint64(n_shards)).astype(np.int64)
-        out_s, out_b = [], []
-        for s in np.unique(shard_ids):
-            pos = _positions_arr(tr[shard_ids == s], m_bits, k)
-            bm = np.zeros(m_bits // 8 + 1, dtype=np.uint8)
-            np.bitwise_or.at(
-                bm,
-                (pos >> 3).ravel(),
-                np.left_shift(
-                    np.uint8(1), (pos & 7).astype(np.uint8)
-                ).ravel(),
-            )
-            out_s.append(int(s))
-            out_b.append(bm.tobytes())
-        return pd.DataFrame({"shard": out_s, "bitmap": out_b})
-
-    # shard id must match shard_of() exactly (same blake2b), so it is
-    # computed in an Arrow-batched mapInPandas — never a per-row scalar UDF.
-    def add_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = list(pdf[key_col])
-            shards = (
-                (_triples_arr(keys)[:, 0] % np.uint64(n_shards)).astype(
-                    np.int32
-                )
-                if keys
-                else np.array([], dtype=np.int32)
-            )
-            yield pd.DataFrame({key_col: pdf[key_col], "shard": shards})
-
-    keyed = keys.select(key_col).mapInPandas(
-        add_shard, schema=f"{key_col} string, shard int"
-    )
-    return keyed.groupBy("shard").applyInPandas(build_one, schema=SHARD_SCHEMA)
-
-
-def merge_shard_tables(existing: DataFrame, new: DataFrame) -> DataFrame:
-    """OR together bitmaps per shard (per-round seen_shards maintenance)."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: np.ndarray | None = None
-        for blob in pdf["bitmap"]:
-            arr = np.frombuffer(blob, dtype=np.uint8)
-            acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
+        pos = _positions_arr(_triples_arr(list(pdf[key_col])), m_bits, k)
+        bm = np.zeros(m_bits // 8 + 1, dtype=np.uint8)
+        np.bitwise_or.at(
+            bm,
+            (pos >> 3).ravel(),
+            np.left_shift(np.uint8(1), (pos & 7).astype(np.uint8)).ravel(),
+        )
         return pd.DataFrame(
-            {"shard": [int(pdf["shard"].iloc[0])], "bitmap": [acc.tobytes()]}
+            {"shard": [int(pdf["shard"].iloc[0])], "bitmap": [bm.tobytes()]}
         )
 
-    return (
-        existing.unionByName(new)
-        .groupBy("shard")
-        .applyInPandas(merge_group, schema=SHARD_SCHEMA)
-    )
+    keyed = seen_probe.with_shard(keys.select(key_col), key_col, n_shards)
+    return keyed.groupBy("shard").applyInPandas(build_one, schema=SHARD_SCHEMA)
 
 
 def collect_shards(
     spark_df: DataFrame, n_shards: int, m_bits: int, k: int
 ) -> BloomShards:
-    """Collect shard rows into one broadcastable BloomShards. Duplicate rows
-    per shard id are OR-merged — the engine stores per-ROUND shard deltas
-    (replay-idempotent rewrite), so multiple rows per shard are normal."""
-    bs = BloomShards(n_shards, m_bits, k)
-    for r in spark_df.collect():
-        arr = np.frombuffer(bytes(r.bitmap), dtype=np.uint8)
-        s = int(r.shard)
-        if s in bs.bitmaps:
-            bs.bitmaps[s] = np.bitwise_or(bs.bitmaps[s], arr)
-        else:
-            bs.bitmaps[s] = arr.copy()
-    return bs
+    """Collect shard rows (round deltas OR-merged) into one BloomShards."""
+    return BloomShards.from_rows(spark_df.collect(), n_shards, m_bits, k)
 
 
 def split_by_bloom(
@@ -285,42 +236,13 @@ def split_by_bloom(
     spark: SparkSession,
     shards: BloomShards,
     key_col: str = "url_canon",
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(provably_new, maybe_seen, flagged) split via broadcast Bloom probe.
 
     ``provably_new`` skips the exact anti-join; ``maybe_seen`` must be
-    confirmed against the seen table. mapInPandas + sc.broadcast: each task
-    probes the in-memory bitmaps — no shuffle, no join.
-
-    Both outputs filter the same ``flagged`` DataFrame; it is persisted (and
-    returned so the caller can unpersist after its action) because the two
-    branches are usually unioned into ONE downstream action — without the
-    persist the probe stage and its entire upstream plan execute twice.
-    """
-    bc = spark.sparkContext.broadcast(
-        (shards.to_rows(), shards.n_shards, shards.m_bits, shards.k)
-    )
-    flag_schema = T.StructType(
-        batch.schema.fields + [T.StructField("__maybe_seen", T.BooleanType(), False)]
-    )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows, n_shards, m_bits, k = bc.value
-        bs = BloomShards.from_rows(rows, n_shards, m_bits, k)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["__maybe_seen"] = bs.might_contain_batch(list(pdf[key_col]))
-            yield pdf
-
-    flagged = batch.mapInPandas(probe, schema=flag_schema)
-    if persist:
-        flagged = flagged.persist()
-    return (
-        flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen"),
-        flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen"),
-        flagged,
-    )
+    confirmed against the seen table; ``flagged`` is persisted — unpersist
+    it after the action (seen_probe.split_broadcast)."""
+    return seen_probe.split_broadcast(batch, spark, shards, key_col)
 
 
 def split_by_bloom_routed(
@@ -330,23 +252,11 @@ def split_by_bloom_routed(
     m_bits: int,
     k: int,
     key_col: str = "url_canon",
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(provably_new, maybe_seen, flagged) via SHARD-ROUTED probe — see
-    operators/routing.py for the shared scaffold. Per-shard blobs are
-    OR-merged locally before probing (duplicate rows per shard id are the
-    engine's per-round deltas)."""
-    from job_crawler_spark.operators.routing import split_by_routed
-
-    def probe(shard_rows: pd.DataFrame, keys) -> list:
-        acc: np.ndarray | None = None
-        for blob in shard_rows["bitmap"]:
-            arr = np.frombuffer(bytes(blob), dtype=np.uint8)
-            acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-        bs = BloomShards(n_shards, m_bits, k)
-        bs.bitmaps[int(shard_rows["shard"].iloc[0])] = acc
-        return list(bs.might_contain_batch(list(keys)))
-
-    return split_by_routed(
-        batch, shards_df, key_col, n_shards, shard_of, probe, persist
+    """(provably_new, maybe_seen, flagged) via SHARD-ROUTED probe
+    (seen_probe.split_routed): each reducer OR-merges its one shard's round
+    deltas and probes only that bitmap."""
+    return seen_probe.split_routed(
+        batch, shards_df, key_col, n_shards,
+        lambda rows: BloomShards.from_rows(rows, n_shards, m_bits, k),
     )

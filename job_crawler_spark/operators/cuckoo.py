@@ -25,9 +25,16 @@ Than Bloom", CoNEXT 2014 — public paper, no code copied):
   the standard cuckoo caveat (and its sentinel analog): deleting a key
   whose fingerprint+bucket collide with another inserted key's can remove
   the other key's only copy — never delete keys that were not inserted;
-- hashing reuses the same blake2b construction as bloom.py with
+- hashing is bloom.py's blake2b word triple (imported, not copied) with
   INDEPENDENT hash words for shard id, bucket index, and fingerprint (see
   bloom.py's shard/probe correlation note).
+
+What this module owns: the cuckoo format — ``CuckooShards`` (build,
+fingerprint re-insertion merge of round deltas in ``from_rows``, probe,
+delete), ``SHARD_SCHEMA``, ``build_shards`` and the forced-recrawl
+``delete_from_round_deltas``. The shard hash is bloom.py's; the Spark probe
+scaffold (broadcast and shard-routed) is operators/seen_probe.py, which
+``split_by_cuckoo``/``split_by_cuckoo_routed`` call.
 
 Scale: identical story to Bloom shards — shard by hash, build each shard
 in one Arrow batch (applyInPandas), broadcast the union, probe in
@@ -38,7 +45,8 @@ mapInPandas. At 10^10 keys: 16-bit fp at 95% load = ~2.4 GB total across
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from functools import lru_cache
 
 import numpy as np
 import pandas as pd
@@ -46,29 +54,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from job_crawler_spark.operators import seen_probe
+from job_crawler_spark.operators.bloom import _h64_triple
+
 SLOTS_PER_BUCKET = 4
 MAX_KICKS = 500
-
-
-def _h64_triple(key: str) -> tuple[int, int, int]:
-    d = hashlib.blake2b(key.encode("utf-8"), digest_size=24).digest()
-    return (
-        int.from_bytes(d[:8], "little"),
-        int.from_bytes(d[8:16], "little"),
-        int.from_bytes(d[16:], "little"),
-    )
-
-
-def shard_of(key: str, n_shards: int) -> int:
-    return _h64_triple(key)[0] % n_shards
-
-
-def _fingerprint(key: str) -> int:
-    # nonzero 16-bit fingerprint (0 marks an empty slot)
-    return (_h64_triple(key)[2] % 0xFFFF) + 1
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=None)  # only 65535 fingerprint values exist
@@ -79,10 +69,6 @@ def _fp_hash64(fp: int) -> int:
 
 def _fp_hash(fp: int, n_buckets: int) -> int:
     return _fp_hash64(fp) % n_buckets
-
-
-def _i1(key: str, n_buckets: int) -> int:
-    return _h64_triple(key)[1] % n_buckets
 
 
 def _alt_bucket(i: int, fp: int, n_buckets: int) -> int:
@@ -155,7 +141,9 @@ class CuckooShards:
         self.overflow.setdefault(s, []).append(f"\x00fp:{i}:{fp}")
 
     def _key_coords(self, key: str) -> tuple[int, int, int, int]:
-        """One blake2b digest per key (add/lookup/delete hot path)."""
+        """One blake2b digest per key (add/lookup/delete hot path): shard,
+        first bucket, nonzero 16-bit fingerprint (0 marks an empty slot),
+        kick seed."""
         h1, h2, h3 = _h64_triple(key)
         s = h1 % self.n_shards
         i1 = h2 % self.n_buckets
@@ -183,6 +171,10 @@ class CuckooShards:
             (t[self._bucket_slots(i1)] == fp).any()
             or (t[self._bucket_slots(i2)] == fp).any()
         )
+
+    def might_contain_batch(self, keys) -> "np.ndarray":
+        """might_contain over a key batch (the seen_probe scaffold's call)."""
+        return np.array([self.might_contain(k) for k in keys], dtype=bool)
 
     def delete(self, key: str) -> bool:
         """Remove one instance of the key's fingerprint (forced re-crawl).
@@ -223,29 +215,43 @@ class CuckooShards:
 
     @classmethod
     def from_rows(
-        cls, rows: list[tuple[int, bytes, list[str]]], n_shards: int, n_buckets: int
+        cls,
+        rows: Iterable[tuple[int, bytes, list[str]]],
+        n_shards: int,
+        n_buckets: int,
     ) -> "CuckooShards":
+        """Load ``(shard, table, overflow)`` rows. A duplicate shard id (the
+        engine's per-round deltas) is merged by fingerprint re-insertion —
+        membership-preserving, like ``merge``."""
         cs = cls(n_shards, n_buckets)
         for s, blob, ov in rows:
-            cs.tables[int(s)] = np.frombuffer(blob, dtype=np.uint16).copy()
-            if ov:
-                cs.overflow[int(s)] = list(ov)
+            s = int(s)
+            t = np.frombuffer(blob, dtype=np.uint16)
+            if s in cs.tables:
+                cs._reinsert(s, t)
+            else:
+                cs.tables[s] = t.copy()
+            if len(ov):
+                cs.overflow.setdefault(s, []).extend(ov)
         return cs
 
+    def _reinsert(self, s: int, t: np.ndarray) -> None:
+        """Insert table ``t``'s resident fingerprints into shard ``s`` (bucket
+        index is known, alt bucket computable from (i, fp) — the partial-key
+        property). Iterates only OCCUPIED slots (flatnonzero), not all
+        buckets: cost is O(resident fingerprints), not O(table size)."""
+        mine = self._table(s)
+        for idx in np.flatnonzero(t):
+            fp = int(t[idx])
+            victim = self._insert_fp(mine, int(idx) // SLOTS_PER_BUCKET, fp, fp)
+            if victim is not None:
+                self._record_victim(s, victim)
+
     def merge(self, other: "CuckooShards") -> "CuckooShards":
-        """Re-insert the other's resident fingerprints (bucket index is known,
-        alt bucket computable from (i, fp) — the partial-key property).
-        Iterates only OCCUPIED slots (flatnonzero), not all buckets: merge
-        cost is O(resident fingerprints), not O(table size)."""
+        """Re-insert the other's resident fingerprints; overflow lists union."""
         assert (self.n_shards, self.n_buckets) == (other.n_shards, other.n_buckets)
         for s, t in other.tables.items():
-            mine = self._table(s)
-            for idx in np.flatnonzero(t):
-                fp = int(t[idx])
-                i = int(idx) // SLOTS_PER_BUCKET
-                victim = self._insert_fp(mine, i, fp, fp)
-                if victim is not None:
-                    self._record_victim(s, victim)
+            self._reinsert(s, t)
         for s, ov in other.overflow.items():
             self.overflow.setdefault(s, []).extend(ov)
         return self
@@ -258,6 +264,12 @@ SHARD_SCHEMA = T.StructType(
         T.StructField("overflow", T.ArrayType(T.StringType(), False), False),
     ]
 )
+
+
+def shard_bytes(n_buckets: int) -> int:
+    """Configured size of one shard's table: buckets x slots x 2-byte
+    fingerprints (the engine's broadcast-vs-routed threshold input)."""
+    return n_buckets * SLOTS_PER_BUCKET * 2
 
 
 def build_shards(
@@ -282,37 +294,16 @@ def build_shards(
             }
         )
 
-    def add_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col],
-                    "shard": [shard_of(u, n_shards) for u in pdf[key_col]],
-                }
-            )
-
-    keyed = keys.select(key_col).mapInPandas(
-        add_shard, schema=f"{key_col} string, shard int"
-    )
+    keyed = seen_probe.with_shard(keys.select(key_col), key_col, n_shards)
     return keyed.groupBy("shard").applyInPandas(build_one, schema=SHARD_SCHEMA)
 
 
 def collect_shards(
     spark_df: DataFrame, n_shards: int, n_buckets: int
 ) -> CuckooShards:
-    """Collect shard rows into one broadcastable CuckooShards. Duplicate
-    rows per shard id (per-round deltas) are merged by fingerprint
-    re-insertion — membership-preserving."""
-    acc = CuckooShards(n_shards, n_buckets)
-    for r in spark_df.collect():
-        acc.merge(
-            CuckooShards.from_rows(
-                [(r.shard, bytes(r.table), list(r.overflow))],
-                n_shards,
-                n_buckets,
-            )
-        )
-    return acc
+    """Collect shard rows (round deltas merged by fingerprint re-insertion)
+    into one CuckooShards."""
+    return CuckooShards.from_rows(spark_df.collect(), n_shards, n_buckets)
 
 
 def split_by_cuckoo(
@@ -320,62 +311,10 @@ def split_by_cuckoo(
     spark: SparkSession,
     shards: CuckooShards,
     key_col: str = "url_canon",
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(provably_new, maybe_seen, flagged) — same contract as
-    bloom.split_by_bloom; see there for the persist rationale."""
-    bc = spark.sparkContext.broadcast(
-        (shards.to_rows(), shards.n_shards, shards.n_buckets)
-    )
-    flag_schema = T.StructType(
-        batch.schema.fields + [T.StructField("__maybe_seen", T.BooleanType(), False)]
-    )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows, n_shards, n_buckets = bc.value
-        cs = CuckooShards.from_rows(rows, n_shards, n_buckets)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["__maybe_seen"] = [cs.might_contain(u) for u in pdf[key_col]]
-            yield pdf
-
-    flagged = batch.mapInPandas(probe, schema=flag_schema)
-    if persist:
-        flagged = flagged.persist()
-    return (
-        flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen"),
-        flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen"),
-        flagged,
-    )
-
-
-def merge_shard_tables(existing: DataFrame, new: DataFrame) -> DataFrame:
-    """Per-shard merge of two shard tables (round maintenance) — the cuckoo
-    analog of bloom.merge_shard_tables: fingerprints re-insert bucket-aligned,
-    overflow lists union. One shuffle on the shard id."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_buckets = len(np.frombuffer(pdf["table"].iloc[0], dtype=np.uint16)) // SLOTS_PER_BUCKET
-        acc: CuckooShards | None = None
-        shard = int(pdf["shard"].iloc[0])
-        for blob, ov in zip(pdf["table"], pdf["overflow"]):
-            cs = CuckooShards.from_rows([(shard, bytes(blob), list(ov))], 1, n_buckets)
-            # n_shards is irrelevant inside one group; reuse 1 consistently
-            acc = cs if acc is None else acc.merge(cs)
-        rows = acc.to_rows()
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "table": [rows[0][1]],
-                "overflow": [rows[0][2]],
-            }
-        )
-
-    return (
-        existing.unionByName(new)
-        .groupBy("shard")
-        .applyInPandas(merge_group, schema=SHARD_SCHEMA)
-    )
+    bloom.split_by_bloom (seen_probe.split_broadcast)."""
+    return seen_probe.split_broadcast(batch, spark, shards, key_col)
 
 
 def delete_from_round_deltas(
@@ -392,18 +331,8 @@ def delete_from_round_deltas(
     array column. Returns the full input with affected deltas rewritten.
     """
 
-    def shard_id(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "first_round": pdf["first_round"],
-                    "shard": [shard_of(u, n_shards) for u in pdf["url_canon"]],
-                    "url_canon": pdf["url_canon"],
-                }
-            )
-
-    keyed = victims.select("url_canon", "first_round").mapInPandas(
-        shard_id, "first_round int, shard int, url_canon string"
+    keyed = seen_probe.with_shard(
+        victims.select("url_canon", "first_round"), "url_canon", n_shards
     )
     per_delta = keyed.groupBy(
         F.col("first_round").alias("round"), "shard"
@@ -450,29 +379,10 @@ def split_by_cuckoo_routed(
     n_shards: int,
     n_buckets: int,
     key_col: str = "url_canon",
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shard-routed probe — shared scaffold in operators/routing.py; this
-    backend merges the shard's round deltas by fingerprint re-insertion
-    before probing."""
-    from job_crawler_spark.operators.routing import split_by_routed
-
-    def probe(shard_rows: pd.DataFrame, keys) -> list:
-        shard = int(shard_rows["shard"].iloc[0])
-        acc: CuckooShards | None = None
-        for blob, ov in zip(shard_rows["table"], shard_rows["overflow"]):
-            cs = CuckooShards.from_rows(
-                [(shard, bytes(blob), list(ov))], n_shards, n_buckets
-            )
-            acc = cs if acc is None else acc.merge(cs)
-        return [acc.might_contain(u) for u in keys]
-
-    return split_by_routed(
-        batch,
-        shards_df.select("shard", "table", "overflow"),
-        key_col,
-        n_shards,
-        shard_of,
-        probe,
-        persist,
+    """Shard-routed probe (seen_probe.split_routed): each reducer merges its
+    one shard's round deltas by fingerprint re-insertion and probes it."""
+    return seen_probe.split_routed(
+        batch, shards_df, key_col, n_shards,
+        lambda rows: CuckooShards.from_rows(rows, n_shards, n_buckets),
     )

@@ -78,16 +78,22 @@ def test_bloom_roundtrip_and_merge():
 
 def test_distributed_build_matches_oracle(spark):
     keys = [f"https://host{i % 7}.example/j/{i}" for i in range(1000)]
-    df = spark.createDataFrame([(k,) for k in keys], "url_canon string")
     n_shards, m_bits, k = 16, 1 << 14, 5
-    shard_df = bloom.build_shards(df, "url_canon", n_shards, m_bits, k)
-    built = bloom.collect_shards(shard_df, n_shards, m_bits, k)
+
+    def build(part):
+        df = spark.createDataFrame([(u,) for u in part], "url_canon string")
+        return bloom.build_shards(df, "url_canon", n_shards, m_bits, k)
+
     oracle = bloom.BloomShards(n_shards, m_bits, k)
     for key in keys:
         oracle.add(key)
-    assert {s: bm.tobytes() for s, bm in built.bitmaps.items()} == {
-        s: bm.tobytes() for s, bm in oracle.bitmaps.items()
-    }
+    # one build, and two round deltas (duplicate shard ids, OR-merged by
+    # from_rows) — both must equal the single-process oracle bit for bit
+    for shard_df in (build(keys), build(keys[:400]).unionByName(build(keys[400:]))):
+        built = bloom.collect_shards(shard_df, n_shards, m_bits, k)
+        assert {s: bm.tobytes() for s, bm in built.bitmaps.items()} == {
+            s: bm.tobytes() for s, bm in oracle.bitmaps.items()
+        }
 
 
 def test_split_by_bloom_partitions_correctly(spark):
@@ -297,3 +303,31 @@ def test_vectorized_bloom_matches_scalar_oracle():
         sh = (tr[:, 0] % np.uint64(8)).astype(int)
         for i, key in enumerate(keys[:50]):
             assert int(sh[i]) == shard_of(key, 8)
+
+
+def test_batch_probe_allocates_one_shard_not_the_filter():
+    """A BloomShards holding ONE shard of a 256 x 2^23-bit filter (the
+    routed probe's case) must probe without materializing the other 255
+    shards: the stacked-matrix probe peaked at 256 MiB here."""
+    import tracemalloc
+
+    import numpy as np
+
+    from job_crawler_spark.operators.bloom import BloomShards, shard_of
+
+    n_shards, m_bits = 256, 1 << 23
+    keys = [f"https://h{i % 13}.example/p/{i}" for i in range(2000)]
+    bs = BloomShards(n_shards, m_bits, 5)
+    present = shard_of(keys[0], n_shards)
+    for key in keys:
+        if shard_of(key, n_shards) == present:
+            bs.add(key)
+    tracemalloc.start()
+    try:
+        got = bs.might_contain_batch(keys)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 << 20, peak
+    assert (got == np.array([bs.might_contain(key) for key in keys])).all()
+    assert got[[shard_of(key, n_shards) == present for key in keys]].all()

@@ -78,14 +78,19 @@ def test_continuous_crawl_ingests_and_rounds(spark, tmp_path):
 
 
 def test_ingest_seeds_idempotent_batch_level(spark, tmp_path):
+    import pytest
+
     eng = _engine(spark, tmp_path)
-    eng.bootstrap(synth.seed_frontier(spark, 50))
-    eng.run(1)
     batch = spark.createDataFrame(
         [(synth.raw_url_for(i), 0, synth.priority_for(i), 0)
          for i in range(50, 80)],
         "url string, depth int, priority double, round int",
     )
+    # no checkpoint row before bootstrap: a clear error, not an IndexError
+    with pytest.raises(RuntimeError, match="bootstrap first"):
+        eng.ingest_seeds(batch)
+    eng.bootstrap(synth.seed_frontier(spark, 50))
+    eng.run(1)
     assert eng.ingest_seeds(batch) > 0
     assert eng.ingest_seeds(batch) == 0  # replay admits nothing
     # pinned frontier version reflects the append (next round reads it)
