@@ -204,10 +204,8 @@ def crawl_throughput(spark, n_urls: int, repeats: int = 1) -> dict:
             .select("url_canon", "host", "depth", "priority", "round")
             .persist()
         )
-        # uncapped drain round: budgets never truncate -> salting phase off
-        batch = schedule_batch(
-            deduped, robots, round_seconds=10_000_000, salted=False
-        )
+        # uncapped drain round: budgets never truncate
+        batch = schedule_batch(deduped, robots, round_seconds=10_000_000)
         fetched = fetcher.fetch_pages(batch)
         parsed = parser.parse_pages(
             fetched.filter(F.col("fetch_ok")).select("url_canon", "page")
@@ -269,7 +267,7 @@ def fetch_parse_throughput(spark, n_urls: int, repeats: int = 1) -> dict:
         "url_canon", "host", "depth", "priority", "round"
     )
     schedule_batch(
-        deduped, synth.robots_df(spark), round_seconds=10_000_000, salted=False
+        deduped, synth.robots_df(spark), round_seconds=10_000_000
     ).write.mode("overwrite").parquet(batch_path)
 
     def one_pass() -> tuple[int, float]:

@@ -25,10 +25,9 @@ optional ``"stats"`` map of per-file column min/max (Iceberg's
 lower_bounds/upper_bounds, harvested from the parquet footers at write
 time — metadata only, no data scan). ``read_pruned`` uses them for
 file skipping: a range predicate touches only the files whose stats
-overlap it, which is what makes a z-ordered layout
-(operators/layout.py) pay off — and files without stats (older
-manifests, unsupported types) are always kept, so pruning can only
-skip files it has PROOF contain no match. Plain-string entries from
+overlap it — and files without stats (older manifests, unsupported
+types) are always kept, so pruning can only skip files it has PROOF
+contain no match. Plain-string entries from
 older manifests are still readable (untagged, rows read from the
 parquet footer on demand).
 
@@ -223,9 +222,8 @@ class Catalog:
         optimization, never a semantic. The scanned/total file counts are
         attached as ``_graft_files_scanned`` / ``_graft_files_total`` so
         callers (and tests) can assert the skipping actually happened.
-        Pays off when the layout gives files tight stat ranges — a sort,
-        a partition-scoped write, or operators/layout.zorder_layout for
-        multi-column boxes.
+        Pays off when the layout gives files tight stat ranges — a sort
+        or a partition-scoped write.
         """
         from pyspark.sql import functions as F
 

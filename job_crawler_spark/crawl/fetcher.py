@@ -20,6 +20,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from job_crawler_spark.functions.compat import spread
 from job_crawler_spark.functions.urls import py_canonicalize, py_host
 from job_crawler_spark.sources.synth import _page_seed, page_for_url
 
@@ -35,23 +36,21 @@ def fetch_failure(url_canon: str) -> bool:
     return _page_seed(url_canon) % 50 == 0
 
 
-def fetch_pages(batch: DataFrame, rebalance: bool = True) -> DataFrame:
+def fetch_pages(batch: DataFrame) -> DataFrame:
     """Scheduled batch -> pages. Arrow-batched mapInPandas.
 
     Input needs columns url_canon/host/depth/priority/host_rank.
 
-    ``rebalance``: the scheduler's window rank leaves the batch partitioned
-    BY HOST — with hot-domain skew (one job board owning 40% of the
-    frontier) that serializes fetch+parse onto one task. Round-robin
-    repartition spreads the batch evenly across all cores before the
-    Python stage; the shuffle moves only URL-sized rows (pages don't exist
-    yet), so it costs ~nothing relative to the skew it removes. This is the
-    north rule's "salted repartition-by-host" applied at the fetch boundary.
+    The scheduler's window rank leaves the batch partitioned BY HOST —
+    with hot-domain skew (one job board owning 40% of the frontier) that
+    serializes fetch+parse onto one task. A round-robin repartition to
+    twice the session's core count (``compat.spread``) spreads the batch
+    evenly before the Python stage; the shuffle moves only URL-sized rows
+    (pages don't exist yet), so it costs ~nothing relative to the skew it
+    removes. This is the north rule's "salted repartition-by-host" applied
+    at the fetch boundary.
     """
-    if rebalance:
-        sess = batch.sparkSession
-        parallelism = int(sess.conf.get("spark.default.parallelism", "32"))
-        batch = batch.repartition(parallelism * 2)
+    batch = spread(batch)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -166,13 +166,6 @@ def benefits_text_col(spans: F.Column) -> F.Column:
     return _first_span_text(spans, "benefit_snippet")
 
 
-def media_refs_col(spans: F.Column) -> F.Column:
-    return F.transform(
-        F.filter(spans, lambda s: s.kind == F.lit("logo_media")),
-        lambda s: s.media_ref,
-    )
-
-
 def enrich_documents(docs: DataFrame) -> DataFrame:
     """documents(doc_id, spans[, ...]) -> + description, salary bounds,
     features struct. All JVM-side; the features struct is the reference's

@@ -473,10 +473,8 @@ class CrawlEngine:
 
     # -- one round ----------------------------------------------------------------
     def run_round(self, round_no: int) -> dict:
-        import os as _os
         import time as _time
 
-        _timing = bool(_os.environ.get("JCS_ROUND_TIMING"))
         _phases: dict[str, float] = {}
         _t0 = _time.perf_counter()
 
@@ -484,10 +482,9 @@ class CrawlEngine:
             # attribution is per ACTION boundary: lazy upstream work lands in
             # the phase whose action forced it (cached frames pin boundaries)
             nonlocal _t0
-            if _timing:
-                now = _time.perf_counter()
-                _phases[label] = round(now - _t0, 3)
-                _t0 = now
+            now = _time.perf_counter()
+            _phases[label] = round(now - _t0, 3)
+            _t0 = now
 
         spark, cat = self.spark, self.catalog
         self._check_bloom_params()
@@ -545,7 +542,8 @@ class CrawlEngine:
         _mark("schedule")
         if n_scheduled == 0:
             batch.unpersist()
-            return {"round": round_no, "scheduled": 0, "done": True}
+            return {"round": round_no, "scheduled": 0, "done": True,
+                    "phase_seconds": _phases}
 
         # schedule log: the deterministic crawl order (host, host_rank) this
         # round — the bit-reproducibility artifact the oracle test checks.
@@ -723,10 +721,8 @@ class CrawlEngine:
         parsed.unpersist()
         flagged.unpersist()
         self.stats.append(stats_row)
-        if _timing:
-            _mark("checkpoint_write")
-            return {**stats_row, "done": False, "phase_seconds": _phases}
-        return {**stats_row, "done": False}
+        _mark("checkpoint_write")
+        return {**stats_row, "done": False, "phase_seconds": _phases}
 
     def _round_keyed_write(self, name: str, df: DataFrame, round_no: int) -> None:
         """Replace exactly this round's files (dynamic partition overwrite):

@@ -14,8 +14,7 @@ fence it is judged against.
 Integer-exact and cross-engine deterministic: values are expected to be
 integers (counts); the median is the LOWER median — the value at rank
 ``(n+1) div 2`` in value order — which is deterministic under ties
-because tied rows carry equal values (same convention as the exact p95
-in operators/adaptive.py); MAD is the lower median of the integer
+because tied rows carry equal values; MAD is the lower median of the integer
 absolute deviations; the flag compares ``dev > k * mad`` in integer
 arithmetic (strict, so the all-equal group where MAD = 0 flags exactly
 the rows that deviate at all — the standard MAD degeneracy, documented

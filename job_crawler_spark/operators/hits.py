@@ -95,15 +95,14 @@ def hits(
     nodes_ck = tracked_persist(
         nodes.repartition("node").sortWithinPartitions("node")
     )
-    # the orientation caches are materialized (tracked_persist is eager) —
-    # the edge checkpoint's blocks are no longer needed
-    release(e)
+    # the edge checkpoint stays until the result is consumed: a lost cache
+    # block of the orientation frames recomputes from it
     n = nodes_ck.count()
     if n == 0:
         raise ValueError("hits: edge frame is empty (no nodes)")
     hubs = nodes_ck.select("node", F.lit(1.0 / n).alias("hub"))
 
-    ckpts = [e_by_src, e_by_dst, nodes_ck]
+    ckpts = [e, e_by_src, e_by_dst, nodes_ck]
     prev_a_ck: DataFrame | None = None
     prev_h_ck: DataFrame | None = None
     auths = nodes_ck.select("node", F.lit(0.0).alias("authority"))

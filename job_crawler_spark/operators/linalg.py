@@ -1,19 +1,16 @@
 """Distributed dense linear algebra over embedding columns.
 
-The operator class behind PCA whitening, covariance-based outlier pruning,
-and low-rank embedding compression in a training-data pipeline. The split
-of labor is the whole design:
+The operator class behind PCA whitening and covariance-based outlier
+pruning in a training-data pipeline. The split of labor is the whole
+design:
 
 - the O(n * d^2) work — expanding and summing per-row outer products —
   runs DISTRIBUTED as one map-side-combined hash aggregate whose key
   space is d(d+1)/2 cells (constant in corpus size), so the shuffle
   carries tasks x d^2/2 partial sums, never n x d^2 products;
-- the O(d^2)/O(d^3) work — covariance assembly, eigenvector iteration —
-  runs DRIVER-SIDE in numpy on the collected d x d matrix (d = 64 here;
-  even d = 4096 is a 128 MB matrix), the honest control-plane collect;
-- the O(n * d) work — projecting every row onto the learned component —
-  goes back to the executors as a zip_with dot product against a literal
-  broadcast vector (JVM codegen, no UDF).
+- the O(d^2) work — covariance assembly — runs DRIVER-SIDE in numpy on
+  the collected d x d matrix (d = 64 here; even d = 4096 is a 128 MB
+  matrix), the honest control-plane collect.
 
 No per-row Python anywhere; the only collect is the d x d Gram frame.
 Cf. reference main.py:1-1602 — the reference has no linear-algebra
@@ -24,7 +21,7 @@ LLM-pipeline layer (SURVEY.md "training-data pipeline" section).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -92,102 +89,3 @@ def covariance_matrix(df: DataFrame, col: str = "embedding"):
     cov = gram / n - np.outer(mu, mu)
     return cov, mu, n
 
-
-def top_principal_component(
-    df: DataFrame, col: str = "embedding", iters: int = 200
-):
-    """Top PC of the (centered) covariance via deterministic power
-    iteration. Returns (component, eigenvalue, mu).
-
-    Start vector = the covariance column with the largest diagonal entry
-    (never orthogonal to the top eigenvector unless that column is zero);
-    sign canonicalized so the largest-magnitude entry is positive — the
-    result is a pure function of the input corpus.
-    """
-    cov, mu, n = covariance_matrix(df, col)
-    d = cov.shape[0]
-    if d == 0 or n == 0:
-        return np.zeros(0), 0.0, mu
-    v = cov[:, int(np.argmax(np.diag(cov)))].copy()
-    if np.linalg.norm(v) == 0.0:
-        v = np.ones(d)
-    v /= np.linalg.norm(v)
-    for _ in range(iters):
-        w = cov @ v
-        nw = np.linalg.norm(w)
-        if nw == 0.0:
-            break
-        v = w / nw
-    k = int(np.argmax(np.abs(v)))
-    if v[k] < 0:
-        v = -v
-    lam = float(v @ cov @ v)
-    return v, lam, mu
-
-
-def project_component(
-    df: DataFrame,
-    component: np.ndarray,
-    mean: np.ndarray | None = None,
-    col: str = "embedding",
-    out: str = "pc1",
-) -> DataFrame:
-    """Append the scalar projection (x - mu) . v as column ``out``.
-
-    The component/mean ship as literal arrays inside the plan (they are
-    d-sized), so the projection is a narrow zip_with fold — whole-stage
-    codegen, zero shuffles, zero Python in the row path.
-    """
-    vlit = F.array(*[F.lit(float(x)) for x in component])
-    x = F.col(col)
-    if mean is not None:
-        mlit = F.array(*[F.lit(float(m)) for m in mean])
-        centered = F.zip_with(x, mlit, lambda a, b: a.cast("double") - b)
-    else:
-        centered = F.transform(x, lambda a: a.cast("double"))
-    prods = F.zip_with(centered, vlit, lambda a, b: a * b)
-    proj: Column = F.aggregate(prods, F.lit(0.0), lambda acc, p: acc + p)
-    return df.withColumn(out, proj)
-
-
-def jl_project(
-    df: DataFrame,
-    out_dim: int,
-    in_dim: int,
-    seed: int = 0,
-    col: str = "embedding",
-    out: str = "jl",
-) -> DataFrame:
-    """Johnson-Lindenstrauss random projection: compress ``in_dim``
-    embeddings to ``out_dim`` with pairwise distances preserved to
-    1 +- eps w.h.p. for out_dim ~ O(log n / eps^2) (JL 1984; Achlioptas
-    2003 database-friendly projections).
-
-    The projection matrix R (out_dim x in_dim, entries +-1/sqrt(out_dim),
-    seeded — a pure function of (seed, dims), so every executor, every
-    retry, and every later run agree) ships as a literal nested array in
-    the plan; each output component is a zip_with fold against one literal
-    row — narrow, codegen, shuffle-free, no Python in the row path. The
-    sign matrix needs no float randomness and keeps the fold exact in
-    double. Use it in front of the ANN operators when d is large: cosine
-    on 64 dims costs what it costs, but at d = 4096 a JL front-end cuts
-    every downstream distance evaluation ~dims-fold for a bounded,
-    measured recall loss.
-    """
-    rng = np.random.default_rng(seed)
-    scale = 1.0 / np.sqrt(out_dim)
-    r = rng.choice((-scale, scale), size=(out_dim, in_dim))
-    x = F.col(col)
-    comps = [
-        F.aggregate(
-            F.zip_with(
-                x,
-                F.array(*[F.lit(float(v)) for v in row]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, p: acc + p,
-        )
-        for row in r
-    ]
-    return df.withColumn(out, F.array(*comps))

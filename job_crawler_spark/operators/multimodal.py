@@ -1,18 +1,13 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Multimodal (image/video) column plumbing.
 
-Media payloads are opaque ``binary`` columns with typed metadata structs;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages. The image/audio libraries are NOT in this container,
-so the decode kernels are STUBS — a deterministic fake behind the real Spark
-plumbing (schema, partitioning, UDF signature, batch shape), with the
-library-backed path gated behind import-try and raising NotImplementedError
-when genuinely invoked without the lib.
+Media payloads are opaque ``binary`` columns; decode / feature-extract /
+frame-sample run as Arrow-batched ``mapInPandas`` stages. No imaging
+library is a dependency, so the decode kernels are deterministic fakes
+derived from the bytes themselves, behind the real Spark plumbing (schema,
+partitioning, UDF signature, batch shape) — which is what
+``plans.textops.q_media_decode_stats`` value-checks against DuckDB.
 
-At 100 TB the payload column dominates I/O: the patterns that matter are
-(a) metadata-only pruning — filter on the typed struct BEFORE the decode
-stage so parquet column pruning skips payload bytes for dropped rows;
-(b) size-aware repartition before decode (one 4K video != one thumbnail);
-(c) decode emits features, never re-emits payload bytes.
+Decode emits features, never re-emits payload bytes.
 """
 
 from __future__ import annotations
@@ -21,30 +16,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # the real decode path (absent in this container)
-    import PIL.Image as _PIL  # noqa: N814
-except ImportError:
-    _PIL = None
-
-MEDIA_META_TYPE = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("checksum", T.StringType(), False),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField("meta", MEDIA_META_TYPE, False),
-    ]
-)
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
@@ -65,22 +37,6 @@ FRAME_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def attach_media_meta(df: DataFrame, payload_col: str = "payload",
-                      media_type: str = "image") -> DataFrame:
-    """Typed metadata from the raw bytes — pure column expressions, so
-    Catalyst can prune/filter on meta without touching payloads downstream."""
-    p = F.col(payload_col)
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(f"{media_type}/synthetic").alias("mime"),
-            F.octet_length(p).cast("long").alias("n_bytes"),
-            F.md5(p).alias("checksum"),
-        ),
-    )
-
-
 def _fake_decode(payload: bytes) -> tuple[int, int, float]:
     """Deterministic stand-in for an image decode: dimensions and mean
     luminance derived from the bytes themselves."""
@@ -91,23 +47,13 @@ def _fake_decode(payload: bytes) -> tuple[int, int, float]:
     return width, height, round(mean_luma, 6)
 
 
-def decode_image_features(media: DataFrame, use_library: bool = False) -> DataFrame:
-    """Arrow-batched decode -> feature rows. ``use_library=True`` requires a
-    real imaging lib (not in this container -> NotImplementedError); the
-    default path runs the deterministic fake through identical plumbing."""
+def decode_image_features(media: DataFrame) -> DataFrame:
+    """Arrow-batched decode -> feature rows (deterministic fake kernel)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
         for pdf in batches:
-            if use_library:
-                if _PIL is None:
-                    raise NotImplementedError(
-                        "image decode requires PIL/pillow, which is not "
-                        "installed in this container; run with "
-                        "use_library=False for the deterministic fake"
-                    )
-                raise NotImplementedError("library decode path is a stub")
             rows = {"media_id": [], "width": [], "height": [],
                     "mean_luma": [], "phash": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -153,14 +99,3 @@ def sample_frames(media: DataFrame, every_n_bytes: int = 1024,
         run, schema=FRAME_SAMPLE_SCHEMA
     )
 
-
-def size_aware_repartition(media: DataFrame, target_bytes_per_partition: int,
-                           total_bytes: int | None = None) -> DataFrame:
-    """Repartition so each decode task gets ~equal BYTES, not equal rows —
-    one 50 MB video and a thousand 10 KB thumbnails are not the same task."""
-    if total_bytes is None:
-        total_bytes = media.select(
-            F.sum(F.col("meta.n_bytes")).alias("s")
-        ).collect()[0].s or 0
-    n_parts = max(1, int(total_bytes // target_bytes_per_partition) + 1)
-    return media.repartition(n_parts)

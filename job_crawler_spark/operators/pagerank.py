@@ -107,16 +107,15 @@ def pagerank(
         .repartition("node")
         .sortWithinPartitions("node")
     )
-    # all three caches are materialized (tracked_persist is eager) — the
-    # edge checkpoint's blocks are no longer needed
-    release(e)
+    # the edge checkpoint stays until the result is consumed: a lost cache
+    # block of the three frames above recomputes from it
     n = nodes_ck.count()
     if n == 0:
         raise ValueError("pagerank: edge frame is empty (no nodes)")
     base = (1.0 - damping) / n
     ranks = nodes_ck.select("node", F.lit(1.0 / n).alias("rank"))
 
-    ckpts = [ed, nodes_ck, dangling]
+    ckpts = [e, ed, nodes_ck, dangling]
     prev_rank_ck: DataFrame | None = None
     for i in range(iterations):
         contrib = (

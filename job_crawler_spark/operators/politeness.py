@@ -36,6 +36,8 @@ a window partition — the salt genuinely matters here.
 
 from __future__ import annotations
 
+from typing import Literal
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -87,14 +89,14 @@ def schedule_batch(
     robots: DataFrame,
     round_seconds: int = 60,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    salted: bool = True,
+    salted: Literal[True] = True,
 ) -> DataFrame:
     """Pick this round's fetch batch: per-host top-``budget`` by
     (priority DESC, url_canon ASC), robots-respecting, skew-proof.
 
-    ``salted=False`` skips the phase-1 pre-rank; pass it only when no
-    host's budget truncates (e.g. an uncapped drain round), where phase 1
-    would sort every row and filter none. Either way the result is the same.
+    The schedule is always two-phase salted. ``salted`` takes only True;
+    it remains because the benchmark's layer replay (perfbench/crawl.py)
+    passes it.
 
     Returns the scheduled rows with their final per-host ``host_rank``
     (1-based) — rank order IS the deterministic crawl order within a host.
@@ -105,19 +107,17 @@ def schedule_batch(
 
     order = [F.col("priority").desc(), F.col("url_canon").asc()]
 
-    survivors = allowed
-    if salted:
-        # phase 1: salted local top-k — bounds any single window partition
-        # to ~salt_buckets*budget rows
-        bucketed = allowed.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col("url_canon")), F.lit(salt_buckets))
-        )
-        w_local = Window.partitionBy("host", "__salt").orderBy(*order)
-        survivors = (
-            bucketed.withColumn("__lr", F.row_number().over(w_local))
-            .filter(F.col("__lr") <= F.col("__budget"))
-            .drop("__lr", "__salt")
-        )
+    # phase 1: salted local top-k — bounds any single window partition
+    # to ~salt_buckets*budget rows
+    bucketed = allowed.withColumn(
+        "__salt", F.pmod(F.xxhash64(F.col("url_canon")), F.lit(salt_buckets))
+    )
+    w_local = Window.partitionBy("host", "__salt").orderBy(*order)
+    survivors = (
+        bucketed.withColumn("__lr", F.row_number().over(w_local))
+        .filter(F.col("__lr") <= F.col("__budget"))
+        .drop("__lr", "__salt")
+    )
 
     # phase 2: exact per-host rank over at most salt_buckets*budget rows/host
     w_host = Window.partitionBy("host").orderBy(*order)

@@ -6,7 +6,7 @@ performance_monitor.py:66-90, monitoring_service.py:82-106). Here those
 semantics run as batch plans over the events table — the identical
 DataFrame code runs under Structured Streaming (readStream + window() +
 withWatermark) because only time-window groupBys and stateless projections
-are used; streaming/metrics.py wires that form.
+are used.
 
 No wall clock: the watermark anchor is MAX(ts) in the data, not now().
 """
@@ -28,7 +28,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3: tumbling 1-hour windows per event type (top 50 busiest hours,
-    deterministic tiebreak). window() form in streaming/metrics.py."""
+    deterministic tiebreak)."""
     return (
         _events(spark, sf_dir)
         .groupBy(

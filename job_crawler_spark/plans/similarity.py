@@ -985,8 +985,7 @@ def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulps like every float aggregate here (the label-centroid AVG pattern),
     absorbed by the dialect-stable 4-digit rounding.
 
-    Implementation shared with the PCA companion (power iteration +
-    distributed projection) in ``operators/linalg.py``.
+    Implementation shared with ``operators/linalg.covariance_matrix``.
     """
     from job_crawler_spark.operators.linalg import gram_upper
 

@@ -2495,11 +2495,9 @@ def q_ssjoin_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size is let-bound (bind_once) — the pushed-down jaccard filter
     # would otherwise inline it 2x in the join condition and 2x in the
     # projection.
-    from job_crawler_spark.functions.compat import bind_once
+    from job_crawler_spark.functions.compat import bind_once, spread
 
-    cand = cand.repartition(
-        2 * spark.sparkContext.defaultParallelism
-    )
+    cand = spread(cand)
     pair = bind_once(
         F.size(F.array_intersect("sh_a", "sh_b")).cast("long"),
         lambda ov: F.struct(

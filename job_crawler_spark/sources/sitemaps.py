@@ -82,46 +82,6 @@ def parse_sitemap_entries(
     )
 
 
-_INDEX_ENTRY_RE = r"(?s)<sitemap>(.*?)</sitemap>"
-
-
-def parse_sitemap_index(
-    df: DataFrame,
-    xml_col: str = "sitemap_xml",
-    id_cols: tuple[str, ...] = ("host",),
-) -> DataFrame:
-    """One row per ``<sitemap>`` entry of a sitemap INDEX document — the
-    recursive expansion step of the protocol (an index lists child sitemap
-    URLs; a crawler fetches those and feeds each body back through
-    ``parse_sitemap_entries``). Output ``(*id_cols, seq, loc, lastmod)``
-    with the same seq/NULL/drop semantics as the leaf parser. The fetch
-    hop between the two parsers is driver-orchestrated (one round per
-    index level), matching the engine's round structure — index depth is
-    2 in the wild, so this never becomes an iterative join."""
-    entries = F.regexp_extract_all(
-        F.col(xml_col), F.lit(_INDEX_ENTRY_RE), 1
-    )
-    parsed = F.transform(
-        entries,
-        lambda e: F.struct(
-            _field(e, "loc").alias("loc"),
-            F.substring(_field(e, "lastmod"), 1, 10)
-            .try_cast("date")
-            .alias("lastmod"),
-        ),
-    )
-    return (
-        df.select(*id_cols, F.posexplode(parsed).alias("p0", "e"))
-        .filter(F.col("e.loc").isNotNull())
-        .select(
-            *id_cols,
-            (F.col("p0") + 1).alias("seq"),
-            F.col("e.loc").alias("loc"),
-            F.col("e.lastmod").alias("lastmod"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Single-process Python oracle for golden/property tests (the
 # urls.py py_canonicalize pattern).

@@ -88,23 +88,6 @@ def raw_url_for(i: int) -> str:
     return f"https://{host}/jobs/{i}?{qs}"
 
 
-def frontier_rows(n: int) -> list[dict[str, Any]]:
-    """Single-process oracle materialization of the seed frontier."""
-    from job_crawler_spark.functions.urls import py_host
-
-    return [
-        {
-            "url": raw_url_for(i),
-            "host": py_host(raw_url_for(i)),
-            "depth": 0,
-            "priority": priority_for(i),
-            "discovered_at": None,
-            "round": 0,
-        }
-        for i in range(n)
-    ]
-
-
 def seed_frontier(spark: SparkSession, n: int, start: int = 0) -> DataFrame:
     """Distributed seed-frontier generator: spark.range -> mapInPandas.
 
@@ -243,11 +226,6 @@ def _filler(seed: int) -> str:
         _FILLER_SENTENCES[(seed >> (2 * j)) % len(_FILLER_SENTENCES)]
         for j in range(k)
     )
-
-
-def doc_id_for_url(url_canon: str) -> str:
-    """Stable doc id: the canonical URL is the natural key (main.py:141)."""
-    return url_canon
 
 
 def _page_seed(url_canon: str) -> int:

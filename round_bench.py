@@ -44,16 +44,14 @@ def engine_round_bench(
 
     Every round row carries the per-phase wall-time map (schedule/
     sched_write/fetch_parse_merge_docs/shard_delta_write/seen_append/
-    frontier_write/host_stats/lineage_write/stats/checkpoint_write) via
-    JCS_ROUND_TIMING, and the calibrator job brackets the loop — the
+    frontier_write/host_stats/lineage_write/stats/checkpoint_write) that
+    run_round returns, and the calibrator job brackets the loop — the
     artifact is attributable (steal vs code) on its own."""
     from job_crawler_spark.catalog import Catalog
     from job_crawler_spark.crawl.round import CrawlEngine
     from job_crawler_spark.sources import synth
 
     root = tempfile.mkdtemp(prefix="jcs_round_bench_")
-    timing_prev = os.environ.get("JCS_ROUND_TIMING")
-    os.environ["JCS_ROUND_TIMING"] = "1"
     cal_before = _calibrator(spark)
     try:
         engine = CrawlEngine(
@@ -82,14 +80,10 @@ def engine_round_bench(
                     "urls_per_sec": round(res["scheduled"] / dt, 1),
                     "frontier_pending": res["frontier_pending"],
                     "seen_total": res["seen_total"],
-                    "phase_seconds": res.get("phase_seconds", {}),
+                    "phase_seconds": res["phase_seconds"],
                 }
             )
     finally:
-        if timing_prev is None:
-            os.environ.pop("JCS_ROUND_TIMING", None)
-        else:
-            os.environ["JCS_ROUND_TIMING"] = timing_prev
         shutil.rmtree(root, ignore_errors=True)
     cal_after = _calibrator(spark)
 

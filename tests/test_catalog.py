@@ -147,34 +147,6 @@ def test_read_pruned_equals_filtered_read_and_skips(spark, cat):
     assert none.schema["x"].dataType.typeName() == "long"
 
 
-def test_read_pruned_zorder_box_beats_linear(spark, cat):
-    from job_crawler_spark.operators.layout import zorder_layout
-
-    n, files = 64, 16
-    grid = spark.range(n * n).select(
-        (F.col("id") % n).cast("double").alias("x"),
-        F.floor(F.col("id") / n).cast("double").alias("y"),
-    )
-    cat.overwrite(
-        zorder_layout(grid, [("x", 0.0, 63.0), ("y", 0.0, 63.0)], files, bits=6),
-        "zed",
-    )
-    cat.overwrite(
-        grid.repartitionByRange(files, "x").sortWithinPartitions("x", "y"),
-        "lin",
-    )
-    box = {"x": (24.0, 31.0), "y": (24.0, 31.0)}
-    pz = cat.read_pruned(spark, "zed", box)
-    pl = cat.read_pruned(spark, "lin", box)
-    assert sorted(map(tuple, pz.collect())) == sorted(map(tuple, pl.collect()))
-    assert pz.count() == 64
-    # linear layout: x prunes, y cannot (every x-slab spans all y)
-    assert pz._graft_files_scanned * 2 <= pl._graft_files_scanned, (
-        pz._graft_files_scanned,
-        pl._graft_files_scanned,
-    )
-
-
 def test_read_pruned_missing_stats_is_safe(spark, cat):
     import json as _json
 

@@ -124,6 +124,18 @@ def test_releases_all_checkpoint_blocks(spark):
     df = spark.createDataFrame(GRAPH, ["src", "dst"])
     scores = hits(df, iterations=5, checkpoint_every=2)
     scores.count()
+    # the edge checkpoint backs the caches' recompute, so the result owns it
+    edge_ck = [
+        f for f in scores._graft_checkpoints
+        if f.columns == ["src", "dst"] and getattr(f, "_graft_ckpt_rdds", None)
+    ]
+    assert len(edge_ck) == 1
+    edge_ids = set(edge_ck[0]._graft_ckpt_rdds)
+    stored = {
+        int(i.id())
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+    assert edge_ids <= stored
     release_checkpoints(scores)
     after = {
         int(i.id())

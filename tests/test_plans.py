@@ -116,33 +116,6 @@ def test_neardup_ann_is_blocked_shuffle_hash_no_selfjoin(spark, queries):
     assert n_hash_exchanges(plan) == 3, plan
 
 
-def test_schedule_batch_uncapped_skips_salting(spark):
-    """The scheduler must not pay the salted pre-rank when budgets
-    never truncate (salted=False fast path): exactly one window."""
-    from job_crawler_spark.operators.politeness import schedule_batch
-    from job_crawler_spark.sources import synth
-    from job_crawler_spark.functions.urls import canonicalize_url_col, host_col
-    from pyspark.sql import functions as F
-
-    frontier = (
-        synth.seed_frontier(spark, 500)
-        .withColumn("url_canon", canonicalize_url_col(F.col("url")))
-        .withColumn("host", host_col(F.col("url")))
-        .select("url_canon", "host", "depth", "priority", "round")
-    )
-    import re
-
-    plan = explain_str(
-        schedule_batch(
-            frontier, synth.robots_df(spark), round_seconds=10_000_000,
-            salted=False,
-        )
-    )
-    # exactly one Window node (detail headers '(n) Window'); the salted
-    # two-phase path would show two
-    assert len(re.findall(r"\(\d+\) Window\n", plan)) == 1, plan
-
-
 def test_seen_antijoin_scans_once(spark, queries):
     """The seen set derives from the same scan: the plan must read the
     frontier parquet ONCE and canonicalize once (the anti-join form
@@ -1073,3 +1046,20 @@ def test_fixity_digest_scan_once_mapside_xor(spark, queries):
     assert "partial_bit_xor" in inner, inner
     assert inner.count("Location:") == 1, inner
     assert n_hash_exchanges(inner) == 1, inner
+
+
+def test_fetch_width_tracks_default_parallelism(spark, monkeypatch):
+    """The fetch stage's round-robin width is 2 x the SparkContext's core
+    count, not the ``spark.default.parallelism`` conf: a session built
+    without that conf must not fall back to a fixed width."""
+    from pyspark import SparkContext
+
+    from job_crawler_spark.crawl.fetcher import fetch_pages
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: 3))
+    batch = spark.createDataFrame(
+        [("https://h.example/1", "h.example", 0, 0.5, 1)],
+        "url_canon string, host string, depth int, priority double, host_rank int",
+    )
+    plan = explain_str(fetch_pages(batch))
+    assert "RoundRobinPartitioning(6)" in plan, plan

@@ -76,39 +76,6 @@ def test_bad_field_values_degrade_to_null(spark):
     assert r.lastmod is None and r.priority is None
 
 
-def test_index_expansion_feeds_leaf_parser(spark):
-    # index -> child sitemap URLs; each child body re-parses with the leaf
-    # parser (the fetch hop is simulated by a lookup dict)
-    from job_crawler_spark.sources.sitemaps import parse_sitemap_index
-
-    index_xml = (
-        "<sitemapindex>"
-        "<sitemap><loc>https://h/s1.xml</loc>"
-        "<lastmod>2024-05-01</lastmod></sitemap>"
-        "<sitemap><lastmod>2024-05-02</lastmod></sitemap>"
-        "<sitemap><loc>https://h/s2.xml</loc></sitemap>"
-        "</sitemapindex>"
-    )
-    idx = parse_sitemap_index(_docs(spark, [("h", index_xml)])).collect()
-    assert [(r.seq, r.loc) for r in idx] == [
-        (1, "https://h/s1.xml"),
-        (3, "https://h/s2.xml"),
-    ]
-    assert idx[0].lastmod == datetime.date(2024, 5, 1)
-    children = {
-        "https://h/s1.xml": "<url><loc>https://h/a</loc></url>",
-        "https://h/s2.xml": "<url><loc>https://h/b</loc></url>"
-        "<url><loc>https://h/c</loc></url>",
-    }
-    bodies = _docs(spark, [(r.loc, children[r.loc]) for r in idx])
-    leaves = parse_sitemap_entries(bodies).collect()
-    assert {r.loc for r in leaves} == {
-        "https://h/a",
-        "https://h/b",
-        "https://h/c",
-    }
-
-
 def test_plan_is_narrow_no_python_no_exchange(spark):
     df = parse_sitemap_entries(_docs(spark, [("h", GOLDEN_XML)]))
     plan = df._jdf.queryExecution().executedPlan().toString()

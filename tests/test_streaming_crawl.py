@@ -13,6 +13,7 @@ from job_crawler_spark.crawl.round import CrawlEngine
 from job_crawler_spark.functions.urls import py_canonicalize
 from job_crawler_spark.sources import synth
 from job_crawler_spark.streaming.crawl_stream import continuous_crawl
+from perfbench.crawl import PHASES
 
 
 def _engine(spark, tmp_path):
@@ -162,6 +163,8 @@ def test_ingest_before_first_round_single_checkpoint_row(spark, tmp_path):
     }
     assert py_canonicalize(synth.raw_url_for(25)) in sched
     assert res["scheduled"] >= 20
+    # phase walls are always on: every phase the benchmark reports is timed
+    assert set(PHASES) <= set(res["phase_seconds"])
 
 
 def test_adoption_survives_double_crash(spark, tmp_path):

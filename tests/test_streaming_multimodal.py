@@ -1,61 +1,11 @@
-"""Structured Streaming metrics + multimodal plumbing tests."""
+"""Multimodal plumbing tests (decode and frame-sampling UDFs)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_streaming_hourly_counts_match_batch(spark, tmp_path):
-    """The streaming windowed agg must produce the same totals as the batch
-    plan over the same files (unified-API contract)."""
-    from job_crawler_spark.streaming import metrics
-
-    stream = metrics.events_stream(spark, f"{SF_DIR}/events.parquet")
-    out = metrics.run_to_completion(
-        metrics.windowed_type_counts(stream), str(tmp_path)
-    )
-    got = {(r.window_start, r.event_type): r.n for r in out}
-
-    batch = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n")
-        .collect()
-    )
-    want = {(r.ws, r.event_type): r.n for r in batch}
-    assert got == want
-
-
-def test_streaming_error_alerts(spark, tmp_path):
-    from job_crawler_spark.streaming import metrics
-
-    stream = metrics.events_stream(spark, f"{SF_DIR}/events.parquet")
-    rows = metrics.run_to_completion(
-        metrics.error_rate_alert_stream(stream, threshold=0.05), str(tmp_path)
-    )
-    assert rows
-    for r in rows:
-        assert r.alert == (r.n_errors / r.n_events > 0.05)
-
-
-# --- multimodal -------------------------------------------------------------
 
 def _media_df(spark, n=50):
-    from job_crawler_spark.operators.multimodal import attach_media_meta
-
     rows = [(f"m{i}", bytes([i % 256]) * (100 + i * 37)) for i in range(n)]
-    df = spark.createDataFrame(rows, "media_id string, payload binary")
-    return attach_media_meta(df)
-
-
-def test_media_meta_columns(spark):
-    row = _media_df(spark, 3).collect()[0]
-    assert row.meta.media_type == "image"
-    assert row.meta.n_bytes == 100
-    assert len(row.meta.checksum) == 32
+    return spark.createDataFrame(rows, "media_id string, payload binary")
 
 
 def test_fake_decode_is_deterministic(spark):
@@ -71,19 +21,6 @@ def test_fake_decode_is_deterministic(spark):
         assert 0.0 <= r[3] <= 1.0
 
 
-def test_library_decode_raises_not_implemented(spark):
-    import pytest
-
-    from job_crawler_spark.operators.multimodal import decode_image_features
-
-    media = _media_df(spark, 2)
-    with pytest.raises(Exception) as exc_info:
-        decode_image_features(media, use_library=True).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
-
-
 def test_frame_sampling_caps_fanout(spark):
     from job_crawler_spark.operators.multimodal import sample_frames
 
@@ -95,43 +32,3 @@ def test_frame_sampling_caps_fanout(spark):
         per_id.setdefault(r.media_id, []).append(r.frame_idx)
     assert len(per_id["big"]) == 8  # capped
     assert per_id["small"] == [0]  # at least one frame
-
-
-def test_size_aware_repartition(spark):
-    from job_crawler_spark.operators.multimodal import size_aware_repartition
-
-    media = _media_df(spark, 64)
-    out = size_aware_repartition(media, target_bytes_per_partition=10_000)
-    assert out.count() == 64
-    assert out.rdd.getNumPartitions() >= 2
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark twin of the exact URL-seen dedup:
-    duplicate user_id+event_type occurrences within the watermark horizon
-    collapse to one row; the result can never exceed the batch-distinct
-    count and must cover every distinct key."""
-    from job_crawler_spark.streaming import metrics
-
-    stream = metrics.events_stream(spark, f"{SF_DIR}/events.parquet")
-    deduped = metrics.dedup_stream(stream, ["user_id", "event_type"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp_path}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("dedup_sink").select("user_id", "event_type").collect()
-    keys = [(r.user_id, r.event_type) for r in got]
-    batch_keys = {
-        (r.user_id, r.event_type)
-        for r in spark.read.parquet(f"{SF_DIR}/events.parquet")
-        .select("user_id", "event_type")
-        .distinct()
-        .collect()
-    }
-    assert set(keys) == batch_keys
-    assert len(keys) == len(set(keys))  # no duplicate key emitted
