@@ -44,7 +44,11 @@ from job_crawler_spark.crawl import fetcher, parser
 from job_crawler_spark.functions.urls import canonicalize_url_col, host_col
 from job_crawler_spark.operators import bloom, cuckoo
 from job_crawler_spark.operators.dedup import anti_join_seen, first_wins_agg
-from job_crawler_spark.operators.politeness import schedule_batch
+from job_crawler_spark.operators.politeness import (
+    DEFAULT_SALT_BUCKETS,
+    salt_width,
+    schedule_batch,
+)
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -79,6 +83,17 @@ PENDING_SCHEMA = T.StructType(
 # peak task memory one shard — the 10^10-key design point).
 BROADCAST_FILTER_MAX_BYTES = 256 << 20
 
+# Auto-compaction policy (_maybe_compact): run() compacts the documents
+# table once the re-crawl backlog (victims force_recrawl re-admitted, each
+# of which leaves one superseded copy once refetched) reaches this fraction
+# of the table's physical rows — an in-memory counter against a manifest
+# row count, no table scan.
+COMPACT_SUPERSEDED_FRAC = 0.2
+# The backlog counter is lost on restart, so every this many rounds the
+# policy audits the EXACT superseded count (physical rows minus distinct
+# doc_ids, one single-column aggregate) and compacts from that.
+COMPACT_CHECK_ROUNDS = 16
+
 # seen_filter -> (backend module, the engine fields that follow bloom_shards
 # in its build_shards/collect_shards signature, broadcast probe, routed probe)
 _SEEN_FILTERS = {
@@ -109,18 +124,6 @@ class CrawlEngine:
     catalog: Catalog
     robots: DataFrame
     round_seconds: int = 60
-    # Politeness scheduling is always two-phase salted (real crawl rounds
-    # have truncating budgets). Salt width (SURVEY §7.3): each round records
-    # the written frontier's hottest-host pending count (a one-column
-    # aggregate riding the commit path) and the NEXT round sizes its
-    # phase-1 salt as ceil(hottest / salt_target_rows), clamped to
-    # [1, 256] — so a mild frontier doesn't pay 32-way pre-rank fan-out and
-    # a 10^9-row hot host still gets bounded window partitions.
-    # Correctness-neutral for ANY bucket count (top-k of per-bucket top-ks
-    # == global top-k); the first round after a cold resume falls back to
-    # the static salt_buckets.
-    salt_buckets: int = 32
-    salt_target_rows: int = 1 << 16
     # URL-seen prefilter backend: "bloom" (default) or "cuckoo" (deletable).
     # Correctness-neutral either way — the exact anti-join is authoritative.
     # The probe is broadcast while the merged filter fits under
@@ -133,62 +136,13 @@ class CrawlEngine:
     # the same footprint as the bloom default, NOT bloom_bits (a 1<<20-bucket
     # table would be 8 MiB/shard, 512 MiB broadcast per round)
     cuckoo_buckets: int = 1 << 14
-    # Opt-in crawler-trap demotion (operators/traps.py): each round profiles
-    # the pending frontier's per-host URL-space signals (path diversity /
-    # template collapse / query diversity / depth) and excludes trap-flagged
-    # hosts from scheduling. Demotion, not deletion: the rows stay pending
-    # in the frontier table, so flipping the flag (or a threshold change)
-    # re-admits them — and the signal pass is two map-side-combined
-    # aggregates over the already-read frontier frame. Default False: the
-    # reference-parity gates pin the crawl order WITHOUT demotion, and trap
-    # policy is a deployment decision.
-    trap_demotion: bool = False
-    # Opt-in redirect handling (operators/redirects.py): a frame of
-    # HTTP-3xx edges (src, dst — CANONICAL URLs) resolved ONCE via pointer
-    # doubling and applied at every admission point (bootstrap, seed
-    # ingest, outlink expansion): sources rewrite to their final landing
-    # URL, redirect loops are dropped before they ever reach the frontier.
-    # Rewriting happens BEFORE first-wins dedup, so seeds collapsing onto
-    # one landing URL dedup naturally, and the seen filter only ever
-    # tracks final URLs (intermediate hops re-rewrite via one
-    # broadcastable join per admission — no filter state for them).
-    # Default None: the reference-parity gates pin crawl order WITHOUT
-    # redirects, and the map is deployment data.
-    redirects: DataFrame | None = None
-    redirect_max_hops: int = 8
-    _redirect_res: DataFrame | None = field(
-        default=None, init=False, repr=False
-    )
-    # Opt-in learned DUST rules (operators/dust.py mine_param_rules
-    # output): kept parameter-strip rules applied at the same admission
-    # points, AFTER redirect resolution (a final landing URL gets its
-    # learned-strippable params removed) and BEFORE first-wins dedup, so
-    # parameter aliases collapse without ever being fetched. One rewrite
-    # pass per admission, like the static canonicalizer — a URL whose
-    # stripped form is itself a redirect source re-rewrites at its next
-    # admission. Default None for the same parity/policy reasons as
-    # `redirects`.
-    dust_rules: DataFrame | None = None
     # Documents are merge-on-read: each round appends a round-keyed
     # partition (O(round) commit, like real Iceberg MoR); read_docs()
     # resolves superseded copies, compact_docs() folds them away.
-    # Auto-compaction policy: run() compacts the documents table when the
-    # re-crawl backlog (victims force_recrawl re-admitted, each of which
-    # leaves one superseded copy once refetched) reaches this fraction of
-    # the table's physical rows. The trigger is free: an in-memory counter
-    # vs a manifest row count — no table scan.
+    # auto_compact: run() compacts between rounds (see _maybe_compact).
     auto_compact: bool = True
-    compact_superseded_frac: float = 0.2
-    # The backlog counter is in-memory and lost on restart, so every
-    # compact_check_rounds rounds the policy audits the EXACT superseded
-    # count (physical rows minus distinct doc_ids — one single-column
-    # aggregate) and compacts from that if the threshold is crossed. This
-    # heals restart-lost counters and any backlog under/over-count.
-    compact_check_rounds: int = 16
-    stats: list[dict] = field(default_factory=list)
-    # hottest-host pending count of the latest written frontier (driver-side
-    # cache sizing the salt width; None until a round commits in-process)
-    _hot_pending: int | None = field(default=None, init=False, repr=False)
+    # one checkpoint-row dict per round this engine committed
+    stats: list[dict] = field(default_factory=list, init=False)
     # URLs force_recrawl re-admitted since the last compaction (upper bound
     # on superseded doc copies being created by subsequent rounds)
     _recrawl_backlog: int = field(default=0, init=False, repr=False)
@@ -203,6 +157,11 @@ class CrawlEngine:
             self._filter, self._filter_fields,
             self._split_broadcast, self._split_routed,
         ) = _SEEN_FILTERS[self.seen_filter]
+
+    # Not a setting: run_round sizes its phase-1 salt from the pinned
+    # checkpoint row (politeness.salt_width). This static width is read
+    # only by the benchmark's out-of-round schedule_batch replay.
+    salt_buckets = DEFAULT_SALT_BUCKETS
 
     # table names
     T_FRONTIER = "frontier"
@@ -305,46 +264,11 @@ class CrawlEngine:
         return self._split_broadcast(not_pending, self.spark, shards, "url_canon")
 
     # -- bootstrap -------------------------------------------------------------
-    def _apply_redirects(self, canon: DataFrame) -> DataFrame:
-        """Rewrite admitted candidates through the optional redirect map
-        and then the optional learned DUST rules: redirect sources land
-        on their final URL (host recomputed), loop/over-cap sources are
-        dropped, learned-strippable query parameters are removed
-        (host-preserving). No-op without either. Must run BEFORE dedup so
-        candidates collapsing onto one rewritten URL dedup normally."""
-        if self.redirects is not None:
-            from job_crawler_spark.operators.redirects import rewrite_frontier
-
-            if self._redirect_res is None:
-                from job_crawler_spark.operators.checkpoints import (
-                    tracked_persist,
-                )
-                from job_crawler_spark.operators.redirects import (
-                    resolve_redirects,
-                )
-
-                # resolved once per engine instance, reused by every admission
-                self._redirect_res = tracked_persist(
-                    resolve_redirects(
-                        self.redirects, max_hops=self.redirect_max_hops
-                    )
-                )
-            canon = rewrite_frontier(
-                canon, self._redirect_res, url_col="url_canon"
-            ).withColumn("host", host_col(F.col("url_canon")))
-        if self.dust_rules is not None:
-            from job_crawler_spark.operators.dust import apply_param_rules
-
-            canon = apply_param_rules(
-                canon, self.dust_rules, url_col="url_canon"
-            )
-        return canon
-
     def _admit(self, raw_frontier: DataFrame) -> DataFrame:
         """Seed admission (bootstrap and ingest_seeds): canonicalize, drop
-        null/invalid urls, rewrite through the optional redirect map, then
-        first-wins dedup on canonical URL by (priority DESC, url ASC)."""
-        canon = self._apply_redirects(
+        null/invalid urls, then first-wins dedup on canonical URL by
+        (priority DESC, url ASC)."""
+        canon = (
             raw_frontier.filter(F.col("url").isNotNull())
             .withColumn("url_canon", canonicalize_url_col(F.col("url")))
             .withColumn("host", host_col(F.col("url")))
@@ -371,11 +295,15 @@ class CrawlEngine:
         )
         self.catalog.overwrite(meta, self.T_BLOOM_META)
         # round -1 checkpoint pins the bootstrap snapshot versions for round 0
+        # (frontier_pending from the manifest, so round 0 sizes its salt
+        # like every later round)
+        pending = self.catalog.row_count(self.T_FRONTIER, version=fv)
         marker = self.spark.createDataFrame(
             [
                 {
                     "round": -1, "scheduled": 0, "fetched": 0, "failed": 0,
-                    "docs_total": 0, "seen_total": 0, "frontier_pending": 0,
+                    "docs_total": 0, "seen_total": 0,
+                    "frontier_pending": pending,
                     "frontier_v": fv, "seen_v": sv, "shards_v": shv,
                 }
             ],
@@ -459,18 +387,6 @@ class CrawlEngine:
         marker = self.spark.createDataFrame([row], schema=CHECKPOINT_SCHEMA)
         self._round_keyed_write(self.T_CKPT, marker, round_no)
 
-    def _effective_salt_buckets(self) -> int:
-        """Phase-1 salt width for the next schedule: sized from the latest
-        written frontier's hottest-host pending count once a round has
-        committed in-process; the static salt_buckets otherwise (cold
-        resume / first round). Any value >= 1 yields bit-identical
-        schedules — this only tunes window-partition size."""
-        if self._hot_pending is None:
-            return self.salt_buckets
-        import math
-
-        return max(1, min(256, math.ceil(self._hot_pending / self.salt_target_rows)))
-
     # -- one round ----------------------------------------------------------------
     def run_round(self, round_no: int) -> dict:
         import time as _time
@@ -493,6 +409,7 @@ class CrawlEngine:
         fv = int(ck_row["frontier_v"])
         sv = int(ck_row["seen_v"])
         shv = int(ck_row["shards_v"])
+        pending = int(ck_row["frontier_pending"])
         # adopt unpinned APPEND-only frontier progress (a seed ingest that
         # crashed before its repin): commits are atomic, appends only add
         # pending rows, and a replay re-adopts at least the same set — the
@@ -510,33 +427,20 @@ class CrawlEngine:
             # from the crashed attempt persist (URLs in seen with no doc,
             # gone from the frontier). Repinning round-(N-1) first makes
             # every replay read the same adopted snapshot.
+            pending = int(cat.row_count(self.T_FRONTIER, version=latest_fv))
             self._repin_checkpoint(
                 round_no - 1,
-                {
-                    "frontier_v": int(latest_fv),
-                    "frontier_pending": int(
-                        cat.row_count(self.T_FRONTIER, version=latest_fv)
-                    ),
-                },
+                {"frontier_v": int(latest_fv), "frontier_pending": pending},
                 row=ck_row,
             )
             fv = latest_fv
         frontier = cat.read(spark, self.T_FRONTIER, version=fv, schema=PENDING_SCHEMA)
         seen = cat.read(spark, self.T_SEEN, version=sv, schema=schemas.SEEN_SCHEMA)
 
-        sched_in = frontier
-        if self.trap_demotion:
-            from job_crawler_spark.operators.traps import (
-                demote_traps,
-                url_trap_signals,
-            )
-
-            sched_in = demote_traps(
-                frontier, url_trap_signals(frontier, url_col="url_canon")
-            )
+        # salt width from the pinned pending count (an upper bound on the
+        # hottest host's): partitioning only, never the schedule itself
         batch = schedule_batch(
-            sched_in, self.robots, self.round_seconds,
-            self._effective_salt_buckets(),
+            frontier, self.robots, self.round_seconds, salt_width(pending)
         ).cache()
         n_scheduled = batch.count()
         _mark("schedule")
@@ -569,13 +473,10 @@ class CrawlEngine:
             .select("depth", F.explode_outer("outlinks").alias("outlink"))
             .filter(F.col("outlink").isNotNull())
         )
-        candidates = fetcher.expand_outlinks(links)
         # same admission guard as bootstrap: a malformed outlink canonicalizes
         # to an empty host and must never enter the frontier (the robots
         # left-join would otherwise admit it with a default budget forever)
-        candidates = self._apply_redirects(
-            candidates.filter(F.col("host") != "")
-        )
+        candidates = fetcher.expand_outlinks(links).filter(F.col("host") != "")
         # one row per canon: max priority, min depth (deterministic aggregates)
         candidates = candidates.groupBy("url_canon", "host").agg(
             F.max("priority").alias("priority"), F.min("depth").alias("depth")
@@ -656,24 +557,10 @@ class CrawlEngine:
         frontier_v = cat.overwrite(new_frontier, self.T_FRONTIER)
         _mark("frontier_write")
 
-        # hottest-host pending count of the frontier the NEXT round will
-        # schedule from — read back from the just-written snapshot (one
-        # pruned string column, hash agg) rather than recomputing the
-        # union's lineage. Feeds _effective_salt_buckets.
-        hot = (
-            cat.read(
-                spark, self.T_FRONTIER, version=frontier_v,
-                schema=PENDING_SCHEMA,
-            )
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("hot"))
-            .collect()[0].hot
-        )
-        self._hot_pending = int(hot) if hot is not None else None
-        _mark("host_stats")
-
-        # per-partition lineage (round-keyed rewrite = replay-idempotent)
+        # per-partition lineage (round-keyed rewrite = replay-idempotent);
+        # the round's fetched count rides its write, as spans ride the docs
+        spans_count = docs_obs.get["s"] or 0
+        fetched_obs = Observation()
         lineage = (
             fetched.withColumn("partition_id", F.spark_partition_id())
             .groupBy("partition_id")
@@ -683,16 +570,17 @@ class CrawlEngine:
                 F.sum((~F.col("fetch_ok")).cast("long")).alias("urls_failed"),
             )
             .withColumn("round", F.lit(round_no))
+            .withColumn("spans_parsed", F.lit(int(spans_count)).cast("long"))
+            .select(schemas.CRAWL_LOG_SCHEMA.fieldNames())
+            .observe(
+                fetched_obs,
+                F.coalesce(F.sum("urls_fetched"), F.lit(0)).alias("n"),
+            )
         )
-        spans_count = docs_obs.get["s"] or 0
-        lineage = lineage.withColumn(
-            "spans_parsed", F.lit(int(spans_count)).cast("long")
-        ).select(schemas.CRAWL_LOG_SCHEMA.fieldNames())
         self._round_keyed_write(self.T_LOG, lineage, round_no)
+        n_fetched = fetched_obs.get["n"]
         _mark("lineage_write")
 
-        n_fetched = fetched.filter(F.col("fetch_ok")).count()
-        _mark("stats")
         # table stats from manifest metadata (row counts ride in the
         # manifests) — no full-table re-scan per round. docs_total counts
         # PHYSICAL rows: equal to read_docs().count() until a forced
@@ -973,111 +861,10 @@ class CrawlEngine:
         return {"recrawl": int(n_victims), "readmitted": int(n_readmit),
                 "round": last}
 
-    def revisit_due(
-        self, *, base_interval: int = 1, max_interval: int = 64
-    ) -> DataFrame:
-        """Change-rate-adaptive revisit schedule (operators/revisit.py)
-        computed from the engine's OWN fetch history: the merge-on-read
-        documents table keeps one round-keyed copy per successful fetch, so
-        (doc_id, round, xxhash64(spans)) is exactly the operator's
-        (url, round, content hash) contract — failed fetches never wrote a
-        docs row and correctly contribute no observation.
-
-        ``due`` is evaluated against ``next_round()`` (the round about to
-        run): a due row is one whose adaptive interval has elapsed by the
-        time a recrawl could actually happen. History depth is bounded by
-        ``compact_docs()`` — compaction folds superseded copies into the
-        latest, which RESETS a URL's observed history to its most recent
-        fetch (the bounded-history tradeoff any 10^10-URL scheduler makes;
-        at scale the schedule state lives in the same table the compactor
-        already maintains, no side state).
-        """
-        from job_crawler_spark.operators.revisit import revisit_schedule
-
-        docs = self.catalog.read(self.spark, self.T_DOCS)
-        hist = docs.select(
-            F.col("doc_id").alias("url_canon"),
-            F.col("round").cast("int").alias("round"),
-            F.xxhash64("spans").cast("string").alias("content_hash"),
-        )
-        return revisit_schedule(
-            hist,
-            self.next_round(),
-            base_interval=base_interval,
-            max_interval=max_interval,
-        )
-
-    def revisit_round(
-        self,
-        *,
-        base_interval: int = 1,
-        max_interval: int = 64,
-        budget: int | None = None,
-        priority: float = 1.0,
-    ) -> dict:
-        """Policy -> mechanism: compute the adaptive revisit schedule and
-        ``force_recrawl`` the due URLs (most-volatile-first under
-        ``budget``, so a bounded recrawl allowance is spent on the URLs
-        whose content actually churns). Inherits force_recrawl's
-        idempotence and its cuckoo-backend requirement; the re-fetched
-        copies supersede the old ones and feed the auto-compaction backlog."""
-        from job_crawler_spark.operators.revisit import due_urls
-
-        victims = due_urls(
-            self.revisit_due(
-                base_interval=base_interval, max_interval=max_interval
-            )
-        )
-        if budget is not None:
-            victims = victims.limit(int(budget))
-        out = self.force_recrawl(victims, priority=priority)
-        out["budget"] = budget
-        return out
-
-    def mine_dust_rules(
-        self, *, min_support: int = 2, min_precision: float = 0.95
-    ) -> DataFrame:
-        """DUST rule mining (operators/dust.py) over the engine's OWN
-        documents: url = doc_id (the canonical URL), fingerprint =
-        xxhash64(spans) — the same content key mirror_detect and the
-        revisit scheduler use. Returns the full rule-verdict frame; the
-        caller decides when learned rules graduate into `dust_rules`
-        for admission rewriting (policy, like revisit_round vs
-        revisit_due)."""
-        from job_crawler_spark.operators.dust import mine_param_rules
-
-        pages = self.read_docs().select(
-            F.col("doc_id").alias("url"),
-            F.xxhash64("spans").cast("string").alias("content_hash"),
-        )
-        return mine_param_rules(
-            pages, min_support=min_support, min_precision=min_precision
-        )
-
-    def mirror_detect(
-        self, *, threshold: float = 0.5, max_hosts_per_hash: int = 64
-    ) -> DataFrame:
-        """Mirror-host detection (operators/mirrors.py) over the engine's
-        OWN documents: host from doc_id (the canonical URL), fingerprint =
-        xxhash64(spans) — the same content key the revisit scheduler uses,
-        so "mirror" means span-identical pages, robust to URL differences.
-        Returns the mirror_pairs frame; policy (demote all but the
-        lexicographically-first host, feed force_recrawl exclusions, ...)
-        stays the caller's, like revisit_round vs revisit_due."""
-        from job_crawler_spark.operators.mirrors import mirror_pairs
-
-        pages = self.read_docs().select(
-            host_col(F.col("doc_id")).alias("host"),
-            F.xxhash64("spans").cast("string").alias("content_hash"),
-        )
-        return mirror_pairs(
-            pages, threshold=threshold, max_hosts_per_hash=max_hosts_per_hash
-        )
-
     def _maybe_compact(self) -> bool:
         """Auto-compaction policy (run() calls this between rounds): compact
         the documents table once the re-crawl backlog reaches
-        compact_superseded_frac of the table's physical rows. The check is
+        COMPACT_SUPERSEDED_FRAC of the table's physical rows. The check is
         metadata-only (in-memory counter vs manifest row count). Safe by
         construction: docs versions are never pinned in checkpoints, and
         compact_docs rewrites per round partition keeping the round tags, so
@@ -1087,7 +874,7 @@ class CrawlEngine:
         not yet refetched contributes no superseded copy until it is) —
         over-eager compaction wastes one rewrite, never correctness. The
         counter is in-memory: a restarted engine starts at 0, so every
-        compact_check_rounds rounds the policy audits the EXACT superseded
+        COMPACT_CHECK_ROUNDS rounds the policy audits the EXACT superseded
         count (physical minus distinct doc_ids, one single-column
         aggregate) — superseded copies therefore get folded within a
         bounded number of rounds even across restarts, and the streaming
@@ -1099,10 +886,10 @@ class CrawlEngine:
         if physical <= 0:
             return False
         superseded = self._recrawl_backlog
-        threshold = max(1.0, self.compact_superseded_frac * physical)
+        threshold = max(1.0, COMPACT_SUPERSEDED_FRAC * physical)
         if (
             superseded < threshold
-            and self._rounds_since_compact_check >= self.compact_check_rounds
+            and self._rounds_since_compact_check >= COMPACT_CHECK_ROUNDS
         ):
             self._rounds_since_compact_check = 0
             n_distinct = (

@@ -134,7 +134,8 @@ def features_col(
     salary_min: Column | None = None,
     salary_max: Column | None = None,
 ) -> Column:
-    """Full features struct matching schemas.FEATURES_TYPE.
+    """Full features struct: tech_stack, experience_level, remote_policy,
+    salary_info{min,max,average}, description_length, has_benefits.
 
     Equivalent of reference extract_basic_job_features (main.py:246-358) as a
     single pure column expression: Catalyst folds the lowercase once via

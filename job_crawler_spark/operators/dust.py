@@ -9,32 +9,24 @@ canonicalizer (functions/urls.py) strips the universally-known offenders
 crawl's own (url, content_hash) evidence, the way the paper validates
 candidate rewrite rules by support and precision against fetched content.
 
-This module implements the dominant rule family — PARAMETER-STRIP rules
-``(host, param): drop param from query strings on host`` — as two
-operators:
-
-- :func:`mine_param_rules`: for every fetched URL with a query string,
-  each parameter yields a candidate instance ``url -> url minus that
-  parameter``. An instance is APPLICABLE when the stripped URL was
-  itself fetched (both sides observed — the paper's requirement; no
-  speculative fetches), and VALID when both fetches carried the same
-  content hash. Per ``(host, param)``: support = applicable instances,
-  precision = valid/support; a rule is kept at ``support >=
-  min_support AND precision >= min_precision``.
-- :func:`apply_param_rules`: rewrite a frontier through the kept rules
-  (drop every learned-strippable parameter; preserve the order of the
-  survivors), so the frontier dedups aliases BEFORE fetching them —
-  the same admission point redirect rewriting uses
-  (crawl/round.py ``_apply_redirects``).
+This module mines the dominant rule family — PARAMETER-STRIP rules
+``(host, param): drop param from query strings on host``.
+:func:`mine_param_rules`: for every fetched URL with a query string,
+each parameter yields a candidate instance ``url -> url minus that
+parameter``. An instance is APPLICABLE when the stripped URL was itself
+fetched (both sides observed — the paper's requirement; no speculative
+fetches), and VALID when both fetches carried the same content hash.
+Per ``(host, param)``: support = applicable instances, precision =
+valid/support; a rule is kept at ``support >= min_support AND precision
+>= min_precision``. The ``dust_rules`` query reports the verdicts; the
+crawl engine does not rewrite its frontier through them.
 
 Scale shape: mining explodes each URL into its parameters — fan-out is
 the per-URL parameter count (bounded single digits for real URLs, never
 corpus-shaped) — then needs exactly ONE equi-join, on the stripped URL
 against the fetched-page set (uniformly distributed key: URLs), and one
 map-side-combinable aggregate on ``(host, param)``. No cartesian, no
-per-row Python. Application is a broadcast join on host (the rule table
-is rules-per-host small by construction) plus JVM-side higher-order
-array functions; nothing leaves the scan stage's partitioning.
+per-row Python.
 
 Reference parity: the reference crawler ships only the static
 canonicalizer (``src/url/canonicalize.rs``); rule LEARNING is scale
@@ -177,52 +169,3 @@ def mine_param_rules(
     )
     out._graft_checkpoints = [fetched]
     return out
-
-
-def apply_param_rules(
-    frontier: DataFrame,
-    rules: DataFrame,
-    *,
-    url_col: str = "url_canon",
-) -> DataFrame:
-    """Rewrite a frontier through kept DUST rules: every learned-
-    strippable parameter is dropped (survivor order preserved; the '?'
-    disappears when nothing survives), URLs on hosts without rules pass
-    through untouched. Duplicate rewritten URLs are left for the
-    frontier's own first-wins dedup, same contract as
-    redirects.rewrite_frontier."""
-    kept = (
-        rules.filter(F.col("keep"))
-        .groupBy("host")
-        .agg(F.collect_set("param").alias("_drop_params"))
-    )
-    url = F.col(url_col)
-    base, params = _split_query(url)
-    survivors = F.filter(
-        params,
-        lambda p: ~F.array_contains(
-            F.col("_drop_params"), F.substring_index(p, "=", 1)
-        ),
-    )
-    rewritten = F.concat(
-        base,
-        F.when(
-            F.size(survivors) > 0,
-            F.concat(F.lit("?"), F.array_join(survivors, "&")),
-        ).otherwise(F.lit("")),
-    )
-    return (
-        frontier.withColumn("_dust_host", _host_of(url))
-        .join(
-            F.broadcast(kept.withColumnRenamed("host", "_dust_host")),
-            "_dust_host",
-            "left",
-        )
-        .withColumn(
-            url_col,
-            F.when(F.col("_drop_params").isNull(), url).otherwise(
-                rewritten
-            ),
-        )
-        .drop("_dust_host", "_drop_params")
-    )

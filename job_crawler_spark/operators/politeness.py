@@ -42,6 +42,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_BUCKETS = 32
+# Phase-1 salt aims at about this many rows per (host, salt) window partition.
+SALT_TARGET_ROWS = 1 << 16
+
+
+def salt_width(pending: int) -> int:
+    """Phase-1 salt width for a frontier of ``pending`` rows:
+    ceil(pending / SALT_TARGET_ROWS) clamped to [1, 256]. The pending count
+    bounds the hottest host's, so below the clamp no (host, salt) window
+    partition holds much more than the target. Any width >= 1 gives the
+    same schedule."""
+    return max(1, min(256, -(-int(pending) // SALT_TARGET_ROWS)))
 
 
 def _longest_match_len(prefixes: F.Column, path: F.Column) -> F.Column:

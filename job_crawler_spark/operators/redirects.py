@@ -27,6 +27,9 @@ with no out-edge within ``max_hops`` edges; otherwise (a cycle, or a
 chain longer than the cap — indistinguishable to a capped client and
 treated identically by real crawlers) it is unresolved: ``final_url``
 and ``hops`` are NULL and ``resolved`` is false.
+
+The ``redirect_resolve`` query reports the resolutions; the crawl engine
+does not rewrite its frontier through them.
 """
 
 from __future__ import annotations
@@ -138,30 +141,3 @@ def resolve_redirects(
     )
     out._graft_checkpoints = ckpts  # type: ignore[attr-defined]
     return out
-
-
-def rewrite_frontier(
-    frontier: DataFrame,
-    resolutions: DataFrame,
-    *,
-    url_col: str = "url_canon",
-) -> DataFrame:
-    """Apply a resolution frame to a frontier: redirect sources are
-    replaced by their final URLs, unresolved (loop/over-cap) sources are
-    DROPPED (a crawler never re-enqueues a redirect loop), and URLs that
-    never redirected pass through untouched. Duplicate final URLs are
-    left for the frontier's own first-wins dedup — rewriting must not
-    invent an ordering."""
-    res = resolutions.select(
-        F.col("src_url").alias(url_col),
-        "final_url",
-        "resolved",
-    )
-    return (
-        frontier.join(res, url_col, "left")
-        .filter(F.col("resolved").isNull() | F.col("resolved"))
-        .withColumn(
-            url_col, F.coalesce(F.col("final_url"), F.col(url_col))
-        )
-        .drop("final_url", "resolved")
-    )

@@ -30,9 +30,11 @@ oracle agree bit-for-bit (no float decay constants in the decision path):
   lets it matter).
 - ``next_due = last_round + interval``; ``due = next_due <= current_round``.
 
-Rows whose ``due`` is true are exactly the victims to hand to
+Rows whose ``due`` is true are the URLs a caller may hand to
 ``CrawlEngine.force_recrawl`` (operators/cuckoo.py forced-recrawl delete +
-frontier re-admission) at round ``current_round``.
+frontier re-admission) at round ``current_round``. The
+``revisit_schedule`` query reports the schedule; the crawl engine itself
+does not act on it.
 
 Scale shape: ONE hash exchange total. The lag/row_number window partitions
 by ``url_col``; the follow-up groupBy aggregates on the SAME key, so the
@@ -121,16 +123,4 @@ def revisit_schedule(
     )
     return scheduled.withColumn(
         "due", F.col("next_due") <= F.lit(int(current_round))
-    )
-
-
-def due_urls(schedule: DataFrame) -> DataFrame:
-    """Project the ``force_recrawl``-ready victim frame (url_canon rows
-    whose revisit is due), highest change-rate first so a bounded recrawl
-    budget spends itself on the most volatile URLs."""
-    return (
-        schedule.filter(F.col("due"))
-        .select("url_canon", "n_changes", "n_fetches")
-        .orderBy(F.col("n_changes").desc(), F.col("url_canon").asc())
-        .select("url_canon")
     )

@@ -52,8 +52,8 @@ extraction, all whole-stage-codegen JVM expressions) -> pre-aggregate on
 (host, path, query) so the multi-distinct Expand runs over the already
 collapsed tuple frame, not the raw 10^10-row frontier -> ONE host
 aggregate. Two exchanges total, both map-side combined; no UDF, no join.
-The output is host-cardinality-sized and feeds the politeness scheduler
-as a broadcast demotion list (``demote_traps``).
+The output is host-cardinality-sized. The ``url_traps`` query reports it;
+the crawl engine schedules without it.
 """
 
 from __future__ import annotations
@@ -130,14 +130,3 @@ def url_trap_signals(
         stable_round(n_queries / n_urls, 6).alias("query_diversity"),
         is_trap.alias("is_trap"),
     )
-
-
-def demote_traps(frontier: DataFrame, signals: DataFrame) -> DataFrame:
-    """Drop frontier rows whose host is trap-flagged in ``signals``.
-
-    The flagged-host list is host-cardinality-sized, so it broadcasts; the
-    anti-join is therefore shuffle-free on the frontier side — the same
-    shape as the robots deny filter. ``frontier`` must carry a ``host``
-    column (the scheduler's partition key already does)."""
-    flagged = signals.filter(F.col("is_trap")).select("host")
-    return frontier.join(F.broadcast(flagged), "host", "left_anti")

@@ -984,8 +984,6 @@ def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     before multiplying; the cross-row SUM is order-dependent in its final
     ulps like every float aggregate here (the label-centroid AVG pattern),
     absorbed by the dialect-stable 4-digit rounding.
-
-    Implementation shared with ``operators/linalg.covariance_matrix``.
     """
     from job_crawler_spark.operators.linalg import gram_upper
 

@@ -1,10 +1,6 @@
-"""Explicit schemas for every engine table.
-
-Mirrors the reference's fixed SQL DDL (jobs/applications/user_profiles/
-job_searches at main.py:136-173; metrics tables at
-monitoring/health_checker.py:27-66) plus the crawl-engine tables the north
-rule requires (frontier, seen, robots, crawl_log, checkpoints) and the
-interleaved-document input shape from BASELINE.json's input_hint.
+"""Explicit schemas the engine reads and writes: the crawl-engine tables
+the north rule requires (frontier, seen, robots, crawl_log) and the
+interleaved-document span shape from BASELINE.json's input_hint.
 """
 
 from __future__ import annotations
@@ -19,99 +15,6 @@ SPAN_TYPE = T.StructType(
         T.StructField("text", T.StringType(), False),
         T.StructField("media_ref", T.StringType(), False),
         T.StructField("offset", T.IntegerType(), False),
-    ]
-)
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN_TYPE, containsNull=False), False),
-    ]
-)
-
-SPAN_KINDS = ("listing_text", "salary_snippet", "benefit_snippet", "logo_media")
-
-# --- Extracted features (reference extract_basic_job_features,
-#     main.py:341-358: tech_stack / experience_level / remote_policy /
-#     salary_info{min,max,average} / description_length / has_benefits) -----
-SALARY_INFO_TYPE = T.StructType(
-    [
-        T.StructField("min", T.DoubleType(), True),
-        T.StructField("max", T.DoubleType(), True),
-        T.StructField("average", T.DoubleType(), True),
-    ]
-)
-
-FEATURES_TYPE = T.StructType(
-    [
-        T.StructField("tech_stack", T.ArrayType(T.StringType(), False), False),
-        T.StructField("experience_level", T.StringType(), False),
-        T.StructField("remote_policy", T.StringType(), False),
-        T.StructField("salary_info", SALARY_INFO_TYPE, True),
-        T.StructField("description_length", T.IntegerType(), False),
-        T.StructField("has_benefits", T.BooleanType(), False),
-    ]
-)
-
-# --- Relational store (reference SQLite DDL, main.py:136-173) -------------
-JOBS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("company", T.StringType(), True),
-        T.StructField("location", T.StringType(), True),
-        T.StructField("url", T.StringType(), False),  # natural key (UNIQUE, main.py:141)
-        T.StructField("description", T.StringType(), True),
-        T.StructField("salary_min", T.LongType(), True),
-        T.StructField("salary_max", T.LongType(), True),
-        T.StructField("contract_type", T.StringType(), True),
-        T.StructField("posted_date", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-    ]
-)
-
-APPLICATIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("job_id", T.LongType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("applied_date", T.StringType(), True),  # yyyy-MM-dd (main.py:814)
-        T.StructField("follow_up_date", T.StringType(), True),
-        T.StructField("notes", T.StringType(), True),
-    ]
-)
-
-JOB_SEARCHES_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("query", T.StringType(), True),
-        T.StructField("results_count", T.LongType(), True),
-        T.StructField("search_date", T.TimestampType(), True),
-    ]
-)
-
-API_METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("api_name", T.StringType(), True),
-        T.StructField("endpoint", T.StringType(), True),
-        T.StructField("status_code", T.IntegerType(), True),
-        T.StructField("response_time", T.DoubleType(), True),
-        T.StructField("request_size", T.LongType(), True),
-        T.StructField("response_size", T.LongType(), True),
-    ]
-)
-
-HEALTH_CHECKS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("check_type", T.StringType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("response_time", T.DoubleType(), True),
-        T.StructField("details", T.StringType(), True),
     ]
 )
 

@@ -21,7 +21,8 @@ Cluster notes baked into the engine, not this script: AQE + skew-join
 splitting, Arrow batching for every pandas-UDF stage, shuffle partitions
 sized ~2-3x total cores (set via --conf at submit), broadcast-or-routed
 seen-filter probes (selected from the configured filter size), merge-on-read
-documents, salted politeness windows for hot-domain skew.
+documents, salted politeness windows for hot-domain skew (salt width sized
+from the checkpointed pending count).
 """
 
 from __future__ import annotations
@@ -42,9 +43,6 @@ def main() -> None:
                     default="bloom")
     ap.add_argument("--no-auto-compact", action="store_true",
                     help="disable between-round mor compaction policy")
-    ap.add_argument("--salt-target-rows", type=int, default=1 << 16,
-                    help="adaptive phase-1 salt sizes window partitions to "
-                         "about this many rows of the hottest host")
     args = ap.parse_args()
 
     # spark-submit owns master/deploy conf; only session-level settings the
@@ -73,7 +71,6 @@ def main() -> None:
         round_seconds=args.round_seconds,
         seen_filter=args.seen_filter,
         auto_compact=not args.no_auto_compact,
-        salt_target_rows=args.salt_target_rows,
     )
     bootstrapped = False
     if not catalog.exists(engine.T_CKPT):

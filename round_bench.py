@@ -44,7 +44,7 @@ def engine_round_bench(
 
     Every round row carries the per-phase wall-time map (schedule/
     sched_write/fetch_parse_merge_docs/shard_delta_write/seen_append/
-    frontier_write/host_stats/lineage_write/stats/checkpoint_write) that
+    frontier_write/lineage_write/checkpoint_write) that
     run_round returns, and the calibrator job brackets the loop — the
     artifact is attributable (steal vs code) on its own."""
     from job_crawler_spark.catalog import Catalog

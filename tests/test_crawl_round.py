@@ -602,11 +602,12 @@ def test_force_recrawl_rerun_repins_after_late_crash(spark, tmp_path):
     assert target in resched
 
 
-def test_auto_compaction_bounds_physical_rows(spark, tmp_path):
+def test_auto_compaction_bounds_physical_rows(spark, tmp_path, monkeypatch):
     """run() auto-compacts the mor documents table once the force_recrawl
-    backlog crosses compact_superseded_frac of physical rows — a long crawl
+    backlog crosses COMPACT_SUPERSEDED_FRAC of physical rows — a long crawl
     with re-crawls keeps storage bounded without an operator calling
     compact_docs() (r03 verdict: the policy was missing)."""
+    monkeypatch.setattr(crawl_round, "COMPACT_SUPERSEDED_FRAC", 0.05)
     eng = CrawlEngine(
         spark=spark,
         catalog=Catalog(str(tmp_path / "autocompact")),
@@ -615,7 +616,6 @@ def test_auto_compaction_bounds_physical_rows(spark, tmp_path):
         seen_filter="cuckoo",
         bloom_shards=8,
         cuckoo_buckets=1 << 10,
-        compact_superseded_frac=0.05,
     )
     eng.bootstrap(synth.seed_frontier(spark, 60))
     eng.run(1)
@@ -636,37 +636,47 @@ def test_auto_compaction_bounds_physical_rows(spark, tmp_path):
     assert eng.read_docs().select("doc_id").distinct().count() == n_visible
 
 
-def test_adaptive_salt_buckets_from_hot_host(spark, tmp_path):
-    """Derived salt width: each round records the written frontier's hottest-host
-    pending count and the next schedule sizes its phase-1 salt from it
-    (clamped to [1, 256]); a cold engine falls back to the static width.
-    Bucket width is correctness-neutral (test_two_phase_equals_single_phase
-    pins that; the module fixture's oracle gates pin it end-to-end)."""
-    import math
+def test_salt_width_from_pinned_pending_count(spark, tmp_path, monkeypatch):
+    """run_round sizes its phase-1 salt from the pinned checkpoint row's
+    frontier_pending (politeness.salt_width), so a cold resume passes the
+    same width as the engine that wrote the row, and round 0 reads the
+    admitted seed count from the bootstrap marker. Bucket width is
+    correctness-neutral (test_two_phase_equals_single_phase pins that; the
+    module fixture's oracle gates pin it end-to-end)."""
+    from job_crawler_spark.functions.urls import py_canonicalize
+    from job_crawler_spark.operators import politeness
 
-    eng = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "saltauto")),
-        robots=synth.robots_df(spark),
-        round_seconds=ROUND_SECONDS,
-        bloom_shards=8,
-        bloom_bits=1 << 16,
-        bloom_k=5,
-        salt_target_rows=4,  # tiny target -> derived width > 1 at test scale
-    )
-    assert eng._effective_salt_buckets() == eng.salt_buckets  # cold: static
-    eng.bootstrap(synth.seed_frontier(spark, 200))
+    monkeypatch.setattr(politeness, "SALT_TARGET_ROWS", 4)
+    widths = []
+    real = crawl_round.schedule_batch
+
+    def spy(frontier, robots, round_seconds, salt_buckets):
+        widths.append(salt_buckets)
+        return real(frontier, robots, round_seconds, salt_buckets)
+
+    monkeypatch.setattr(crawl_round, "schedule_batch", spy)
+
+    def engine():
+        return CrawlEngine(
+            spark=spark,
+            catalog=Catalog(str(tmp_path / "salt")),
+            robots=synth.robots_df(spark),
+            round_seconds=ROUND_SECONDS,
+            bloom_shards=8,
+            bloom_bits=1 << 16,
+            bloom_k=5,
+        )
+
+    seeds = synth.seed_frontier(spark, 200)
+    n_admitted = len({py_canonicalize(r.url) for r in seeds.collect()})
+    eng = engine()
+    eng.bootstrap(seeds)
+    assert eng._latest_ckpt_row(-1)["frontier_pending"] == n_admitted
     eng.run_round(0)
-    fv = int(eng._latest_ckpt_row(0)["frontier_v"])
-    hot = (
-        eng.catalog.read(spark, eng.T_FRONTIER, version=fv)
-        .groupBy("host").count().agg(F.max("count").alias("m"))
-        .collect()[0].m
-    )
-    assert eng._hot_pending == int(hot)
-    want = max(1, min(256, math.ceil(hot / 4)))
-    assert eng._effective_salt_buckets() == want
-    assert want > 1  # the derived width actually departed from the floor
-    # the next round schedules with the derived width and stays green
+    assert widths == [politeness.salt_width(n_admitted)]
+    pending = eng._latest_ckpt_row(0)["frontier_pending"]
     eng.run_round(1)
-    assert eng._hot_pending is not None
+    assert widths[-1] == politeness.salt_width(pending) > 1
+    # cold resume: a fresh engine replaying round 1 passes the same width
+    engine().run_round(1)
+    assert widths[-1] == widths[-2]

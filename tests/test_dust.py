@@ -1,17 +1,13 @@
 """DUST rule mining (operators/dust.py): support/precision goldens,
-multi-parameter strip semantics, threshold boundaries, frontier
-application contracts, plan shape. The sf-fixture parity (vs the DuckDB
-unnest-with-ordinality miner) runs in test_oracle_parity.py via the
-dust_rules gate."""
+multi-parameter strip semantics, threshold boundaries, plan shape. The
+sf-fixture parity (vs the DuckDB unnest-with-ordinality miner) runs in
+test_oracle_parity.py via the dust_rules gate."""
 
 from __future__ import annotations
 
 import pytest
 
-from job_crawler_spark.operators.dust import (
-    apply_param_rules,
-    mine_param_rules,
-)
+from job_crawler_spark.operators.dust import mine_param_rules
 
 # the smoke corpus: utm safe on h1 (4 instances, incl. the 2-param URL),
 # sess safe (2 instances via the 2-param URL), page changes content,
@@ -116,110 +112,8 @@ def test_parameter_validation(spark):
         mine_param_rules(_pages(spark), min_precision=1.5)
 
 
-def _frontier(spark, urls):
-    return spark.createDataFrame([(u,) for u in urls], "url_canon string")
-
-
-def test_apply_strips_only_kept_params(spark):
-    rules = mine_param_rules(_pages(spark))
-    out = apply_param_rules(
-        _frontier(
-            spark,
-            [
-                "h1/p/9?a=1&utm=x&b=2",  # drop utm, keep a,b order
-                "h1/p/9?utm=x&sess=1",  # both kept rules -> bare base
-                "h1/p/9?page=2",  # page rule rejected -> untouched
-                "h1/p/9",  # no query -> untouched
-                "h2/p/9?utm=x",  # h2 has no kept rule -> untouched
-                "h3/p/9?utm=x",  # unknown host -> untouched
-            ],
-        ),
-        rules,
-    )
-    assert [r.url_canon for r in out.collect()] == [
-        "h1/p/9?a=1&b=2",
-        "h1/p/9",
-        "h1/p/9?page=2",
-        "h1/p/9",
-        "h2/p/9?utm=x",
-        "h3/p/9?utm=x",
-    ]
-
-
-def test_apply_is_idempotent(spark):
-    rules = mine_param_rules(_pages(spark))
-    once = apply_param_rules(
-        _frontier(spark, ["h1/p/9?a=1&utm=x&sess=2&b=2"]), rules
-    )
-    twice = apply_param_rules(once, rules)
-    assert [r.url_canon for r in twice.collect()] == ["h1/p/9?a=1&b=2"]
-
-
-def test_apply_preserves_other_columns(spark):
-    rules = mine_param_rules(_pages(spark))
-    front = spark.createDataFrame(
-        [("h1/x?utm=1", 3.0)], "url_canon string, priority double"
-    )
-    r = apply_param_rules(front, rules).collect()[0]
-    assert (r.url_canon, r.priority) == ("h1/x", 3.0)
-
-
-def test_engine_dust_admission(spark, tmp_path):
-    """Opt-in engine wiring: learned rules rewrite seeds at admission —
-    parameter aliases collapse onto their stripped URL (deduping with
-    direct seeds), a crawl round runs clean on the rewritten frontier,
-    and mining the engine's own docs afterwards finds no DUST (the
-    static canonicalizer already collapsed the synth corpus's aliases)."""
-    from pyspark.sql import functions as F
-
-    from job_crawler_spark.catalog import Catalog
-    from job_crawler_spark.crawl.round import CrawlEngine
-    from job_crawler_spark.functions.urls import py_canonicalize
-    from job_crawler_spark.sources import synth
-
-    seeds = synth.seed_frontier(spark, 30)
-    # every 5th seed gains a ?zz= alias row (unknown param: the static
-    # canonicalizer keeps it) at lower priority than any direct seed
-    seed_id = F.regexp_extract("url", r"/jobs/(\d+)", 1).cast("int")
-    aliased = seeds.filter(seed_id % 5 == 0).withColumn(
-        "url", F.concat(F.col("url"), F.lit("&zz=9"))
-    ).withColumn("priority", F.lit(-1.0))
-    hosts = {
-        py_canonicalize(r.url).split("://", 1)[-1].split("/", 1)[0]
-        for r in seeds.select("url").collect()
-    }
-    rules = spark.createDataFrame(
-        [(h, "zz", 5, 5, 1.0, True) for h in sorted(hosts)],
-        "host string, param string, support long, n_valid long, "
-        "rule_precision double, keep boolean",
-    )
-    eng = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "dust")),
-        robots=synth.robots_df(spark),
-        round_seconds=30,
-        dust_rules=rules,
-    )
-    eng.bootstrap(seeds.unionByName(aliased))
-    frontier = eng.catalog.read(spark, eng.T_FRONTIER)
-    assert frontier.filter(F.col("url_canon").contains("zz=")).count() == 0
-    # aliases deduped onto the direct seeds: same frontier as seeds alone
-    n_plain = {py_canonicalize(r.url) for r in seeds.select("url").collect()}
-    assert frontier.count() == len(n_plain)
-    # first-wins kept the direct seed's priority, not the alias's -1
-    assert frontier.filter(F.col("priority") < 0).count() == 0
-    res = eng.run(1)
-    assert res[-1]["fetched"] > 0
-    assert eng.mine_dust_rules().filter(F.col("keep")).count() == 0
-
-
 def test_plan_shape(spark):
-    """Mining: no cartesian, single equi-join on the stripped URL.
-    Application: the rule side is broadcast (the frontier never
-    shuffles)."""
+    """Mining: no cartesian, single equi-join on the stripped URL."""
     mined = mine_param_rules(_pages(spark))
     plan = mined._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan and "NestedLoop" not in plan
-    applied = apply_param_rules(_frontier(spark, ["h1/x?utm=1"]), mined)
-    aplan = applied._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in aplan

@@ -1,8 +1,7 @@
 """Distributed dense linear algebra (operators/linalg.py) vs numpy.
 
-The numpy reference is the ground truth for the covariance assembly; the
-Gram stage itself is additionally oracle-checked as the gated query
-emb_gram_matrix.
+The numpy reference is the ground truth for the Gram matrix; the Gram stage
+is additionally oracle-checked as the gated query emb_gram_matrix.
 """
 
 from __future__ import annotations
@@ -10,7 +9,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from job_crawler_spark.operators.linalg import covariance_matrix, gram_upper
+from job_crawler_spark.operators.linalg import gram_upper
 
 
 @pytest.fixture(scope="module")
@@ -41,15 +40,6 @@ def test_gram_upper_matches_numpy(spark, corpus):
         got[r["i"], r["j"]] = r["g"]
         got[r["j"], r["i"]] = r["g"]
     np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
-
-
-def test_covariance_matches_numpy(spark, corpus):
-    df, mat = corpus
-    cov, mu, n = covariance_matrix(df)
-    assert n == mat.shape[0]
-    np.testing.assert_allclose(mu, mat.mean(axis=0), rtol=1e-9, atol=1e-12)
-    want = np.cov(mat, rowvar=False, bias=True)
-    np.testing.assert_allclose(cov, want, rtol=1e-8, atol=1e-9)
 
 
 def test_gram_empty_and_single_row(spark):

@@ -1,17 +1,13 @@
 """Redirect-chain resolution (operators/redirects.py): pointer-doubling
-goldens — chains, loops, hop cap, doubling-round coverage — plus the
-frontier rewrite contract. The sf-fixture parity (vs a DuckDB recursive
-CTE) runs in test_oracle_parity.py via the redirect_resolve gate."""
+goldens — chains, loops, hop cap, doubling-round coverage. The sf-fixture
+parity (vs a DuckDB recursive CTE) runs in test_oracle_parity.py via the
+redirect_resolve gate."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from job_crawler_spark.operators.redirects import (
-    resolve_redirects,
-    rewrite_frontier,
-)
+from job_crawler_spark.operators.redirects import resolve_redirects
 
 
 def _edges(spark, pairs):
@@ -83,70 +79,3 @@ def test_duplicate_edges_are_deduped(spark):
 def test_bad_cap_rejected(spark):
     with pytest.raises(ValueError, match="max_hops"):
         resolve_redirects(_edges(spark, [("a", "b")]), max_hops=0)
-
-
-def test_engine_redirect_admission(spark, tmp_path):
-    """Opt-in engine wiring: a redirect map rewrites seeds at admission —
-    sources land on their final URL (deduped with direct seeds), loop
-    members never enter the frontier, and a crawl round runs clean on the
-    rewritten frontier."""
-    from job_crawler_spark.catalog import Catalog
-    from job_crawler_spark.crawl.round import CrawlEngine
-    from job_crawler_spark.functions.urls import py_canonicalize
-    from job_crawler_spark.sources import synth
-
-    canon = [py_canonicalize(synth.raw_url_for(i)) for i in range(40)]
-    # chain 5 -> 6, chain 12 -> 13 -> 14, loop 10 <-> 11
-    edges = spark.createDataFrame(
-        [
-            (canon[5], canon[6]),
-            (canon[12], canon[13]),
-            (canon[13], canon[14]),
-            (canon[10], canon[11]),
-            (canon[11], canon[10]),
-        ],
-        "src string, dst string",
-    )
-    eng = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "rd")),
-        robots=synth.robots_df(spark),
-        round_seconds=30,
-        redirects=edges,
-    )
-    eng.bootstrap(synth.seed_frontier(spark, 40))
-    frontier = {
-        r.url_canon
-        for r in eng.catalog.read(spark, eng.T_FRONTIER).collect()
-    }
-    for dropped in (5, 10, 11, 12, 13):
-        assert canon[dropped] not in frontier
-    for kept in (6, 14):
-        assert canon[kept] in frontier
-    # 40 seeds: 5 redirect sources leave, of which 2 land on already-seeded
-    # URLs (6, 14) and dedup away, 2 are loop members (gone) — but the
-    # every-11th tracking-param duplicate (synth) may collapse more; just
-    # pin that nothing else vanished
-    assert canon[7] in frontier and canon[20] in frontier
-
-    res = eng.run(1)
-    assert res[-1]["fetched"] > 0
-    # unique synth content per URL -> the engine sees no mirror hosts
-    assert eng.mirror_detect(threshold=0.2).count() == 0
-
-
-def test_rewrite_frontier_contract(spark):
-    frontier = spark.createDataFrame(
-        [("a", 1.0), ("x", 2.0), ("q", 3.0)],
-        "url_canon string, priority double",
-    )
-    res = resolve_redirects(
-        _edges(spark, [("a", "b"), ("x", "y"), ("y", "x")]), max_hops=8
-    )
-    got = {
-        r.url_canon: r.priority
-        for r in rewrite_frontier(frontier, res).collect()
-    }
-    # a rewritten to its landing URL, the loop source dropped, the
-    # never-redirected URL untouched — payload columns preserved
-    assert got == {"b": 1.0, "q": 3.0}

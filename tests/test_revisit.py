@@ -1,11 +1,9 @@
 """Freshness-driven revisit scheduling: golden histories, interval rule
-edges, due projection, single-exchange plan pin."""
+edges, single-exchange plan pin."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from job_crawler_spark.operators.revisit import due_urls, revisit_schedule
+from job_crawler_spark.operators.revisit import revisit_schedule
 
 _SCHEMA = "url_canon STRING, round INT, content_hash STRING"
 
@@ -75,63 +73,6 @@ def test_due_boundary_is_inclusive(spark):
     rows = [("u", 4, "a")]  # next_due = 5
     assert revisit_schedule(_hist(spark, rows), 5).first().due
     assert not revisit_schedule(_hist(spark, rows), 4).first().due
-
-
-def test_due_urls_orders_by_volatility(spark):
-    rows = [
-        ("u/a", 1, "a"), ("u/a", 2, "b"), ("u/a", 3, "c"),  # 2 changes, due
-        ("u/b", 1, "a"), ("u/b", 2, "b"),                   # 1 change, due
-        ("u/c", 1, "a"), ("u/c", 2, "a"), ("u/c", 3, "a"),
-        ("u/c", 4, "a"), ("u/c", 5, "a"),                   # streak 4, not due
-    ]
-    sched = revisit_schedule(_hist(spark, rows), 5)
-    assert [r.url_canon for r in due_urls(sched).collect()] == ["u/a", "u/b"]
-
-
-def test_engine_revisit_round_closes_the_loop(spark, tmp_path):
-    """Policy -> mechanism: the engine schedules recrawls from its OWN mor
-    docs history, force_recrawls the due URLs, and the refetched (stable,
-    deterministic-content) copies push their intervals UP — observed
-    adaptive backoff end-to-end."""
-    from job_crawler_spark.catalog import Catalog
-    from job_crawler_spark.crawl.round import CrawlEngine
-    from job_crawler_spark.sources import synth
-
-    eng = CrawlEngine(
-        spark=spark,
-        catalog=Catalog(str(tmp_path / "rw")),
-        robots=synth.robots_df(spark),
-        round_seconds=30,
-        seen_filter="cuckoo",
-        bloom_shards=8,
-        cuckoo_buckets=1 << 10,
-    )
-    eng.bootstrap(synth.seed_frontier(spark, 120))
-    eng.run(2)
-
-    # every fetched URL has exactly one history row; with max_interval=1
-    # all of them are due by the upcoming round
-    sched = eng.revisit_due(max_interval=1).cache()
-    assert sched.filter(F.col("n_fetches") != 1).count() == 0
-    assert sched.filter(~F.col("due")).count() == 0
-    n_docs = sched.count()
-    sched.unpersist()
-
-    res = eng.revisit_round(max_interval=1, budget=3, priority=50.0)
-    assert res["recrawl"] == 3 and res["budget"] == 3
-
-    # victims get refetched within a few rounds (per-host budgets may
-    # stagger them); deterministic pages -> same span hash -> a pure
-    # stable streak, so the adaptive interval DOUBLES off the refetch
-    for _ in range(3):
-        eng.run_round(eng.next_round())
-    sched2 = eng.revisit_due(max_interval=64)
-    twice = [r for r in sched2.collect() if r.n_fetches == 2]
-    assert len(twice) == 3
-    assert all(
-        (r.n_changes, r.stable_streak, r.interval) == (0, 1, 2) for r in twice
-    )
-    assert n_docs >= 3
 
 
 def test_single_exchange_plan(spark):

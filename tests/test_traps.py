@@ -1,10 +1,8 @@
-"""Crawler-trap detection: golden signals, flag rule edges, demotion join."""
+"""Crawler-trap detection: golden signals, flag rule edges, plan shape."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from job_crawler_spark.operators.traps import demote_traps, url_trap_signals
+from job_crawler_spark.operators.traps import url_trap_signals
 
 
 def _frontier(spark, urls):
@@ -104,73 +102,6 @@ def test_malformed_urls_dropped(spark):
     ).collect()
     assert {r.host for r in sig} == {"ok.example.com"}
     assert sig[0].n_urls == 25
-
-
-def test_demote_traps_filters_flagged_hosts(spark):
-    urls = _calendar_trap(30) + _benign(30)
-    f = _frontier(spark, urls).withColumn(
-        "host", F.regexp_extract("url", "://([^/?#]*)", 1)
-    )
-    sig = url_trap_signals(f)
-    kept = demote_traps(f, sig)
-    hosts = {r.host for r in kept.select("host").distinct().collect()}
-    assert hosts == {"ok.example.com"}
-    assert kept.count() == 30
-
-
-def test_engine_trap_demotion_opt_in(spark, tmp_path):
-    # trap host never scheduled when the flag is on; its rows stay PENDING
-    # (demotion, not deletion); the default engine schedules it
-    from job_crawler_spark.catalog import Catalog
-    from job_crawler_spark.crawl.round import CrawlEngine
-    from job_crawler_spark.sources import synth
-
-    trap_urls = [
-        (f"https://cal-trap.example/d/{2000 + i % 7}/{i % 28 + 1}/ev-{i}",)
-        for i in range(40)
-    ]
-
-    def seeds():
-        trap = spark.createDataFrame(trap_urls, "url STRING").select(
-            "url",
-            F.lit(5).alias("depth"),
-            F.lit(0.5).alias("priority"),
-            F.lit(0).alias("round"),
-        )
-        return synth.seed_frontier(spark, 120).select(
-            "url", "depth", "priority", "round"
-        ).unionByName(trap)
-
-    def run_one(name, **kw):
-        eng = CrawlEngine(
-            spark=spark,
-            catalog=Catalog(str(tmp_path / name)),
-            robots=synth.robots_df(spark),
-            round_seconds=30,
-            bloom_shards=8,
-            bloom_bits=1 << 14,
-            bloom_k=5,
-            **kw,
-        )
-        eng.bootstrap(seeds())
-        eng.run_round(0)
-        sched_hosts = {
-            r.host
-            for r in eng.catalog.read(spark, eng.T_SCHED).collect()
-        }
-        pending_hosts = {
-            r.host
-            for r in eng.catalog.read(spark, eng.T_FRONTIER).collect()
-        }
-        return sched_hosts, pending_hosts
-
-    on_sched, on_pending = run_one("demote", trap_demotion=True)
-    assert "cal-trap.example" not in on_sched
-    assert "cal-trap.example" in on_pending  # demoted, not deleted
-    assert len(on_sched) > 0  # normal hosts still crawled
-
-    off_sched, _ = run_one("plain")
-    assert "cal-trap.example" in off_sched
 
 
 def test_plan_shape_two_exchanges_no_python(spark):
