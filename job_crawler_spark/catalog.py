@@ -20,20 +20,23 @@ plain parquet + JSON manifests (SURVEY.md §7.3 "Iceberg availability"):
 - row_count = manifest/footer metadata only (Iceberg carries record counts
   in manifests) — table stats never cost a Spark scan.
 
-Manifest file entries are dicts ``{"path", "part", "rows"}`` plus an
-optional ``"stats"`` map of per-file column min/max (Iceberg's
-lower_bounds/upper_bounds, harvested from the parquet footers at write
-time — metadata only, no data scan). ``read_pruned`` uses them for
-file skipping: a range predicate touches only the files whose stats
-overlap it — and files without stats (older manifests, unsupported
-types) are always kept, so pruning can only skip files it has PROOF
-contain no match. Plain-string entries from
-older manifests are still readable (untagged, rows read from the
-parquet footer on demand).
+Manifest file entries are dicts ``{"path", "part", "rows"}``; plain-string
+entries from older manifests are still readable (untagged, rows read from
+the parquet footer on demand). The manifest is the only source of what a
+table holds:
+
+- schema: ``read`` plans the data files with the manifest's schema, so no
+  Spark job re-reads parquet footers to infer it;
+- control rows: ``rows`` and ``max_part`` answer the engine's small
+  checkpoint/meta reads on the driver with pyarrow, no Spark job. The
+  ``part`` tag of a round-keyed file names the ``round`` value of its rows,
+  so the tag alone picks the files of one round; untagged files (a
+  whole-table overwrite) may hold any round and are always opened.
 
 On a real cluster you'd swap this for the Iceberg Spark catalog with zero
-changes above this module — the engine only calls read/append/overwrite/
-overwrite_partition/snapshot_id/expire_snapshots.
+changes above this module — the engine only calls read/rows/max_part/
+append/overwrite/overwrite_partition/snapshot_id/row_count/expire_snapshots
+(``rows``/``max_part`` become metadata-table reads there).
 """
 
 from __future__ import annotations
@@ -44,71 +47,15 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _POINTER = "_latest"
 
-# JSON-round-trippable stat types whose Python ordering matches the
-# column's ordering. bytes / timestamps / nested types are excluded —
-# their files simply carry no stats and are never skipped.
-_STAT_TYPES = (bool, int, float, str)
-
-
-def _footer_stats(md) -> dict:
-    """Per-column [min, max] from parquet row-group footers — Iceberg's
-    lower_bounds/upper_bounds, metadata only. A column gets stats only if
-    EVERY row group has usable min/max of a JSON-safe ordered type;
-    nested columns (dotted paths) are skipped. Missing stats mean "never
-    skip", so this is always safe, never wrong."""
-    agg: dict[str, list] = {}
-    dead: set[str] = set()
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            cname = col.path_in_schema
-            if cname in dead or "." in cname:
-                continue
-            st = col.statistics
-            if (
-                st is None
-                or not st.has_min_max
-                or not isinstance(st.min, _STAT_TYPES)
-                or not isinstance(st.max, _STAT_TYPES)
-                or isinstance(st.min, bool) != isinstance(st.max, bool)
-            ):
-                dead.add(cname)
-                agg.pop(cname, None)
-                continue
-            cur = agg.get(cname)
-            if cur is None:
-                agg[cname] = [st.min, st.max]
-            else:
-                cur[0] = min(cur[0], st.min)
-                cur[1] = max(cur[1], st.max)
-    return agg
-
-
-def _entry_overlaps(entry, ranges: dict) -> bool:
-    """True unless the entry's stats PROVE no row can satisfy every
-    (col, (lo, hi)) range — missing stats for a column keep the file."""
-    stats = entry.get("stats") if isinstance(entry, dict) else None
-    if not stats:
-        return True
-    for cname, (lo, hi) in ranges.items():
-        s = stats.get(cname)
-        if s is None:
-            continue
-        mn, mx = s
-        try:
-            if hi is not None and mn > hi:
-                return False
-            if lo is not None and mx < lo:
-                return False
-        except TypeError:  # predicate/stat type mismatch: keep the file
-            continue
-    return True
+# The column a partition tag stands for: every row of a file tagged ``k``
+# has ``round == k`` (the engine's round-keyed tables).
+PART_COLUMN = "round"
 
 
 @dataclass
@@ -164,25 +111,16 @@ class Catalog:
         """Write df as immutable parquet files under a fresh uuid dir.
         Returns manifest entries carrying partition tag + footer row counts
         (metadata only — no data scan)."""
-        import pyarrow.parquet as pq
-
         out = os.path.join(self._tdir(name), f"data-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(out)
-        entries = []
-        for f in sorted(os.listdir(out)):
-            if not f.endswith(".parquet"):
-                continue
-            path = os.path.join(out, f)
-            md = pq.ParquetFile(path).metadata
-            entries.append(
-                {
-                    "path": path,
-                    "part": part,
-                    "rows": md.num_rows,
-                    "stats": _footer_stats(md),
-                }
-            )
-        return entries
+        paths = [
+            os.path.join(out, f) for f in sorted(os.listdir(out))
+            if f.endswith(".parquet")
+        ]
+        return [
+            {"path": p, "part": part, "rows": pq.ParquetFile(p).metadata.num_rows}
+            for p in paths
+        ]
 
     def read(
         self,
@@ -191,69 +129,49 @@ class Catalog:
         version: int | None = None,
         schema: T.StructType | None = None,
     ) -> DataFrame:
+        """Plan a snapshot with the manifest's schema (no footer inference,
+        so no Spark job). ``schema`` only types a table that does not exist
+        yet; an existing table always reads as its manifest says."""
         v = self.snapshot_id(name) if version is None else version
         if v < 0:
             if schema is None:
                 raise FileNotFoundError(f"table {name} does not exist in {self.root}")
             return spark.createDataFrame([], schema=schema)
         manifest = self._read_manifest(name, v)
+        sch = T.StructType.fromJson(json.loads(manifest["schema"]))
         if not manifest["files"]:
-            sch = schema or T.StructType.fromJson(json.loads(manifest["schema"]))
             return spark.createDataFrame([], schema=sch)
-        return spark.read.parquet(
+        return spark.read.schema(sch).parquet(
             *[self._entry_path(e) for e in manifest["files"]]
         )
 
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        name: str,
-        ranges: dict,
-        version: int | None = None,
-        schema: T.StructType | None = None,
-    ) -> DataFrame:
-        """Range-predicate read with manifest-stats file skipping.
+    def rows(self, name: str, part=None) -> list[dict]:
+        """Rows of the latest snapshot as dicts, read on the driver with
+        pyarrow — no Spark job; for small control tables. With ``part``,
+        only the rows whose ``round`` equals it, opening just the files
+        tagged ``part`` and the untagged ones."""
+        out = []
+        for e in self._latest_entries(name):
+            if part is None or self._entry_part(e) in (part, None):
+                out += pq.ParquetFile(self._entry_path(e)).read().to_pylist()
+        if part is None:
+            return out
+        return [r for r in out if r[PART_COLUMN] == part]
 
-        ``ranges`` maps column -> (lo, hi), both inclusive, either bound
-        None for open-ended. Only files whose per-file min/max stats
-        overlap EVERY range are scanned; the residual filter is still
-        applied to the survivors, so the result is exactly
-        ``read(...).filter(lo <= col <= hi ...)`` — skipping is a scan
-        optimization, never a semantic. The scanned/total file counts are
-        attached as ``_graft_files_scanned`` / ``_graft_files_total`` so
-        callers (and tests) can assert the skipping actually happened.
-        Pays off when the layout gives files tight stat ranges — a sort
-        or a partition-scoped write.
-        """
-        from pyspark.sql import functions as F
-
-        v = self.snapshot_id(name) if version is None else version
-        if v < 0:
-            if schema is None:
-                raise FileNotFoundError(
-                    f"table {name} does not exist in {self.root}"
-                )
-            df = spark.createDataFrame([], schema=schema)
-            df._graft_files_scanned = 0
-            df._graft_files_total = 0
-            return df
-        manifest = self._read_manifest(name, v)
-        entries = manifest["files"]
-        keep = [e for e in entries if _entry_overlaps(e, ranges)]
-        if keep:
-            df = spark.read.parquet(*[self._entry_path(e) for e in keep])
-        else:
-            df = spark.createDataFrame(
-                [], schema=T.StructType.fromJson(json.loads(manifest["schema"]))
-            )
-        for cname, (lo, hi) in ranges.items():
-            if lo is not None:
-                df = df.filter(F.col(cname) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(cname) <= F.lit(hi))
-        df._graft_files_scanned = len(keep)
-        df._graft_files_total = len(entries)
-        return df
+    def max_part(self, name: str):
+        """Largest ``round`` in the latest snapshot (None when it holds no
+        rows): the largest partition tag, or a larger value inside an
+        untagged file — the only files opened (``round`` column only)."""
+        vals = []
+        for e in self._latest_entries(name):
+            tag = self._entry_part(e)
+            if tag is not None:
+                vals.append(tag)
+            else:
+                vals += pq.ParquetFile(self._entry_path(e)).read(
+                    columns=[PART_COLUMN]
+                ).column(PART_COLUMN).to_pylist()
+        return max(vals, default=None)
 
     def _latest_entries(self, name: str) -> list:
         v = self.snapshot_id(name)
@@ -274,8 +192,8 @@ class Catalog:
         entries = self._write_data(df, name, part=part)
         return self._commit(name, entries, df.schema.json())
 
-    def append(self, df: DataFrame, name: str, part=None) -> int:
-        new_entries = self._write_data(df, name, part=part)
+    def append(self, df: DataFrame, name: str) -> int:
+        new_entries = self._write_data(df, name)
         return self._commit(
             name, self._latest_entries(name) + new_entries, df.schema.json()
         )
@@ -316,8 +234,6 @@ class Catalog:
             if isinstance(e, dict) and e.get("rows") is not None:
                 total += e["rows"]
             else:
-                import pyarrow.parquet as pq
-
                 total += pq.ParquetFile(self._entry_path(e)).metadata.num_rows
         return total
 

@@ -79,7 +79,7 @@ def outlink_priority(url_canon: str) -> float:
 EXPAND_SCHEMA = "url_canon string, host string, depth int, priority double"
 
 
-def expand_outlinks(parsed: DataFrame, outlink_col: str = "outlink") -> DataFrame:
+def expand_outlinks(parsed: DataFrame) -> DataFrame:
     """Exploded raw outlinks -> canonical frontier candidates.
 
     Runs in Python (Arrow-batched) because the oracle must reproduce
@@ -88,12 +88,12 @@ def expand_outlinks(parsed: DataFrame, outlink_col: str = "outlink") -> DataFram
     within the round are resolved upstream by first-wins on
     (priority DESC, url ASC) — this stage just maps rows.
 
-    Input needs columns (depth, <outlink_col>); output one row per link.
+    Input needs columns (depth, outlink); output one row per link.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            canons = [py_canonicalize(u) for u in pdf[outlink_col]]
+            canons = [py_canonicalize(u) for u in pdf["outlink"]]
             yield pd.DataFrame(
                 {
                     "url_canon": canons,

@@ -101,7 +101,7 @@ PARSED_SCHEMA = T.StructType(
 )
 
 
-def parse_pages(pages: DataFrame, url_col: str = "url_canon", page_col: str = "page") -> DataFrame:
+def parse_pages(pages: DataFrame) -> DataFrame:
     """Distributed parse: (url_canon, page) -> (doc_id, spans, outlinks).
 
     Narrow transformation — no shuffle; Arrow batches in and out. doc_id is
@@ -112,7 +112,7 @@ def parse_pages(pages: DataFrame, url_col: str = "url_canon", page_col: str = "p
         for pdf in batches:
             out_spans: list[list[dict]] = []
             out_links: list[list[str]] = []
-            for page in pdf[page_col].tolist():
+            for page in pdf["page"].tolist():
                 spans, links = _parse_one(page or "")
                 out_spans.append(
                     [
@@ -123,7 +123,7 @@ def parse_pages(pages: DataFrame, url_col: str = "url_canon", page_col: str = "p
                 out_links.append(links)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[url_col],
+                    "doc_id": pdf["url_canon"],
                     "spans": out_spans,
                     "outlinks": out_links,
                 }

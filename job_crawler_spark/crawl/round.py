@@ -197,12 +197,10 @@ class CrawlEngine:
         exact backend + parameters that built them — resuming with different
         ones would silently probe wrong bits (or crash on blob length).
         Pinned at bootstrap, validated on every round."""
-        rows = self.catalog.read(
-            self.spark, self.T_BLOOM_META, schema=self.BLOOM_META_SCHEMA
-        ).collect()
+        rows = self.catalog.rows(self.T_BLOOM_META)
         if not rows:
             return  # pre-meta catalog (or fresh): nothing to validate against
-        meta = rows[0].asDict()
+        meta = rows[0]
         # catalogs written before the backend field existed are bloom-built
         got = (
             meta.get("backend", "bloom"),
@@ -316,39 +314,28 @@ class CrawlEngine:
 
     # -- resume ------------------------------------------------------------------
     def next_round(self) -> int:
-        if not self.catalog.exists(self.T_CKPT):
-            return 0
-        ck = self.catalog.read(self.spark, self.T_CKPT, schema=CHECKPOINT_SCHEMA)
-        row = ck.agg(F.max("round").alias("m")).collect()[0]
-        return 0 if row.m is None else int(row.m) + 1
+        """1 + the newest checkpointed round, from the manifest's partition
+        tags (Catalog.max_part) — no Spark job."""
+        last = self.catalog.max_part(self.T_CKPT)
+        return 0 if last is None else last + 1
 
     def _latest_ckpt_row(self, round_no: int) -> dict:
         """The full winning checkpoint row of a round. Round N reads its
         inputs as-of round N-1's row, so replays recompute from identical
         inputs even when later snapshots already exist. Returned whole so
         callers that go on to repin the same row (the adoption branch)
-        don't pay a second read+collect job."""
-        # manifest-stats pruned read: at 10^6 stored rounds this touches
-        # the one file whose round range covers the target, not the table
-        ck = self.catalog.read_pruned(
-            self.spark,
-            self.T_CKPT,
-            {"round": (round_no, round_no)},
-            schema=CHECKPOINT_SCHEMA,
-        )
-        # newest-version row wins if a legacy (untagged) catalog ever holds
-        # duplicate rows for one round: the latest repin supersedes
-        row = (
-            ck.orderBy(F.col("frontier_v").desc(), F.col("seen_v").desc())
-            .limit(1)
-            .collect()
-        )
-        if not row:
+        don't read it twice."""
+        # the manifest's round tag picks the round's file (plus any untagged
+        # ones), read on the driver — no Spark job at any table length
+        rows = self.catalog.rows(self.T_CKPT, part=round_no)
+        if not rows:
             raise RuntimeError(
                 f"no checkpoint for round {round_no}; bootstrap first or "
                 f"resume from next_round()"
             )
-        return row[0].asDict()
+        # an untagged file (a whole-table rewrite) and a later repin can
+        # both hold the round: the newest pin supersedes
+        return max(rows, key=lambda r: (r["frontier_v"], r["seen_v"]))
 
     def _pinned_versions(self, round_no: int) -> tuple[int, int, int]:
         """(frontier_v, seen_v, shards_v) pins round_no reads as-of."""
@@ -374,17 +361,13 @@ class CrawlEngine:
             )
         return last, ck_row, latest_fv
 
-    def _repin_checkpoint(
-        self, round_no: int, updates: dict, row: dict | None = None
-    ) -> None:
-        """Rewrite a round's checkpoint row with updated pins/counts.
+    def _repin_checkpoint(self, round_no: int, updates: dict, row: dict) -> None:
+        """Rewrite a round's checkpoint ``row`` with updated pins/counts.
         Idempotent (overwrite_partition of a single row); used to make
-        adopted-but-unpinned progress durable before anything builds on it.
-        Pass ``row`` when the caller already fetched the checkpoint row —
-        avoids a redundant read+collect job on the commit path."""
-        row = dict(row) if row is not None else self._latest_ckpt_row(round_no)
-        row.update(updates)
-        marker = self.spark.createDataFrame([row], schema=CHECKPOINT_SCHEMA)
+        adopted-but-unpinned progress durable before anything builds on it."""
+        marker = self.spark.createDataFrame(
+            [{**row, **updates}], schema=CHECKPOINT_SCHEMA
+        )
         self._round_keyed_write(self.T_CKPT, marker, round_no)
 
     # -- one round ----------------------------------------------------------------
@@ -434,8 +417,8 @@ class CrawlEngine:
                 row=ck_row,
             )
             fv = latest_fv
-        frontier = cat.read(spark, self.T_FRONTIER, version=fv, schema=PENDING_SCHEMA)
-        seen = cat.read(spark, self.T_SEEN, version=sv, schema=schemas.SEEN_SCHEMA)
+        frontier = cat.read(spark, self.T_FRONTIER, version=fv)
+        seen = cat.read(spark, self.T_SEEN, version=sv)
 
         # salt width from the pinned pending count (an upper bound on the
         # hottest host's): partitioning only, never the schedule itself
@@ -492,9 +475,7 @@ class CrawlEngine:
         # anti-join authoritative for the maybe-seen remainder (T4). Pinned
         # version: shards ⊇ seen at the same pin (commit order shards-before-
         # seen) so "bloom says new" is provable against the pinned seen.
-        shards_df = cat.read(
-            spark, self.T_SHARDS, version=shv, schema=self._filter_schema()
-        )
+        shards_df = cat.read(spark, self.T_SHARDS, version=shv)
         provably_new, maybe_seen, flagged = self._split_new_vs_seen(
             not_pending, shards_df
         )
@@ -526,7 +507,7 @@ class CrawlEngine:
         )
         _mark("fetch_parse_merge_docs")
 
-        latest_seen = cat.read(spark, self.T_SEEN, schema=schemas.SEEN_SCHEMA)
+        latest_seen = cat.read(spark, self.T_SEEN)
         new_seen = anti_join_seen(
             batch.select("url_canon").withColumn("first_round", F.lit(round_no)),
             latest_seen,
@@ -622,12 +603,11 @@ class CrawlEngine:
         """Snapshot retention that can never break kill-and-resume: the
         latest checkpoint's pinned versions are passed as expiry floors, so
         the manifests time-travel resume needs always survive."""
-        ck = self.catalog.read(self.spark, self.T_CKPT, schema=CHECKPOINT_SCHEMA)
-        row = ck.orderBy(F.col("round").desc()).limit(1).collect()
+        row = self._latest_ckpt_row(self.next_round() - 1)
         pins = {
-            self.T_FRONTIER: int(row[0].frontier_v) if row else None,
-            self.T_SEEN: int(row[0].seen_v) if row else None,
-            self.T_SHARDS: int(row[0].shards_v) if row else None,
+            self.T_FRONTIER: int(row["frontier_v"]),
+            self.T_SEEN: int(row["seen_v"]),
+            self.T_SHARDS: int(row["shards_v"]),
         }
         for name in (
             self.T_FRONTIER, self.T_SEEN, self.T_SHARDS, self.T_DOCS,
@@ -639,11 +619,11 @@ class CrawlEngine:
                 )
 
     # -- documents read/compaction (merge-on-read) -----------------------------
-    def read_docs(self, version: int | None = None) -> DataFrame:
+    def read_docs(self) -> DataFrame:
         """The documents table as users see it: latest-wins per doc_id (max
         round; copies within one round are bit-identical by determinism, so
         any pick is the same)."""
-        docs = self.catalog.read(self.spark, self.T_DOCS, version=version)
+        docs = self.catalog.read(self.spark, self.T_DOCS)
         return _latest_wins(docs).drop("round")
 
     def compact_docs(self) -> int:
@@ -704,8 +684,8 @@ class CrawlEngine:
         deduped = self._admit(raw_frontier)
         last, ck_row, latest_fv = self._last_committed()
 
-        seen = cat.read(spark, self.T_SEEN, schema=schemas.SEEN_SCHEMA)
-        frontier = cat.read(spark, self.T_FRONTIER, schema=PENDING_SCHEMA)
+        seen = cat.read(spark, self.T_SEEN)
+        frontier = cat.read(spark, self.T_FRONTIER)
         fresh = (
             anti_join_seen(deduped, seen, "url_canon")
             .join(frontier.select("url_canon"), "url_canon", "left_anti")
@@ -768,14 +748,14 @@ class CrawlEngine:
         pinned_fv = int(ck_row["frontier_v"])
 
         urls = urls.select("url_canon").distinct()
-        seen = cat.read(spark, self.T_SEEN, schema=schemas.SEEN_SCHEMA)
-        frontier = cat.read(spark, self.T_FRONTIER, schema=PENDING_SCHEMA)
+        seen = cat.read(spark, self.T_SEEN)
+        frontier = cat.read(spark, self.T_FRONTIER)
         victims = seen.join(urls, "url_canon").cache()
         n_victims = victims.count()
 
         # 1. shard deltas: rewrite only the rounds that inserted these keys
         if n_victims > 0:
-            shards = cat.read(spark, self.T_SHARDS, schema=self._filter_schema())
+            shards = cat.read(spark, self.T_SHARDS)
             affected = [
                 int(r.first_round)
                 for r in victims.select("first_round").distinct().collect()

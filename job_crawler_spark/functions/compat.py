@@ -24,8 +24,8 @@ def stable_round_sql(expr: str, digits: int) -> str:
     return f"(FLOOR(({expr}) * {scale} + 0.5) / {scale})"
 
 
-def spread(df, factor: int = 2):
-    """Round-robin repartition to ``factor`` x the session's default
+def spread(df):
+    """Round-robin repartition to twice the session's default
     parallelism — for COMPUTE-heavy narrow stages above small inputs.
 
     The gate fixtures are single-row-group parquet files, so a scan stage
@@ -42,7 +42,7 @@ def spread(df, factor: int = 2):
     Results are partitioning-independent (repartition's
     sort-before-shuffle keeps retries deterministic)."""
     sc = df.sparkSession.sparkContext
-    return df.repartition(factor * sc.defaultParallelism)
+    return df.repartition(2 * sc.defaultParallelism)
 
 
 def bind_once(col: Column, fn) -> Column:

@@ -36,15 +36,14 @@ def _persistent_ids(spark) -> set[int]:
     return ids
 
 
-def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` that records the persisted RDD ids on
+def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``df.localCheckpoint()`` that records the persisted RDD ids on
     the returned frame (``._graft_ckpt_rdds``) so :func:`release` can free
-    them. With ``eager=False`` the RDD only persists at first action, so
-    the diff is empty and release becomes a no-op — pass eager=True (the
-    repo-wide convention) when the blocks must be reclaimable."""
+    them. Eager because a lazy checkpoint only persists at first action,
+    which would leave the diff empty and release a no-op."""
     spark = df.sparkSession
     before = _persistent_ids(spark)
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint(eager=True)
     ck._graft_ckpt_rdds = _persistent_ids(spark) - before
     return ck
 

@@ -104,60 +104,46 @@ def test_expire_snapshots_respects_pin_floor(spark, cat):
         cat._read_manifest("pin", 1)
 
 
-# --- manifest column stats + file skipping (read_pruned) ----------------------
+# --- driver-side control reads (rows / max_part) -----------------------------
 
 
-def test_write_harvests_footer_stats(spark, cat):
-    df = spark.createDataFrame(
-        [(1, "apple", [1, 2]), (9, "pear", [3])],
-        "x long, s string, arr array<long>",
-    )
-    cat.overwrite(df.coalesce(1), "t")
-    (entry,) = cat._latest_entries("t")
-    assert entry["stats"]["x"] == [1, 9]
-    assert entry["stats"]["s"] == ["apple", "pear"]
-    assert "arr" not in entry["stats"]  # nested: no stats, never skipped
+def test_rows_reads_tagged_and_untagged_files_only(spark, cat, monkeypatch):
+    """rows(name, part=k) equals the Spark read filtered to round k, and
+    opens only the files tagged k plus the untagged ones."""
+    import pyarrow.parquet as pq
 
-
-def test_read_pruned_equals_filtered_read_and_skips(spark, cat):
-    # 8 appends of disjoint x-ranges -> 8 files with tight stats
-    for base in range(0, 80, 10):
-        cat.append(
-            spark.range(base, base + 10).withColumnRenamed("id", "x").coalesce(1),
-            "t",
+    for r in range(3):
+        cat.overwrite_partition(
+            spark.range(4).withColumn("round", F.lit(r)).coalesce(1), "t", r
         )
-    pruned = cat.read_pruned(spark, "t", {"x": (25, 34)})
-    want = sorted(
-        r["x"]
-        for r in cat.read(spark, "t")
-        .filter((F.col("x") >= 25) & (F.col("x") <= 34))
-        .collect()
+    # an untagged file (a whole-table-style write) holding rounds 1 and 7
+    cat.append(
+        spark.createDataFrame([(10, 1), (11, 7)], "id long, round int").coalesce(1),
+        "t",
     )
-    assert sorted(r["x"] for r in pruned.collect()) == want == list(range(25, 35))
-    assert pruned._graft_files_total == 8
-    assert pruned._graft_files_scanned == 2  # only the two overlapping files
+    entries = cat._latest_entries("t")
+    allowed = {e["path"] for e in entries if e["part"] in (1, None)}
+    assert len(allowed) == 2 and len(entries) == 4
 
-    # open-ended bound
-    hi = cat.read_pruned(spark, "t", {"x": (70, None)})
-    assert hi._graft_files_scanned == 1 and hi.count() == 10
+    opened = []
+    real = pq.ParquetFile
 
-    # empty selection: no file overlaps, schema preserved
-    none = cat.read_pruned(spark, "t", {"x": (1000, 2000)})
-    assert none._graft_files_scanned == 0 and none.count() == 0
-    assert none.schema["x"].dataType.typeName() == "long"
+    def spy(path, *a, **k):
+        opened.append(path)
+        return real(path, *a, **k)
 
+    monkeypatch.setattr(pq, "ParquetFile", spy)
+    got = sorted((r["id"], r["round"]) for r in cat.rows("t", part=1))
+    assert set(opened) == allowed
+    monkeypatch.setattr(pq, "ParquetFile", real)
 
-def test_read_pruned_missing_stats_is_safe(spark, cat):
-    import json as _json
+    want = sorted(
+        (r.id, r.round) for r in cat.read(spark, "t").filter(F.col("round") == 1).collect()
+    )
+    assert got == want == [(0, 1), (1, 1), (2, 1), (3, 1), (10, 1)]
+    assert cat.rows("t", part=5) == []
+    assert len(cat.rows("t")) == 14
+    # the largest round: tags 0-2, and 7 inside the untagged file
+    assert cat.max_part("t") == 7
+    assert cat.max_part("nope") is None
 
-    cat.overwrite(spark.range(10).withColumnRenamed("id", "x"), "t")
-    # simulate a pre-stats manifest: strip the stats key in place
-    v = cat.snapshot_id("t")
-    mp = cat._manifest_path("t", v)
-    m = _json.load(open(mp))
-    for e in m["files"]:
-        e.pop("stats", None)
-    _json.dump(m, open(mp, "w"))
-    pruned = cat.read_pruned(spark, "t", {"x": (3, 5)})
-    assert pruned._graft_files_scanned == pruned._graft_files_total  # kept all
-    assert sorted(r["x"] for r in pruned.collect()) == [3, 4, 5]

@@ -9,6 +9,8 @@
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -100,6 +102,36 @@ def test_per_round_stats_match(crawled):
         for k in ("round", "scheduled", "fetched", "failed",
                   "seen_total", "frontier_pending"):
             assert got[k] == exp[k], (k, got, exp)
+
+
+def test_control_reads_start_no_spark_job(spark, crawled):
+    """Planning a table read and the engine's checkpoint/meta reads come
+    from the catalog manifest and driver-side footers: none starts a Spark
+    job (counted under a job group on the statusTracker)."""
+    eng, _ = crawled
+    sc = spark.sparkContext
+    group = "control-reads"
+    sc.setJobGroup(group, "reads that must not start a job")
+    try:
+        eng.catalog.read(spark, eng.T_FRONTIER)
+        eng.catalog.read(spark, eng.T_CKPT)
+        last = eng.next_round() - 1
+        assert last == ROUNDS - 1
+        assert eng._latest_ckpt_row(last)["round"] == last
+        eng._check_bloom_params()
+        # jobs reach the status store in order through the listener bus:
+        # once this fence job shows up, any job started above has too
+        sc.setJobGroup(group + "-fence", "fence")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(group + "-fence"):
+        assert time.monotonic() < deadline, "fence job never reached the status store"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group) == []
 
 
 def test_resume_after_kill_converges(spark, tmp_path):
@@ -320,11 +352,11 @@ def test_transient_write_failure_mid_commit_converges(spark, tmp_path):
     real_append = cat.append
     fails = {"n": 0}
 
-    def flaky_append(df, name, part=None):
+    def flaky_append(df, name):
         if name == flaky.T_SEEN and fails["n"] == 0:
             fails["n"] += 1
             raise OSError("injected transient write failure")
-        return real_append(df, name, part=part)
+        return real_append(df, name)
 
     cat.append = flaky_append
     with pytest.raises(OSError, match="transient"):
@@ -483,10 +515,10 @@ def test_force_recrawl_rerun_completes_after_crash(spark, tmp_path):
     # crash: shard + seen deletes commit, frontier append fails
     cat = eng.catalog
     real_append = cat.append
-    def boom(df, name, part=None):
+    def boom(df, name):
         if name == eng.T_FRONTIER:
             raise OSError("injected crash before re-admission")
-        return real_append(df, name, part=part)
+        return real_append(df, name)
     cat.append = boom
     with pytest.raises(OSError):
         eng.force_recrawl(urls, priority=100.0)
