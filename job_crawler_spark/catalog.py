@@ -6,32 +6,38 @@ atomically and a killed job resumes from the last snapshot. This sandbox has
 no Iceberg runtime jars, so this module provides the same API shape over
 plain parquet + JSON manifests (SURVEY.md §7.3 "Iceberg availability"):
 
-- a table = a directory of immutable parquet data files + numbered manifest
-  files, each manifest listing the data files visible in that snapshot;
-- commit = write data files, write ``manifest-<n>.json``, then atomically
+- a table = a directory of immutable write directories + numbered manifest
+  files, each manifest listing the writes visible in that snapshot;
+- commit = write a data directory, write ``manifest-<n>.json``, then atomically
   rename a pointer file — readers always see a complete snapshot;
-- append = new manifest referencing old files + new files (no rewrite);
-- overwrite = new manifest referencing only new files (old files remain for
-  time travel until expired);
-- overwrite_partition = replace only the files tagged with one partition
+- append = new manifest referencing the old writes + the new one (no rewrite);
+- overwrite = new manifest referencing only the new write (old writes
+  remain for time travel until expired);
+- overwrite_partition = replace only the writes tagged with one partition
   value (Iceberg dynamic partition overwrite / ``DELETE WHERE part = v``
   then append): per-round commits stay O(round), not O(table);
 - read(version=k) = time travel, which is what mid-frontier resume uses;
-- row_count = manifest/footer metadata only (Iceberg carries record counts
-  in manifests) — table stats never cost a Spark scan.
+- row_count = manifest metadata only (Iceberg carries record counts in
+  manifests) — table stats never cost a Spark scan.
 
-Manifest file entries are dicts ``{"path", "part", "rows"}``; plain-string
-entries from older manifests are still readable (untagged, rows read from
-the parquet footer on demand). The manifest is the only source of what a
-table holds:
+A manifest lists one entry per write, ``{"path", "part", "rows"}``:
+``path`` is the write's ``data-<uuid>`` directory relative to its table
+directory, ``part`` its partition tag (None when untagged) and ``rows`` its
+row count from the parquet footers. Readers open whole directories (Spark
+and pyarrow both skip the ``_SUCCESS``/``.crc`` files), so a catalog is
+portable: copied or restored under another root it reads, and a crawl
+resumes, from the copy alone. ``expire_snapshots`` deletes whole write
+directories that no kept manifest names. The manifest is the only source
+of what a table holds:
 
-- schema: ``read`` plans the data files with the manifest's schema, so no
-  Spark job re-reads parquet footers to infer it;
+- schema: ``read`` plans the write directories with the manifest's schema,
+  so no Spark job re-reads parquet footers to infer it;
 - control rows: ``rows`` and ``max_part`` answer the engine's small
   checkpoint/meta reads on the driver with pyarrow, no Spark job. The
-  ``part`` tag of a round-keyed file names the ``round`` value of its rows,
-  so the tag alone picks the files of one round; untagged files (a
-  whole-table overwrite) may hold any round and are always opened.
+  ``part`` tag of a round-keyed write names the round of its rows (the
+  ``round`` column that ``rows``/``max_part`` read), so the tag alone
+  picks the writes of one round; untagged writes (a whole-table
+  overwrite) may hold any round and are always opened.
 
 On a real cluster you'd swap this for the Iceberg Spark catalog with zero
 changes above this module — the engine only calls read/rows/max_part/
@@ -53,14 +59,20 @@ from pyspark.sql import types as T
 
 _POINTER = "_latest"
 
-# The column a partition tag stands for: every row of a file tagged ``k``
-# has ``round == k`` (the engine's round-keyed tables).
+# The column a partition tag stands for in rows()/max_part(): every row of a
+# write tagged ``k`` has ``round == k`` (the engine's round-keyed control
+# tables; ``seen`` keys its writes by ``first_round`` instead).
 PART_COLUMN = "round"
 
 
 @dataclass
 class Catalog:
     root: str
+
+    def __post_init__(self) -> None:
+        # resolved once, so pyarrow and the Spark JVM read the same files
+        # even after the process changes directory
+        self.root = os.path.abspath(self.root)
 
     def _tdir(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -84,14 +96,6 @@ class Catalog:
         with open(self._manifest_path(name, version)) as f:
             return json.load(f)
 
-    @staticmethod
-    def _entry_path(entry) -> str:
-        return entry["path"] if isinstance(entry, dict) else entry
-
-    @staticmethod
-    def _entry_part(entry):
-        return entry.get("part") if isinstance(entry, dict) else None
-
     def _commit(self, name: str, entries: list, schema_json: str) -> int:
         """Write manifest-<n+1> then atomically flip the pointer."""
         tdir = self._tdir(name)
@@ -107,20 +111,23 @@ class Catalog:
         return version
 
     # -- data-file I/O ---------------------------------------------------------
-    def _write_data(self, df: DataFrame, name: str, part=None) -> list[dict]:
-        """Write df as immutable parquet files under a fresh uuid dir.
-        Returns manifest entries carrying partition tag + footer row counts
-        (metadata only — no data scan)."""
-        out = os.path.join(self._tdir(name), f"data-{uuid.uuid4().hex}")
+    def _write_data(self, df: DataFrame, name: str, part=None) -> dict:
+        """Write df as an immutable ``data-<uuid>`` directory; returns its
+        manifest entry, rows counted from the parquet footers (metadata
+        only — no data scan)."""
+        rel = f"data-{uuid.uuid4().hex}"
+        out = os.path.join(self._tdir(name), rel)
         df.write.mode("overwrite").parquet(out)
-        paths = [
-            os.path.join(out, f) for f in sorted(os.listdir(out))
-            if f.endswith(".parquet")
-        ]
-        return [
-            {"path": p, "part": part, "rows": pq.ParquetFile(p).metadata.num_rows}
-            for p in paths
-        ]
+        rows = sum(
+            pq.ParquetFile(os.path.join(out, f)).metadata.num_rows
+            for f in os.listdir(out) if f.endswith(".parquet")
+        )
+        return {"path": rel, "part": part, "rows": rows}
+
+    def _read_dir(self, name: str, entry: dict, columns=None) -> list[dict]:
+        """One write's rows as dicts, read on the driver with pyarrow."""
+        path = os.path.join(self._tdir(name), entry["path"])
+        return pq.read_table(path, columns=columns).to_pylist()
 
     def read(
         self,
@@ -142,18 +149,18 @@ class Catalog:
         if not manifest["files"]:
             return spark.createDataFrame([], schema=sch)
         return spark.read.schema(sch).parquet(
-            *[self._entry_path(e) for e in manifest["files"]]
+            *[os.path.join(self._tdir(name), e["path"]) for e in manifest["files"]]
         )
 
     def rows(self, name: str, part=None) -> list[dict]:
         """Rows of the latest snapshot as dicts, read on the driver with
         pyarrow — no Spark job; for small control tables. With ``part``,
-        only the rows whose ``round`` equals it, opening just the files
+        only the rows whose ``round`` equals it, opening just the writes
         tagged ``part`` and the untagged ones."""
         out = []
         for e in self._latest_entries(name):
-            if part is None or self._entry_part(e) in (part, None):
-                out += pq.ParquetFile(self._entry_path(e)).read().to_pylist()
+            if part is None or e["part"] in (part, None):
+                out += self._read_dir(name, e)
         if part is None:
             return out
         return [r for r in out if r[PART_COLUMN] == part]
@@ -161,19 +168,16 @@ class Catalog:
     def max_part(self, name: str):
         """Largest ``round`` in the latest snapshot (None when it holds no
         rows): the largest partition tag, or a larger value inside an
-        untagged file — the only files opened (``round`` column only)."""
+        untagged write — the only writes opened (``round`` column only)."""
         vals = []
         for e in self._latest_entries(name):
-            tag = self._entry_part(e)
-            if tag is not None:
-                vals.append(tag)
+            if e["part"] is not None:
+                vals.append(e["part"])
             else:
-                vals += pq.ParquetFile(self._entry_path(e)).read(
-                    columns=[PART_COLUMN]
-                ).column(PART_COLUMN).to_pylist()
+                vals += [r[PART_COLUMN] for r in self._read_dir(name, e, [PART_COLUMN])]
         return max(vals, default=None)
 
-    def _latest_entries(self, name: str) -> list:
+    def _latest_entries(self, name: str) -> list[dict]:
         v = self.snapshot_id(name)
         return self._read_manifest(name, v)["files"] if v >= 0 else []
 
@@ -187,62 +191,54 @@ class Catalog:
         )
 
     def overwrite(self, df: DataFrame, name: str, part=None) -> int:
-        """Replace the whole table. ``part`` tags the new files so a later
-        overwrite_partition(part) can replace them selectively."""
-        entries = self._write_data(df, name, part=part)
-        return self._commit(name, entries, df.schema.json())
+        """Replace the whole table. ``part`` tags the new write so a later
+        overwrite_partition(part) can replace it selectively."""
+        entry = self._write_data(df, name, part=part)
+        return self._commit(name, [entry], df.schema.json())
 
     def append(self, df: DataFrame, name: str) -> int:
-        new_entries = self._write_data(df, name)
+        entry = self._write_data(df, name)
         return self._commit(
-            name, self._latest_entries(name) + new_entries, df.schema.json()
+            name, self._latest_entries(name) + [entry], df.schema.json()
         )
 
     def overwrite_partition(self, df: DataFrame, name: str, part) -> int:
-        """Dynamic partition overwrite: replace ONLY the files tagged with
+        """Dynamic partition overwrite: replace ONLY the writes tagged with
         ``part`` — the Iceberg ``INSERT OVERWRITE ... PARTITION`` / row-level
         ``DELETE WHERE part = v`` + append path. Commit cost is O(this
         partition's data), independent of table history, so a round-keyed
         writer stays O(round) instead of O(rounds^2) cumulative. Untagged
-        legacy entries are never touched."""
-        kept = [
-            e for e in self._latest_entries(name) if self._entry_part(e) != part
-        ]
-        new_entries = self._write_data(df, name, part=part)
-        return self._commit(name, kept + new_entries, df.schema.json())
+        writes are never touched."""
+        kept = [e for e in self._latest_entries(name) if e["part"] != part]
+        entry = self._write_data(df, name, part=part)
+        return self._commit(name, kept + [entry], df.schema.json())
 
     def is_pure_append(self, name: str, from_v: int, to_v: int) -> bool:
-        """True when every file of snapshot ``from_v`` is still present in
-        ``to_v`` — i.e. the lineage between them only ADDED files. An
-        overwrite (round commit) replaces files and breaks the superset.
+        """True when every write of snapshot ``from_v`` is still present in
+        ``to_v`` — i.e. the lineage between them only ADDED writes. An
+        overwrite (round commit) replaces writes and breaks the superset.
         Lets a crash-healer distinguish adoptable append-only progress from
         a crashed overwrite that must be replayed instead."""
         if to_v < from_v:
             return False
-        old = {self._entry_path(e) for e in self._read_manifest(name, from_v)["files"]}
-        new = {self._entry_path(e) for e in self._read_manifest(name, to_v)["files"]}
+        old = {e["path"] for e in self._read_manifest(name, from_v)["files"]}
+        new = {e["path"] for e in self._read_manifest(name, to_v)["files"]}
         return old <= new
 
     def row_count(self, name: str, version: int | None = None) -> int:
-        """Snapshot row count from manifest metadata (footers for legacy
-        untagged entries) — no Spark job, the Iceberg-manifest way."""
+        """Snapshot row count from manifest metadata — no Spark job, the
+        Iceberg-manifest way."""
         v = self.snapshot_id(name) if version is None else version
         if v < 0:
             return 0
-        total = 0
-        for e in self._read_manifest(name, v)["files"]:
-            if isinstance(e, dict) and e.get("rows") is not None:
-                total += e["rows"]
-            else:
-                total += pq.ParquetFile(self._entry_path(e)).metadata.num_rows
-        return total
+        return sum(e["rows"] for e in self._read_manifest(name, v)["files"])
 
     def expire_snapshots(
         self, name: str, keep_last: int = 5, pin_floor: int | None = None
     ) -> None:
         """Retention (reference backup cleanup, backup_manager.py:88-101):
-        drop manifests older than the last ``keep_last`` and delete data
-        files no newer manifest references.
+        drop manifests older than the last ``keep_last`` and delete every
+        write directory no kept manifest names.
 
         ``pin_floor``: lowest snapshot version still referenced by a
         checkpoint (time-travel resume reads it) — never expired even when
@@ -256,28 +252,18 @@ class Catalog:
         if pin_floor is not None:
             floor = min(floor, max(0, pin_floor))
         keep_versions = set(range(floor, latest + 1))
-        live_files: set[str] = set()
+        live: set[str] = set()
         tdir = self._tdir(name)
         for v in keep_versions:
-            p = self._manifest_path(name, v)
-            if os.path.exists(p):
-                live_files.update(
-                    self._entry_path(e)
-                    for e in self._read_manifest(name, v)["files"]
-                )
+            if os.path.exists(self._manifest_path(name, v)):
+                live.update(e["path"] for e in self._read_manifest(name, v)["files"])
         for entry in os.listdir(tdir):
             if entry.startswith("manifest-"):
                 v = int(entry[len("manifest-"):-len(".json")])
                 if v not in keep_versions:
                     os.remove(os.path.join(tdir, entry))
-            elif entry.startswith("data-"):
-                ddir = os.path.join(tdir, entry)
-                for f in os.listdir(ddir):
-                    full = os.path.join(ddir, f)
-                    if f.endswith(".parquet") and full not in live_files:
-                        os.remove(full)
-                if not os.listdir(ddir):
-                    shutil.rmtree(ddir, ignore_errors=True)
+            elif entry.startswith("data-") and entry not in live:
+                shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._tdir(name), ignore_errors=True)

@@ -13,15 +13,16 @@ the north rule's round-based URL-frontier crawl:
     5. expand outlinks -> new frontier candidates, dedup:
          Bloom prefilter (broadcast shards) -> exact anti-join vs seen
     6. COMMIT, in replay-idempotent order:
-         documents (round-keyed append) -> seen (anti-join append) ->
-         seen_shards (OR-merge) -> frontier (overwrite) ->
+         schedule_log, documents, seen_shards delta, seen (each a
+         round-keyed rewrite) -> frontier (overwrite) ->
          crawl_log (per-partition lineage, round-keyed rewrite) ->
          checkpoint marker (LAST)
 
 Because the checkpoint marker commits last and every earlier write is
-idempotent (round-keyed rewrite / anti-join-append / snapshot-derived
-overwrite), a job killed mid-round replays exactly that round and converges
-to the same state — the kill-and-resume contract of BASELINE.json.
+idempotent (a round-keyed rewrite replaces the replay's own partition; the
+frontier overwrite is derived from the pinned snapshot), a job killed
+mid-round replays exactly that round and converges to the same state — the
+kill-and-resume contract of BASELINE.json.
 Determinism: batch selection is a pure function of the frontier snapshot
 (total order (priority DESC, url_canon ASC)), fetch/parse are deterministic,
 so replayed rounds are bit-identical.
@@ -404,12 +405,11 @@ class CrawlEngine:
             # Persist the adoption BEFORE any round write: if this round
             # later crashes after its frontier OVERWRITE but before its
             # checkpoint, the replay sees is_pure_append=false and cannot
-            # re-adopt — an unpersisted adoption would make it recompute a
-            # SMALLER batch from the stale pin, rewriting sched/docs/shard
-            # partitions without the adopted seeds while their seen rows
-            # from the crashed attempt persist (URLs in seen with no doc,
-            # gone from the frontier). Repinning round-(N-1) first makes
-            # every replay read the same adopted snapshot.
+            # re-adopt — an unpersisted adoption would make it recompute
+            # the round from the stale pin, whose frontier lacks the
+            # adopted seeds, so its frontier overwrite would drop them from
+            # the crawl for good. Repinning round-(N-1) first makes every
+            # replay read the same adopted snapshot.
             pending = int(cat.row_count(self.T_FRONTIER, version=latest_fv))
             self._repin_checkpoint(
                 round_no - 1,
@@ -467,9 +467,10 @@ class CrawlEngine:
 
         batch_urls = batch.select("url_canon")
         remaining = frontier.join(batch_urls, "url_canon", "left_anti")
+        # the batch is drawn from the pinned frontier, so this excludes it too
         not_pending = candidates.join(
             frontier.select("url_canon"), "url_canon", "left_anti"
-        ).join(batch_urls, "url_canon", "left_anti")
+        )
 
         # Bloom prefilter (provably-new skips the anti-join shuffle), exact
         # anti-join authoritative for the maybe-seen remainder (T4). Pinned
@@ -485,9 +486,9 @@ class CrawlEngine:
         ).select("url_canon", "host", "depth", "priority", "round")
 
         # -------- commit (idempotent steps, checkpoint marker last) ---------
-        # Writes are computed against the LATEST snapshots so a replay after
-        # a partial commit never duplicates rows; reads above used the pinned
-        # snapshots so the computed round is identical either way.
+        # Every write is a function of the pinned reads above, so a replay
+        # after a partial commit computes the same round and its round-keyed
+        # rewrites replace the crashed attempt's partitions.
         # spans_parsed rides the docs write as an observe metric instead of
         # a second pass over the enriched frame (control-plane scalars fold
         # into actions that already run — the round-scaling fix).
@@ -507,32 +508,24 @@ class CrawlEngine:
         )
         _mark("fetch_parse_merge_docs")
 
-        latest_seen = cat.read(spark, self.T_SEEN)
-        new_seen = anti_join_seen(
-            batch.select("url_canon").withColumn("first_round", F.lit(round_no)),
-            latest_seen,
-            "url_canon",
-        ).cache()
-
         # shards BEFORE seen: the invariant is shards ⊇ seen at every commit
         # point — a crash between the two leaves extra filter entries
         # (harmless false-positive side), never missing ones (which would
-        # break the provably-new shortcut). The delta is round-keyed and
-        # built from the BATCH (a pure function of the pinned frontier
-        # snapshot), NOT from new_seen (which depends on the latest seen
-        # table and would come out empty on replay, erasing the crashed
-        # attempt's delta) — so a replay REWRITES an identical delta.
+        # break the provably-new shortcut). Both are round-keyed and built
+        # from the BATCH (a pure function of the pinned frontier snapshot),
+        # so a replay REWRITES an identical delta and seen partition.
         shard_delta = self._build_filter_shards(
-            batch.select("url_canon")
+            batch_urls
         ).withColumn("round", F.lit(round_no))
-        self._round_keyed_write(self.T_SHARDS, shard_delta, round_no)
-        shards_v = cat.snapshot_id(self.T_SHARDS)
+        shards_v = self._round_keyed_write(self.T_SHARDS, shard_delta, round_no)
         _mark("shard_delta_write")
 
-        cat.append(new_seen, self.T_SEEN)
-        seen_v = cat.snapshot_id(self.T_SEEN)
-        new_seen.unpersist()
-        _mark("seen_append")
+        seen_v = self._round_keyed_write(
+            self.T_SEEN,
+            batch.select("url_canon", F.lit(round_no).alias("first_round")),
+            round_no,
+        )
+        _mark("seen_append")  # the phase name perfbench reports
 
         new_frontier = remaining.unionByName(discovered)
         frontier_v = cat.overwrite(new_frontier, self.T_FRONTIER)
@@ -593,11 +586,12 @@ class CrawlEngine:
         _mark("checkpoint_write")
         return {**stats_row, "done": False, "phase_seconds": _phases}
 
-    def _round_keyed_write(self, name: str, df: DataFrame, round_no: int) -> None:
-        """Replace exactly this round's files (dynamic partition overwrite):
-        a replay deletes-and-rewrites only its own round's data, so the
-        commit costs O(round) — not O(total history) — per round."""
-        self.catalog.overwrite_partition(df, name, round_no)
+    def _round_keyed_write(self, name: str, df: DataFrame, round_no: int) -> int:
+        """Replace exactly this round's write (dynamic partition overwrite)
+        and return the new snapshot version: a replay deletes-and-rewrites
+        only its own round's data, so the commit costs O(round) — not
+        O(total history) — per round."""
+        return self.catalog.overwrite_partition(df, name, round_no)
 
     def expire_old_snapshots(self, keep_last: int = 5) -> None:
         """Snapshot retention that can never break kill-and-resume: the
@@ -723,7 +717,7 @@ class CrawlEngine:
         1. delete each URL's fingerprint from the shard delta of the round
            that inserted it (seen.first_round; distributed mapInPandas);
         2. delete the rows from the exact seen table (Iceberg DELETE WHERE —
-           the stand-in rewrites; real Iceberg prunes to matching files);
+           the stand-in rewrites the seen partitions of the same rounds);
         3. re-admit the URLs to the frontier at the given priority;
         4. update the latest checkpoint's pinned versions so the next round
            (or a resume) reads the post-delete snapshots.
@@ -753,7 +747,8 @@ class CrawlEngine:
         victims = seen.join(urls, "url_canon").cache()
         n_victims = victims.count()
 
-        # 1. shard deltas: rewrite only the rounds that inserted these keys
+        # 1.+2. shard deltas and seen: rewrite only the rounds that inserted
+        # these keys
         if n_victims > 0:
             shards = cat.read(spark, self.T_SHARDS)
             affected = [
@@ -772,9 +767,16 @@ class CrawlEngine:
                 )
             rewritten.unpersist()
 
-            # 2. exact seen table
-            kept = seen.join(victims.select("url_canon"), "url_canon", "left_anti")
-            cat.overwrite(kept, self.T_SEEN)
+            kept = (
+                seen.filter(F.col("first_round").isin(affected))
+                .join(victims.select("url_canon"), "url_canon", "left_anti")
+                .cache()
+            )
+            for rnd in affected:
+                cat.overwrite_partition(
+                    kept.filter(F.col("first_round") == rnd), self.T_SEEN, rnd
+                )
+            kept.unpersist()
 
         # 3. frontier re-admission: victims + any url a crashed predecessor
         # already removed from seen but never re-admitted (and never-seen

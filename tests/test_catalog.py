@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -54,6 +56,23 @@ def test_expire_snapshots_keeps_recent(spark, cat):
         cat._read_manifest("t", 0)
 
 
+def test_expire_snapshots_deletes_whole_write_directories(spark, cat):
+    """Expiry removes every write directory no kept manifest names, even
+    though Spark leaves _SUCCESS/.crc files in it."""
+    for i in range(6):
+        cat.overwrite(spark.range(i + 1), "t")
+    cat.expire_snapshots("t", keep_last=2)
+    tdir = os.path.join(cat.root, "t")
+    assert len([d for d in os.listdir(tdir) if d.startswith("data-")]) == 2
+    assert cat.read(spark, "t", version=4).count() == 5
+
+
+def test_relative_root_resolves_once(tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    cat = Catalog("wh")
+    assert cat.root == os.path.join(str(tmp_path), "wh")
+
+
 def test_overwrite_partition_replaces_only_that_partition(spark, cat):
     cat.overwrite_partition(spark.range(3).withColumn("r", F.lit(0)), "p", 0)
     cat.overwrite_partition(spark.range(5).withColumn("r", F.lit(1)), "p", 1)
@@ -79,21 +98,6 @@ def test_row_count_from_manifest_metadata(spark, cat):
     assert cat.row_count("nope") == 0
 
 
-def test_row_count_legacy_string_entries(spark, cat):
-    """Manifests written before entries carried row counts (plain path
-    strings) still count correctly via parquet footers."""
-    import json
-
-    cat.overwrite(spark.range(9), "legacy")
-    v = cat.snapshot_id("legacy")
-    p = cat._manifest_path("legacy", v)
-    m = json.load(open(p))
-    m["files"] = [e["path"] for e in m["files"]]  # downgrade to old format
-    json.dump(m, open(p, "w"))
-    assert cat.row_count("legacy") == 9
-    assert cat.read(spark, "legacy").count() == 9
-
-
 def test_expire_snapshots_respects_pin_floor(spark, cat):
     for i in range(6):
         cat.overwrite(spark.range(i + 1), "pin")
@@ -109,7 +113,7 @@ def test_expire_snapshots_respects_pin_floor(spark, cat):
 
 def test_rows_reads_tagged_and_untagged_files_only(spark, cat, monkeypatch):
     """rows(name, part=k) equals the Spark read filtered to round k, and
-    opens only the files tagged k plus the untagged ones."""
+    opens only the writes tagged k plus the untagged ones."""
     import pyarrow.parquet as pq
 
     for r in range(3):
@@ -122,20 +126,23 @@ def test_rows_reads_tagged_and_untagged_files_only(spark, cat, monkeypatch):
         "t",
     )
     entries = cat._latest_entries("t")
-    allowed = {e["path"] for e in entries if e["part"] in (1, None)}
+    allowed = {
+        os.path.join(cat.root, "t", e["path"])
+        for e in entries if e["part"] in (1, None)
+    }
     assert len(allowed) == 2 and len(entries) == 4
 
     opened = []
-    real = pq.ParquetFile
+    real = pq.read_table
 
     def spy(path, *a, **k):
         opened.append(path)
         return real(path, *a, **k)
 
-    monkeypatch.setattr(pq, "ParquetFile", spy)
+    monkeypatch.setattr(pq, "read_table", spy)
     got = sorted((r["id"], r["round"]) for r in cat.rows("t", part=1))
     assert set(opened) == allowed
-    monkeypatch.setattr(pq, "ParquetFile", real)
+    monkeypatch.setattr(pq, "read_table", real)
 
     want = sorted(
         (r.id, r.round) for r in cat.read(spark, "t").filter(F.col("round") == 1).collect()

@@ -9,6 +9,7 @@
 
 from __future__ import annotations
 
+import shutil
 import time
 
 import pytest
@@ -35,6 +36,12 @@ def _engine(spark, tmp_path, name="wh") -> CrawlEngine:
         bloom_bits=1 << 16,
         bloom_k=5,
     )
+
+
+def _assert_seen_unique(spark, eng) -> None:
+    """Set comparisons hide a duplicated seen row; this does not."""
+    seen = eng.catalog.read(spark, eng.T_SEEN)
+    assert seen.count() == seen.select("url_canon").distinct().count()
 
 
 @pytest.fixture(scope="module")
@@ -167,6 +174,30 @@ def test_resume_after_kill_converges(spark, tmp_path):
         for r in resumed.catalog.read(spark, resumed.T_DOCS).select("doc_id", "spans").collect()
     }
     assert da == db
+    _assert_seen_unique(spark, resumed)
+
+
+def test_copied_catalog_resumes(spark, tmp_path):
+    """A catalog copied mid-crawl resumes from the copy alone (manifests
+    name write directories relative to their table): after the original is
+    deleted, one more round equals an uninterrupted 2-round run."""
+    full = _engine(spark, tmp_path, "full")
+    full.bootstrap(synth.seed_frontier(spark, 200))
+    full.run(2)
+
+    orig = _engine(spark, tmp_path, "orig")
+    orig.bootstrap(synth.seed_frontier(spark, 200))
+    orig.run(1)
+    shutil.copytree(tmp_path / "orig", tmp_path / "copy")
+    shutil.rmtree(tmp_path / "orig")
+
+    copy = _engine(spark, tmp_path, "copy")
+    assert copy.next_round() == 1
+    copy.run(1)
+    for table in (full.T_SEEN, full.T_FRONTIER, full.T_SCHED):
+        a = {tuple(r) for r in full.catalog.read(spark, table).collect()}
+        b = {tuple(r) for r in copy.catalog.read(spark, table).collect()}
+        assert a == b, table
 
 
 def test_resume_with_wrong_bloom_params_refuses(spark, tmp_path):
@@ -262,6 +293,67 @@ def test_cuckoo_replay_rewrites_delta_not_double_inserts(spark, tmp_path):
     a = {r.url_canon for r in full.catalog.read(spark, full.T_SEEN).collect()}
     b = {r.url_canon for r in resumed.catalog.read(spark, resumed.T_SEEN).collect()}
     assert a == b
+    _assert_seen_unique(spark, resumed)
+
+
+def test_crash_after_seen_write_then_force_recrawl_replays_exactly(spark, tmp_path):
+    """Round 1 crashes after its seen write, before its frontier overwrite;
+    a force_recrawl of a round-0 URL then changes round 1's batch. The
+    replay must replace the crashed attempt's seen rows: afterwards no URL
+    is both seen and pending, and round 1's seen rows are exactly what
+    round 1 scheduled."""
+    eng = CrawlEngine(
+        spark=spark,
+        catalog=Catalog(str(tmp_path / "seencrash")),
+        robots=synth.robots_df(spark),
+        round_seconds=2,
+        seen_filter="cuckoo",
+        bloom_shards=8,
+        cuckoo_buckets=1 << 10,
+    )
+    eng.bootstrap(synth.seed_frontier(spark, 300))
+    eng.run_round(0)
+
+    cat = eng.catalog
+    real_overwrite = cat.overwrite
+
+    def boom(df, name, part=None):
+        if name == eng.T_FRONTIER:
+            raise OSError("injected crash before the frontier overwrite")
+        return real_overwrite(df, name, part)
+
+    cat.overwrite = boom
+    with pytest.raises(OSError):
+        eng.run_round(1)
+    cat.overwrite = real_overwrite
+
+    # a round-0 URL on a host the crashed round 1 scheduled: re-admitted at
+    # top priority, it displaces one of that host's crashed-attempt URLs
+    sched = cat.read(spark, eng.T_SCHED)
+    crashed_hosts = {
+        r.host for r in sched.filter(F.col("round") == 1).select("host").collect()
+    }
+    target = sorted(
+        r.url_canon
+        for r in sched.filter(F.col("round") == 0).collect()
+        if r.host in crashed_hosts
+    )[0]
+    res = eng.force_recrawl(
+        spark.createDataFrame([(target,)], "url_canon string"), priority=100.0
+    )
+    assert res["recrawl"] == 1
+    assert eng.next_round() == 1
+    eng.run(1)
+
+    seen = cat.read(spark, eng.T_SEEN).collect()
+    pending = {r.url_canon for r in cat.read(spark, eng.T_FRONTIER).collect()}
+    assert {r.url_canon for r in seen} & pending == set()
+    sched1 = {
+        r.url_canon
+        for r in cat.read(spark, eng.T_SCHED).filter(F.col("round") == 1).collect()
+    }
+    assert target in sched1
+    assert sorted(r.url_canon for r in seen if r.first_round == 1) == sorted(sched1)
 
 
 def test_force_recrawl_readmits_and_refetches(spark, tmp_path):
@@ -347,21 +439,22 @@ def test_transient_write_failure_mid_commit_converges(spark, tmp_path):
     flaky.bootstrap(synth.seed_frontier(spark, N_SEEDS))
     flaky.run_round(0)
 
-    # inject: the seen-table append in round 1's commit sequence fails once
+    # inject: the seen-table write in round 1's commit sequence fails once
+    # (shards committed, seen and checkpoint not)
     cat = flaky.catalog
-    real_append = cat.append
+    real_op = cat.overwrite_partition
     fails = {"n": 0}
 
-    def flaky_append(df, name):
+    def flaky_op(df, name, part):
         if name == flaky.T_SEEN and fails["n"] == 0:
             fails["n"] += 1
             raise OSError("injected transient write failure")
-        return real_append(df, name)
+        return real_op(df, name, part)
 
-    cat.append = flaky_append
+    cat.overwrite_partition = flaky_op
     with pytest.raises(OSError, match="transient"):
         flaky.run_round(1)
-    cat.append = real_append
+    cat.overwrite_partition = real_op
 
     # retry = rerun the round; next_round still says 1 (no checkpoint landed)
     assert flaky.next_round() == 1
@@ -371,6 +464,7 @@ def test_transient_write_failure_mid_commit_converges(spark, tmp_path):
         a = {tuple(r) for r in full.catalog.read(spark, table).collect()}
         b = {tuple(r) for r in flaky.catalog.read(spark, table).collect()}
         assert a == b, table
+    _assert_seen_unique(spark, flaky)
 
 
 def _probe_engine(spark, tmp_path, name, **sizes):
