@@ -80,61 +80,15 @@ def _plan_modules():
     ]
 
 
-# The driver samples a subset of queries() per round, so insertion order
-# decides which entries get a fresh external-gate row. Order queries
-# least-recently-green first, derived from the committed CORRECTNESS_r*.json
-# artifacts: a query with no green row ever (e.g. one added this round)
-# sorts before everything else, and a query last green in round N-1 sorts
-# before one refreshed in round N. This self-rotates every round without a
-# hand-maintained list (names in old artifacts that no longer exist in
-# queries() are ignored; see tests/test_oracle_parity.py for the pin).
-
-
-def _last_green_rounds() -> dict[str, int]:
-    import glob
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
-            rows = json.load(open(path))
-        except (ValueError, OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict) or row.get("err") is not None:
-                continue
-            # hash_match for full value checks; rows-only checks (no oracle
-            # SQL) count as green when the row check passed.
-            green = row.get("hash_match")
-            if green is None:
-                green = row.get("rows_match")
-            if green:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def _ordered(merged: dict) -> dict:
-    last = _last_green_rounds()
-    pos = {k: i for i, k in enumerate(merged)}
-    return {
-        k: merged[k]
-        for k in sorted(merged, key=lambda k: (last.get(k, 0), pos[k]))
-    }
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _plan_modules():
         out.update(mod.QUERIES)
-    return _ordered(out)
+    return out
 
 
 def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
     for mod in _plan_modules():
         out.update(mod.ORACLES)
-    return _ordered(out)
+    return out

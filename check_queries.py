@@ -1,11 +1,11 @@
-"""Fast per-query oracle check for the optimization loop.
+"""Fast per-query oracle check.
 
 Usage: python check_queries.py q1 q2 ...   (checks at sf0.01 AND sf0.001)
        SPARK_GRAFT_CHECK_DIRS=/root/testdata/sf0.1 python check_queries.py q1
 
 Runs the same order-insensitive, type-faithful compare as sweep.py but only
 for the named queries, so a single changed query verifies in seconds instead
-of the 195 s full sweep.
+of a full sweep.
 """
 
 from __future__ import annotations

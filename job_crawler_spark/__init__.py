@@ -12,8 +12,8 @@ Spark's distributed execution model:
 - A URL-frontier crawl loop: canonicalize -> dedup (Bloom prefilter + exact
   anti-join) -> politeness window-rank scheduling -> fetch -> span parse ->
   checkpointed commit, resumable mid-frontier.
-- Training-data pipeline operators: exact/MinHash/SimHash/n-gram dedup,
-  embedding similarity search, text quality analytics, multimodal plumbing.
+- Training-data pipeline operators: MinHash/n-gram dedup, embedding
+  similarity search, text quality analytics.
 """
 
 __version__ = "0.1.0"

@@ -197,14 +197,18 @@ class CrawlEngine:
         """The persisted shard bitmaps/tables are only meaningful under the
         exact backend + parameters that built them — resuming with different
         ones would silently probe wrong bits (or crash on blob length).
-        Pinned at bootstrap, validated on every round."""
+        Pinned at bootstrap, validated on every round; a catalog without
+        the pinned row cannot be validated, so it is refused too."""
         rows = self.catalog.rows(self.T_BLOOM_META)
-        if not rows:
-            return  # pre-meta catalog (or fresh): nothing to validate against
-        meta = rows[0]
-        # catalogs written before the backend field existed are bloom-built
+        meta = rows[0] if rows else {}
+        if "backend" not in meta:
+            raise ValueError(
+                f"catalog has no {self.T_BLOOM_META} row with a backend "
+                "field (bootstrap always writes one); its seen_shards cannot "
+                "be checked against the engine's filter parameters"
+            )
         got = (
-            meta.get("backend", "bloom"),
+            meta["backend"],
             int(meta["n_shards"]),
             int(meta["m_bits"]),
             int(meta["k"]),

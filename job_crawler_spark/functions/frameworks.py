@@ -12,22 +12,8 @@ Catalyst expressions, fully codegen'd, shuffle-free.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Skill-classification vocabularies (reference main.py:605-655, U4) — the
-# four buckets of create_job_compatibility_template's user_profile.
-SKILL_BUCKETS: dict[str, tuple[str, ...]] = {
-    "programming_languages": (
-        "python", "javascript", "java", "c++", "c#", "ruby", "php", "go",
-        "rust",
-    ),
-    "frameworks": ("react", "vue", "angular", "django", "flask", "spring",
-                   "laravel"),
-    "tools": ("aws", "docker", "kubernetes", "git", "jenkins", "terraform"),
-    "databases": ("sql", "postgresql", "mysql", "mongodb", "redis",
-                  "elasticsearch"),
-}
 
 # Compatibility weights (reference main.py:665-700): 40/25/20/15.
 COMPAT_WEIGHTS = {
@@ -46,23 +32,6 @@ BENEFIT_CATEGORIES: dict[str, tuple[str, ...]] = {
     "pension": ("pension", "401k", "retirement"),
     "stock_options": ("equity", "stock", "options", "shares"),
 }
-
-
-def classify_skills_col(skills: Column) -> Column:
-    """array<string> skills -> struct of four bucket arrays (U4).
-
-    `filter` preserves the USER list's order (reference list-comprehension
-    semantics, main.py:605-655)."""
-
-    def bucket(vocab: tuple[str, ...]) -> Column:
-        vocab_arr = F.array(*[F.lit(v) for v in vocab])
-        return F.filter(
-            skills, lambda s: F.array_contains(vocab_arr, F.lower(s))
-        )
-
-    return F.struct(
-        *[bucket(v).alias(name) for name, v in SKILL_BUCKETS.items()]
-    )
 
 
 def benefit_categories_col(description_lc: Column) -> Column:
@@ -215,54 +184,3 @@ def skill_gap_cols(required: Column, current_lc: Column) -> dict[str, Column]:
             F.size(missing) > 2, F.slice(missing, 3, F.size(missing) - 2)
         ).otherwise(F.array().cast("array<string>")),
     }
-
-
-def enrich_jobs_with_frameworks(
-    jobs: DataFrame,
-    user_skills: list[str],
-    experience_years: int,
-    salary_expectation: int | None = None,
-    remote_preference: str = "hybrid",
-) -> DataFrame:
-    """End-to-end D2+D3 enrichment over a jobs DataFrame.
-
-    Parameter handling mirrors the reference: experience clamped >= 0,
-    remote preference lowered and defaulted to hybrid (main.py:592-597)."""
-    from job_crawler_spark.functions.text import features_col
-
-    experience_years = max(0, experience_years)
-    remote_preference = remote_preference.lower()
-    if remote_preference not in ("remote", "hybrid", "onsite"):
-        remote_preference = "hybrid"
-    user_lc = F.array(*[F.lit(s.lower()) for s in user_skills])
-
-    feats = features_col(
-        F.col("description"),
-        F.col("title"),
-        F.col("salary_min").cast("double"),
-        F.col("salary_max").cast("double"),
-    )
-    out = jobs.withColumn("features", feats).withColumn(
-        "framework",
-        analysis_framework_col(
-            F.col("title"), F.col("company"), F.col("description")
-        ),
-    )
-    mid = F.col("features.salary_info.average")
-    exp_gap = F.lit(0.0)  # job postings rarely encode an exact number; the
-    # reference likewise scores experience via the LLM — 0 gap = neutral
-    return out.withColumn(
-        "compatibility",
-        compatibility_score_col(
-            F.col("features.tech_stack"),
-            user_lc,
-            mid,
-            F.lit(salary_expectation).cast("double"),
-            F.col("features.remote_policy"),
-            F.lit(remote_preference),
-            exp_gap,
-        ),
-    ).withColumn(
-        "benefit_categories",
-        benefit_categories_col(F.lower(F.coalesce(F.col("description"), F.lit("")))),
-    )

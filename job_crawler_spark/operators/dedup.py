@@ -65,118 +65,11 @@ def first_wins_agg(
     ).select(*df.columns)
 
 
-def dedup_company_title(df: DataFrame, arrival_col: str = "arrival_idx") -> DataFrame:
-    """The reference's in-batch dedup key: lower(company)_lower(title) with
-    null/empty-key rows dropped (main.py:517-525, P3)."""
-    keyed = df.filter(
-        F.col("title").isNotNull()
-        & (F.col("title") != "")
-        & F.col("company").isNotNull()
-        & (F.col("company") != "")
-    ).withColumn(
-        "dedup_key",
-        F.concat_ws("_", F.lower(F.col("company")), F.lower(F.col("title"))),
-    )
-    return first_wins(keyed, ["dedup_key"], [arrival_col]).drop("dedup_key")
-
-
 def anti_join_seen(
     batch: DataFrame, seen: DataFrame, key: str = "url_canon"
 ) -> DataFrame:
     """Rows of ``batch`` whose key is NOT in ``seen`` (exact, authoritative)."""
     return batch.join(seen.select(key), on=key, how="left_anti")
-
-
-SIMHASH_BITS = 32
-
-
-def simhash_col(tokens, bits: int = SIMHASH_BITS):
-    """Per-document SimHash signature as a pure column expression.
-
-    Classic Charikar SimHash over the token multiset: each token hashes to
-    ``bits`` bits (here: first 8 hex chars of MD5 — chosen so DuckDB computes
-    the identical value for the oracle), each bit votes +1/-1, and the
-    signature keeps the sign of each bit's vote total.
-
-    Scale: this is a NARROW projection — a single higher-order fold per row,
-    no explode, no shuffle, whole computation inside the scan stage. At
-    10^10 docs the simhash stage costs exactly one pass over the text; only
-    the subsequent band self-join shuffles, keyed by (band, 8-bit key).
-    """
-    from job_crawler_spark.functions.compat import bind_once
-
-    hashes = F.transform(
-        tokens,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"),
-    )
-
-    def fold(hs):
-        zero = F.array(*([F.lit(0).cast("long")] * bits))
-        votes = F.aggregate(
-            hs,
-            zero,
-            lambda acc, h: F.zip_with(
-                acc,
-                F.array(
-                    *[
-                        F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1)
-                        .otherwise(-1)
-                        .cast("long")
-                        for i in range(bits)
-                    ]
-                ),
-                lambda a, v: a + v,
-            ),
-        )
-
-        def assemble(v):
-            out = F.lit(0).cast("long")
-            for i in range(bits):
-                out = out + F.when(
-                    F.element_at(v, i + 1) > 0, F.lit(1 << i).cast("long")
-                ).otherwise(F.lit(0).cast("long"))
-            return out
-
-        return bind_once(votes, assemble)
-
-    return bind_once(hashes, fold)
-
-
-def simhash_bands_col(sim, n_bands: int = 4, band_bits: int = 8):
-    """Band keys for Hamming-LSH blocking: array of (band, key) structs.
-    Two docs within Hamming distance < n_bands share at least one band
-    (pigeonhole), so banding never misses pairs below that distance."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(sim, b * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-
-
-def exact_text_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact-content dedup for training-data pipelines: group by the MD5 of
-    whitespace-normalized lowercase text, keep the smallest doc_id
-    (deterministic representative). Hash-groupBy: one shuffle on a 128-bit
-    key — uniform, no skew, scales linearly."""
-    normed = F.md5(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    )
-    return (
-        docs.withColumn("content_hash", normed)
-        .groupBy("content_hash")
-        .agg(
-            F.min(F.col(id_col)).alias(id_col),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
-    )
 
 
 def _large_star(sym: DataFrame) -> DataFrame:

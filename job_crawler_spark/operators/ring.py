@@ -14,7 +14,7 @@ equivalent of its implicit "one shard owns everything".
 
 Determinism contract: ring positions are the first 8 hex digits of md5
 (the repo-wide split/shard convention, see plans/textops.py
-q_doc_split_assign) — any engine that can md5 reproduces the placement
+_split_bucket) — any engine that can md5 reproduces the placement
 bit-for-bit; no engine-private hash (xxhash64, murmur) anywhere.
 
 Scale shape: the ring itself is ``n_shards * n_replicas`` vnodes — a
@@ -89,25 +89,6 @@ def _assign_expr(pos: Column, vnodes: list[tuple[int, int]]) -> Column:
     return bind_once(pos, chain)
 
 
-def ring_assign(
-    hosts: DataFrame,
-    *,
-    n_shards: int,
-    n_replicas: int = 16,
-    host: str = "host",
-) -> DataFrame:
-    """Assign each host to its consistent-hash shard.
-
-    Returns the input plus ``ring_pos`` and ``shard``. Narrow: one
-    projection, no joins, no shuffle beyond what ``hosts`` already has.
-    """
-    vnodes = ring_vnodes(n_shards, n_replicas)
-    pos = host_ring_pos(F.col(host))
-    return hosts.withColumn("ring_pos", pos).withColumn(
-        "shard", _assign_expr(F.col("ring_pos"), vnodes)
-    )
-
-
 def ring_rebalance_plan(
     hosts: DataFrame,
     *,
@@ -133,13 +114,4 @@ def ring_rebalance_plan(
         .withColumn("shard_a", _assign_expr(pos, va))
         .withColumn("shard_b", _assign_expr(pos, vb))
         .withColumn("moved", F.col("shard_a") != F.col("shard_b"))
-    )
-
-
-def vnodes_sql_struct_list(vnodes: list[tuple[int, int]]) -> str:
-    """The same vnode list as a DuckDB struct-literal list, for oracles."""
-    return (
-        "["
-        + ", ".join(f"{{'pos': {p}, 'shard': {s}}}" for p, s in vnodes)
-        + "]"
     )

@@ -199,39 +199,6 @@ Q_SEEN_ANTIJOIN_SQL = f"""
 """
 
 
-def q_host_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew diagnostics the scheduler's salting decisions come from:
-    per-host frontier share (the previous-round counts in SURVEY.md §7.3)."""
-    f = frontier_df(spark, sf_dir)
-    from job_crawler_spark.functions.compat import stable_round
-
-    # total as a 1-row scalar agg broadcast (retention_split pattern):
-    # one Spark job instead of count()-then-query
-    total = f.agg(F.count(F.lit(1)).cast("double").alias("_total"))
-    return (
-        f.select(host_col(F.col("url")).alias("host"))
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n_urls"))
-        .crossJoin(F.broadcast(total))
-        .withColumn("share", stable_round(F.col("n_urls") / F.col("_total"), 6))
-        .select("host", "n_urls", "share")
-        .orderBy(F.col("n_urls").desc(), F.col("host").asc())
-    )
-
-
-def _host_skew_sql() -> str:
-    from job_crawler_spark.functions.compat import stable_round_sql
-
-    share = stable_round_sql(
-        "COUNT(*) / (SELECT CAST(COUNT(*) AS DOUBLE) FROM f)", 6
-    )
-    return f"""
-        WITH f AS ({FRONTIER_SQL})
-        SELECT {_HOST_SQL} AS host, COUNT(*) AS n_urls, {share} AS share
-        FROM f GROUP BY 1 ORDER BY n_urls DESC, host ASC
-    """
-
-
 def trap_frontier_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic trap-mix frontier derived from orders: 3 calendar-trap
     hosts (unbounded digit-templated paths), 2 session-id hosts (constant
@@ -1957,7 +1924,6 @@ QUERIES = {
     "politeness_rank": q_politeness_rank,
     "first_wins_dedup": q_first_wins_dedup,
     "seen_antijoin": q_seen_antijoin,
-    "host_skew_profile": q_host_skew_profile,
     "url_trap_signals": q_url_trap_signals,
     "sitemap_ingest": q_sitemap_ingest,
     "robots_rules": q_robots_rules,
@@ -1981,7 +1947,6 @@ ORACLES = {
     "politeness_rank": Q_POLITENESS_SQL,
     "first_wins_dedup": _first_wins_sql(),
     "seen_antijoin": Q_SEEN_ANTIJOIN_SQL,
-    "host_skew_profile": _host_skew_sql(),
     "url_trap_signals": _url_trap_sql(),
     "sitemap_ingest": _sitemap_ingest_sql(),
     "robots_rules": _robots_rules_sql(),

@@ -642,34 +642,6 @@ Q_USER_SESSIONS_SQL = f"""
 """
 
 
-def q_event_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U5 + A-ops: distinct users and share of total per event type."""
-    ev = _events(spark, sf_dir)
-    # total as a 1-row scalar agg broadcast (retention_split pattern):
-    # one Spark job instead of count()-then-query
-    total = ev.agg(F.count(F.lit(1)).cast("double").alias("_total"))
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .crossJoin(F.broadcast(total))
-        .withColumn("share", stable_round(F.col("n") / F.col("_total"), 6))
-        .select("event_type", "n", "n_users", "share")
-        .orderBy("event_type")
-    )
-
-
-Q_EVENT_TYPE_SHARE_SQL = f"""
-    SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
-           {stable_round_sql(
-               "COUNT(*) / (SELECT CAST(COUNT(*) AS DOUBLE) FROM events)", 6)}
-               AS share
-    FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
 def q_json_log_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F21 (ref json_formatter.py:35, health_checker.py:129): structured
     JSON log lines as a COLUMN op — to_json(struct(...)), not a driver-side
@@ -1258,7 +1230,6 @@ QUERIES = {
     "user_status_intervals": q_user_status_intervals,
     "session_window_totals": q_session_window_totals,
     "user_sessions": q_user_sessions,
-    "event_type_share": q_event_type_share,
     "user_frecency": q_user_frecency,
     "event_volume_anomalies": q_event_volume_anomalies,
 }
@@ -1282,7 +1253,6 @@ ORACLES = {
     "user_status_intervals": Q_USER_STATUS_INTERVALS_SQL,
     "session_window_totals": Q_SESSION_WINDOW_SQL,
     "user_sessions": Q_USER_SESSIONS_SQL,
-    "event_type_share": Q_EVENT_TYPE_SHARE_SQL,
     "user_frecency": Q_USER_FRECENCY_SQL,
     "event_volume_anomalies": Q_EVENT_ANOMALIES_SQL,
 }

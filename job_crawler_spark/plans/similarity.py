@@ -10,9 +10,7 @@ Training-data ANN operators, Spark-first:
   is searched independently (an IVF-style partition);
 - true IVF (trained coarse quantizer): one rounded-mean Lloyd step from
   deterministic seeds -> inverted lists -> nprobe search — the FAISS-IVF
-  structure, the canonical 10^10-vector scale path;
-- element-wise centroid aggregation per label (posexplode + hash agg);
-- kNN label voting (majority with deterministic tiebreak).
+  structure, the canonical 10^10-vector scale path.
 
 Cross-engine determinism: components are float32 in parquet; both engines
 cast float->double (exact) before multiplying, accumulate left-to-right, and
@@ -139,34 +137,6 @@ def _cosine_topk_sql() -> str:
     """
 
 
-def q_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (a<b, cos >= tau) — the LABELED
-    VERIFICATION BASELINE: a full O(n^2) crossJoin that exists to measure
-    the ANN twin's recall. The scale path is q_neardup_pairs_ann (IVF
-    candidates -> exact verify); this one's plan intentionally dies at
-    100x."""
-    emb = _emb(spark, sf_dir)
-    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", _cos4(F.col("ea"), F.col("eb")).alias("cos"))
-        .filter(F.col("cos") >= NEARDUP_TAU)
-        .orderBy("a", "b")
-    )
-
-
-def _neardup_sql() -> str:
-    cos = _cos4_sql("x.embedding", "y.embedding")
-    return f"""
-        SELECT x.vec_id AS a, y.vec_id AS b, {cos} AS cos
-        FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-        WHERE {cos} >= {NEARDUP_TAU}
-        ORDER BY a, b
-    """
-
-
 def _bucket_col(e: F.Column) -> F.Column:
     bits = [
         F.when(F.element_at(e, i + 1) > 0, F.lit(2 ** i)).otherwise(F.lit(0))
@@ -183,24 +153,6 @@ def _bucket_sql(e: str) -> str:
         f"(CASE WHEN {e}[{i + 1}] > 0 THEN {2 ** i} ELSE 0 END)"
         for i in range(SIGN_BITS)
     )
-
-
-def q_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-bit LSH bucket histogram — the IVF/LSH partition layout."""
-    emb = _emb(spark, sf_dir)
-    return (
-        emb.select(_bucket_col(F.col("embedding")).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("bucket")
-    )
-
-
-def _lsh_bucket_stats_sql() -> str:
-    return f"""
-        SELECT {_bucket_sql('embedding')} AS bucket, COUNT(*) AS n
-        FROM embeddings GROUP BY 1 ORDER BY bucket
-    """
 
 
 def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,70 +214,6 @@ def _lsh_ann_topk_sql() -> str:
         )
         SELECT query_id, neighbor_id, cos, rank FROM ranked
         WHERE rank <= 3 ORDER BY query_id, rank
-    """
-
-
-def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Element-wise centroid per label: posexplode -> (label, dim) hash agg.
-    Distributed vector aggregation without ever holding a vector in Python."""
-    emb = _emb(spark, sf_dir)
-    return (
-        emb.select("label", F.posexplode("embedding").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(stable_round(F.avg(F.col("v").cast("double")), 4).alias("centroid"))
-        .filter(F.col("dim") < 8)
-        .orderBy("label", "dim")
-    )
-
-
-def _label_centroids_sql() -> str:
-    avg = stable_round_sql("AVG(CAST(v AS DOUBLE))", 4)
-    return f"""
-        WITH e AS (
-          SELECT label, g.i - 1 AS dim, embedding[g.i] AS v
-          FROM embeddings, (SELECT unnest(range(1, 9)) AS i) g
-        )
-        SELECT label, dim, {avg} AS centroid
-        FROM e GROUP BY label, dim ORDER BY label, dim
-    """
-
-
-def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN classification: majority label among the top-5 neighbors
-    (ties -> smaller label). Composition of top-k + hash agg + rank."""
-    emb = _emb(spark, sf_dir)
-    topk = q_cosine_topk(spark, sf_dir)
-    labels = emb.select(F.col("vec_id").alias("neighbor_id"), "label")
-    votes = (
-        topk.join(labels, "neighbor_id")
-        .groupBy("query_id", "label")
-        .agg(F.count(F.lit(1)).alias("votes"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("votes").desc(), F.col("label").asc()
-    )
-    return (
-        votes.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("query_id", F.col("label").alias("predicted_label"), "votes")
-        .orderBy("query_id")
-    )
-
-
-def _knn_label_vote_sql() -> str:
-    return f"""
-        WITH topk AS ({_cosine_topk_sql()}),
-        votes AS (
-          SELECT t.query_id, e.label, COUNT(*) AS votes
-          FROM topk t JOIN embeddings e ON t.neighbor_id = e.vec_id
-          GROUP BY t.query_id, e.label
-        ),
-        ranked AS (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY votes DESC, label ASC) AS r FROM votes
-        )
-        SELECT query_id, label AS predicted_label, votes FROM ranked
-        WHERE r = 1 ORDER BY query_id
     """
 
 
@@ -551,9 +439,8 @@ def _ivf_trained_centroids(emb: DataFrame, k_lists: int = K_LISTS) -> DataFrame:
     deterministic seed vectors -> assign every sampled vector to its nearest
     seed (rounded cosine, centroid-id tiebreak) -> element-wise mean per
     list, each component passed through the dialect-stable rounding so the
-    trained centroids are bit-identical across engines (the
-    emb_label_centroids precedent). Returns (cid, ce: array<double>),
-    K_LISTS rows.
+    trained centroids are bit-identical across engines. Returns
+    (cid, ce: array<double>), K_LISTS rows.
 
     The sample (vec_id % TRAIN_STRIDE == 0, capped at TRAIN_CAP vectors) is
     the FAISS practice: the coarse quantizer trains on O(K) vectors, not the
@@ -761,16 +648,16 @@ def q_neardup_pairs_ann(
     nprobe: int | None = None,
     blocks: int | None = None,
 ) -> DataFrame:
-    """ANN twin of emb_neardup_pairs — the 100x-scale path: candidates from
-    the trained IVF coarse quantizer (each vector replicated into its
-    NPROBE=2 nearest lists; a pair is a candidate iff the two vectors share
-    a list), then EXACT cosine >= tau verification. Precision is 1 by
-    construction (every emitted pair is exact-verified); recall is the LSH
-    tradeoff, measured against the O(n^2) baseline in
+    """Embedding-cosine near-dup pairs (a<b, cos >= tau) — the 100x-scale
+    path: candidates from the trained IVF coarse quantizer (each vector
+    replicated into its NPROBE=2 nearest lists; a pair is a candidate iff
+    the two vectors share a list), then EXACT cosine >= tau verification.
+    Precision is 1 by construction (every emitted pair is exact-verified);
+    recall is the LSH tradeoff, measured against the O(n^2) baseline in
     tests/test_properties.py and rising with pair similarity (the closer
     the near-dup, the more certainly it shares a list).
 
-    Scale shape, vs the baseline's full crossJoin: centroids are a K-row
+    Scale shape, vs an O(n^2) crossJoin: centroids are a K-row
     broadcast; multi-assignment is one streamed corpus pass collapsed
     map-side (sorted-struct aggregate, no window); pair generation is
     JOIN-FREE bucket-local i<j expansion per list (the minhash-LSH
@@ -1022,11 +909,7 @@ QUERIES = {
     "emb_ivf_topk": q_ivf_topk,
     "emb_cosine_topk": q_cosine_topk,
     "emb_int8_topk": q_int8_topk,
-    "emb_neardup_pairs": q_neardup_pairs,
-    "emb_lsh_bucket_stats": q_lsh_bucket_stats,
     "emb_lsh_ann_topk": q_lsh_ann_topk,
-    "emb_label_centroids": q_label_centroids,
-    "emb_knn_label_vote": q_knn_label_vote,
     "emb_gram_matrix": q_gram_matrix,
 }
 
@@ -1035,10 +918,6 @@ ORACLES = {
     "emb_ivf_topk": _ivf_topk_sql(),
     "emb_cosine_topk": _cosine_topk_sql(),
     "emb_int8_topk": _int8_topk_sql(),
-    "emb_neardup_pairs": _neardup_sql(),
-    "emb_lsh_bucket_stats": _lsh_bucket_stats_sql(),
     "emb_lsh_ann_topk": _lsh_ann_topk_sql(),
-    "emb_label_centroids": _label_centroids_sql(),
-    "emb_knn_label_vote": _knn_label_vote_sql(),
     "emb_gram_matrix": _gram_matrix_sql(),
 }

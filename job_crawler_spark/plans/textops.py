@@ -2,17 +2,13 @@
 
 Training-data pipeline operators, each with a DuckDB oracle:
 
-- feature extraction (the reference parser's vocab/classifier semantics,
+- feature extraction (the reference parser's vocab semantics,
   main.py:246-358, over the driver documents' text)
-- token counting (whitespace + BPE-ish regex)
+- BPE pair statistics and merges, token-window chunking
 - quality scoring (length / punctuation / stopword ratios)
 - language guess (marker-word n-gram heuristic with deterministic argmax)
-- document fingerprinting (bag-of-words hash)
-- exact dedup (normalized-content MD5 hash-groupBy)
 - n-gram Jaccard near-dup pairs (3-gram shingles, explode + self-join)
 - MinHash + LSH banding candidate pairs
-- SimHash signatures (shuffle-free higher-order fold) + Hamming-LSH
-  banded near-dup pairs
 
 Determinism across engines: hashing is MD5 (identical everywhere),
 MinHash minima are lexicographic MINs over hex strings (no integer
@@ -40,7 +36,6 @@ LANG_MARKERS = {
     "de": ("der", "die", "und", "schnell", "klein"),
     "es": ("el", "la", "y", "rapido", "pequeno"),
 }
-BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 NGRAM = 3
 MINHASH_SEEDS = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
@@ -100,84 +95,6 @@ def _doc_tech_stack_sql() -> str:
 
 
 Q_DOC_TECH_STACK_SQL = _doc_tech_stack_sql()
-
-
-def q_doc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F4 first-match-wins classifiers + F3 benefit detection, aggregated."""
-    from job_crawler_spark.functions.text import (
-        experience_level_col,
-        has_benefits_col,
-        remote_policy_col,
-    )
-
-    lc = F.lower(F.col("text"))
-    per_doc = _docs(spark, sf_dir).select(
-        "doc_id",
-        experience_level_col(lc, lc).alias("experience_level"),
-        remote_policy_col(lc).alias("remote_policy"),
-        has_benefits_col(lc).alias("has_benefits"),
-    )
-    return (
-        per_doc.groupBy("experience_level", "remote_policy")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("has_benefits").cast("long")).alias("n_benefits"),
-        )
-        .orderBy("experience_level", "remote_policy")
-    )
-
-
-def _first_match_sql(indicators: dict[str, tuple[str, ...]], hay: str) -> str:
-    branches = []
-    for label, kws in indicators.items():
-        cond = " OR ".join(f"contains({hay}, '{k}')" for k in kws)
-        branches.append(f"WHEN ({cond}) THEN '{label}'")
-    return "CASE " + " ".join(branches) + " ELSE 'not_specified' END"
-
-
-def _classification_sql() -> str:
-    from job_crawler_spark.functions.text import (
-        BENEFIT_KEYWORDS,
-        EXPERIENCE_INDICATORS,
-        REMOTE_INDICATORS,
-    )
-
-    exp = _first_match_sql(EXPERIENCE_INDICATORS, "lc")
-    rem = _first_match_sql(REMOTE_INDICATORS, "lc")
-    ben = " OR ".join(f"contains(lc, '{b}')" for b in BENEFIT_KEYWORDS)
-    return f"""
-        WITH d AS (SELECT doc_id, lower(text) AS lc FROM documents),
-        c AS (SELECT doc_id, {exp} AS experience_level, {rem} AS remote_policy,
-                     ({ben}) AS has_benefits FROM d)
-        SELECT experience_level, remote_policy, COUNT(*) AS n,
-               CAST(SUM(CASE WHEN has_benefits THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_benefits
-        FROM c GROUP BY experience_level, remote_policy
-        ORDER BY experience_level, remote_policy
-    """
-
-
-# --- token counting -----------------------------------------------------------
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens_col()
-    bpe = F.regexp_count(F.col("text"), F.lit(BPE_TOKEN_RE))
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(F.length(F.trim("text")) == 0, 0)
-        .otherwise(F.size(toks))
-        .alias("ws_tokens"),
-        bpe.alias("bpe_tokens"),
-    )
-
-
-Q_TOKEN_COUNTS_SQL = f"""
-    SELECT doc_id,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len({_TOKENS_SQL}) END AS ws_tokens,
-           len(regexp_extract_all(text, '{BPE_TOKEN_RE}')) AS bpe_tokens
-    FROM documents
-"""
 
 
 # --- overlapping token-window chunking (RAG / embedding prep) -----------------
@@ -1167,45 +1084,6 @@ def _doc_repetition_sql() -> str:
     """
 
 
-def q_doc_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible train/val/test assignment: hash-based, engine- and
-    run-independent (md5 of the doc id — NOT rand(), NOT xxhash64, so any
-    system that can md5 reproduces the exact split). 90/5/5 by the first
-    8 hex chars mod 100. The training-pipeline staple that makes every
-    downstream experiment comparable."""
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long") % 100
-    )
-    assigned = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(bucket < 90, "train")
-        .when(bucket < 95, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-    return (
-        assigned.groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("split")
-    )
-
-
-_DOC_SPLIT_SQL = """
-    WITH a AS (
-      SELECT doc_id,
-             CASE WHEN CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                       1, 8)) AS BIGINT) % 100 < 90 THEN 'train'
-                  WHEN CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                       1, 8)) AS BIGINT) % 100 < 95 THEN 'val'
-                  ELSE 'test' END AS split
-      FROM documents
-    )
-    SELECT split, COUNT(*) AS n_docs FROM a GROUP BY split ORDER BY split
-"""
-
-
 # per-mille keep rates for the stratified training-mix sample; languages
 # absent from the map keep SAMPLE_DEFAULT_PM. Spec constants of the
 # operator (both engines embed the identical table).
@@ -1353,7 +1231,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     staple: each language keeps a configured per-mille of its documents,
     selected by md5 hash (NOT rand()), so any engine reproduces the exact
     same sample and reruns are stable. The sampling hash uses md5 chars
-    9-16 — a window disjoint from doc_split_assign's chars 1-8 — so sample
+    9-16 — a window disjoint from _split_bucket's chars 1-8 — so sample
     membership is INDEPENDENT of train/val/test assignment (correlated
     hashes would skew every stratum's split composition).
 
@@ -1460,7 +1338,7 @@ def decontaminate(docs: DataFrame, n: int = DECONTAM_NGRAM) -> DataFrame:
     C / Llama practice): flag train/val documents sharing any word n-gram
     with the held-out test split, so evaluation numbers aren't inflated by
     memorized eval text. The test split (md5 chars 1-8, the
-    ``doc_split_assign`` hash) stands in for the benchmark suite.
+    ``_split_bucket`` hash) stands in for the benchmark suite.
     ``docs`` needs (doc_id, text).
 
     Scale shape: the eval shingle set is benchmark-sized (millions of
@@ -2146,41 +2024,6 @@ def _lang_guess_sql() -> str:
     """
 
 
-# --- fingerprinting / exact dedup ------------------------------------------------
-
-def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-of-words document fingerprint: MD5 over sorted distinct tokens."""
-    toks = _tokens_col()
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(toks)), " "))
-    return _docs(spark, sf_dir).select("doc_id", fp.alias("fingerprint"))
-
-
-Q_FINGERPRINTS_SQL = f"""
-    SELECT doc_id,
-           md5(array_to_string(list_sort(list_distinct({_TOKENS_SQL})), ' '))
-               AS fingerprint
-    FROM documents
-"""
-
-
-def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: normalized-content hash groups with representative."""
-    from job_crawler_spark.operators.dedup import exact_text_dedup
-
-    return (
-        exact_text_dedup(_docs(spark, sf_dir))
-        .orderBy("content_hash")
-    )
-
-
-Q_EXACT_DUP_GROUPS_SQL = """
-    SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-               AS content_hash,
-           MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
-    FROM documents GROUP BY 1 ORDER BY content_hash
-"""
-
-
 # --- shingles / n-gram jaccard / minhash ------------------------------------------
 
 def _shingles_col() -> F.Column:
@@ -2667,7 +2510,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _is_new_doc_col() -> F.Column:
-    """The 'today's ingestion batch' membership flag: doc_split_assign's
+    """The 'today's ingestion batch' membership flag: _split_bucket's
     val+test slice (md5 chars 1-8 mod 100 >= 90, ~10% of docs) —
     deterministic, engine-portable, disjoint hash window from the MinHash
     signatures."""
@@ -2852,7 +2695,7 @@ def _dup_keep_canonical_sql() -> str:
 
 
 def _split_bucket(col: F.Column) -> F.Column:
-    """doc_split_assign's md5 bucket (chars 1-8 mod 100) over any id."""
+    """The train/val/test md5 bucket (chars 1-8 mod 100) over any id."""
     return (
         F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
         .cast("long") % 100
@@ -2868,13 +2711,13 @@ def _split_case(bucket: F.Column) -> F.Column:
 def q_cluster_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEAKAGE-SAFE train/val/test split: hash the near-dup CLUSTER id,
     not the document id, so every member of a near-dup cluster lands in
-    the same split. Per-document hashing (doc_split_assign) leaks
-    near-duplicates of training documents into val/test — the classic
-    eval-inflation bug (Lee et al. 2022, "Deduplicating Training Data
-    Makes Language Models Better", documents the cross-split duplicate
-    problem). Same md5 chars 1-8 mod 100, 90/5/5 convention as
-    doc_split_assign; `moved` flags documents whose own-id hash would
-    have put them in a different split (the quantified leak fix).
+    the same split. Per-document hashing leaks near-duplicates of
+    training documents into val/test — the classic eval-inflation bug
+    (Lee et al. 2022, "Deduplicating Training Data Makes Language Models
+    Better", documents the cross-split duplicate problem). Same md5 chars
+    1-8 mod 100, 90/5/5 convention as a per-document split; `moved` flags
+    documents whose own-id hash would have put them in a different split
+    (the quantified leak fix).
 
     Scale shape: cluster labels from the audited LSH+CC pipeline; the
     split itself is a NARROW projection over the label frame — two md5
@@ -2929,39 +2772,6 @@ def _cluster_split_sql() -> str:
                {case('cluster_id')} <> {case('doc_id')} AS moved
         FROM cc ORDER BY doc_id
     """
-
-
-def q_star_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long-chain connected components via STAR CONTRACTION (Kiveris
-    large-star/small-star), driver-gated: chain edges link consecutive
-    doc_ids within each lang partition, so each component is a path of
-    ~n_docs/n_langs hops — a diameter far beyond what min-label
-    propagation's iteration budget covers, exercising the O(log n)
-    fallback end-to-end. Cluster = min doc_id per lang, which the oracle
-    states directly as a window min."""
-    from pyspark.sql import Window
-
-    from job_crawler_spark.operators.dedup import connected_components_star
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    w = Window.partitionBy("lang").orderBy("doc_id")
-    edges = (
-        docs.withColumn("prev", F.lag("doc_id").over(w))
-        .filter(F.col("prev").isNotNull())
-        .select(F.col("prev").alias("a"), F.col("doc_id").alias("b"))
-    )
-    nodes = docs.select("doc_id")
-    cc = connected_components_star(edges, nodes)
-    out = cc.orderBy("doc_id")
-    # keep the centers-checkpoint handle visible to release_checkpoints
-    out._graft_checkpoints = getattr(cc, "_graft_checkpoints", [])
-    return out
-
-
-Q_STAR_CLUSTER_LABELS_SQL = """
-    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY lang) AS cluster_id
-    FROM documents ORDER BY doc_id
-"""
 
 
 def _minhash_bands_ctes() -> str:
@@ -3031,273 +2841,6 @@ def _minhash_incremental_sql() -> str:
     """
 
 
-# --- rolling-hash winnowing fingerprints ---------------------------------------------
-
-ROLL_B = 31
-ROLL_B2 = ROLL_B * ROLL_B
-ROLL_M = (1 << 31) - 1
-WINNOW_W = 4  # window of consecutive k-gram hashes per fingerprint
-
-
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schleimer/Wilkerson/Aiken winnowing over token rolling hashes: each
-    3-token window hashes polynomially (v1 + v2*B + v3*B^2 mod M), then the
-    minimum in every run of WINNOW_W consecutive hashes is kept — the classic
-    local-document fingerprint that survives insertions/reorderings better
-    than whole-doc hashes. Narrow until the final explode; per-doc work is
-    one higher-order pass, O(tokens)."""
-    from job_crawler_spark.functions.compat import bind_once
-
-    def hashes_of(toks):
-        return F.transform(
-            toks,
-            lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-            % ROLL_M,
-        )
-
-    def kgrams(hs):
-        n = F.size(hs)
-        return F.when(
-            n >= NGRAM,
-            F.transform(
-                F.sequence(F.lit(1), n - (NGRAM - 1)),
-                lambda i: (
-                    F.element_at(hs, i)
-                    + F.element_at(hs, i + 1) * ROLL_B
-                    + F.element_at(hs, i + 2) * ROLL_B2
-                )
-                % ROLL_M,
-            ),
-        ).otherwise(F.array().cast("array<long>"))
-
-    def winnow(kg):
-        m = F.size(kg)
-        return F.when(
-            m >= WINNOW_W,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), m - (WINNOW_W - 1)),
-                    lambda j: F.array_min(F.slice(kg, j, WINNOW_W)),
-                )
-            ),
-        ).otherwise(F.array_distinct(kg))
-
-    fps = bind_once(
-        bind_once(bind_once(_tokens_col(), hashes_of), kgrams), winnow
-    )
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(fps).alias("fingerprint"))
-        .orderBy("doc_id", "fingerprint")
-    )
-
-
-Q_WINNOW_SQL = f"""
-    WITH d AS (
-      SELECT doc_id,
-             list_transform({_TOKENS_SQL},
-               t -> ('0x' || substr(md5(t),1,8))::BIGINT % {ROLL_M}) AS hs
-      FROM documents
-    ),
-    kg AS (
-      SELECT doc_id,
-             CASE WHEN len(hs) >= {NGRAM} THEN
-               list_transform(range(1, len(hs) - {NGRAM - 2}),
-                 i -> (hs[i] + hs[i+1] * {ROLL_B} + hs[i+2] * {ROLL_B2})
-                      % {ROLL_M})
-             ELSE [] END AS kg
-      FROM d
-    ),
-    w AS (
-      SELECT doc_id,
-             CASE WHEN len(kg) >= {WINNOW_W} THEN
-               list_distinct(list_transform(range(1, len(kg) - {WINNOW_W - 2}),
-                 j -> list_min(list_slice(kg, j, j + {WINNOW_W - 1}))))
-             ELSE list_distinct(kg) END AS fps
-      FROM kg
-    )
-    SELECT doc_id, unnest(fps) AS fingerprint FROM w
-    ORDER BY doc_id, fingerprint
-"""
-
-
-# --- simhash ------------------------------------------------------------------------
-
-SIMHASH_HAM_MAX = 3
-
-
-def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 32-bit SimHash signature (operators/dedup.simhash_col):
-    narrow projection, zero shuffles — direct value-parity check vs DuckDB."""
-    from job_crawler_spark.operators.dedup import simhash_col
-
-    return (
-        _docs(spark, sf_dir)
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", simhash_col(_tokens_col()).alias("simhash"))
-        .orderBy("doc_id")
-    )
-
-
-_SIMHASH_SQL_CTE = f"""
-    d AS (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents
-          WHERE length(trim(text)) > 0),
-    h AS (SELECT doc_id,
-                 list_transform(t, x -> ('0x' || substr(md5(x),1,8))::BIGINT)
-                     AS hs,
-                 len(t) AS n
-          FROM d),
-    s AS (SELECT doc_id,
-                 (list_sum(list_transform(range(0,32), i ->
-                    CASE WHEN 2 * len(list_filter(hs, x -> ((x >> i) & 1) = 1)) > n
-                         THEN (1::BIGINT << i) ELSE 0::BIGINT END)))::BIGINT
-                     AS simhash
-          FROM h)
-"""
-
-Q_DOC_SIMHASH_SQL = f"""
-    WITH {_SIMHASH_SQL_CTE}
-    SELECT doc_id, simhash FROM s ORDER BY doc_id
-"""
-
-
-def q_simhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: Hamming-LSH banding (4 bands x 8 bits) then
-    exact bit_count(xor) <= {SIMHASH_HAM_MAX} verification. Pigeonhole
-    guarantees no pair under distance 4 is missed by the blocking, so the
-    only shuffle is the (band, key) bucket aggregation — never the full
-    cross product."""
-    from job_crawler_spark.operators.dedup import simhash_bands_col, simhash_col
-
-    sims = (
-        _docs(spark, sf_dir)
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", simhash_col(_tokens_col()).alias("sim"))
-        # deliberately recomputed per side — see q_minhash_lsh_pairs' note
-    )
-    bands = sims.select(
-        "doc_id", "sim", F.explode(simhash_bands_col(F.col("sim"))).alias("bk")
-    ).select("doc_id", "sim", "bk.band", "bk.key")
-    # join-free bucket-local pair expansion — see q_minhash_lsh_pairs
-    buckets = (
-        bands.groupBy("band", "key")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct(F.col("doc_id"), F.col("sim")))
-            ).alias("ms")
-        )
-        .filter(F.size("ms") > 1)
-    )
-    ms = F.col("ms")
-    pair_structs = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + F.lit(2), F.size(ms)),
-                lambda y: F.struct(
-                    x.getField("doc_id").alias("a"),
-                    y.getField("doc_id").alias("b"),
-                    F.bit_count(
-                        x.getField("sim").bitwiseXOR(y.getField("sim"))
-                    )
-                    .cast("long")
-                    .alias("hamming"),
-                ),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a", "p.b", "p.hamming")
-        .filter(F.col("hamming") <= SIMHASH_HAM_MAX)
-        .distinct()
-        .orderBy("a", "b")
-    )
-
-
-Q_SIMHASH_DUP_PAIRS_SQL = f"""
-    WITH {_SIMHASH_SQL_CTE},
-    bands AS (
-      SELECT doc_id, simhash, r.range AS band,
-             (simhash >> (8 * r.range::INT)) & 255 AS key
-      FROM s, range(0,4) r
-    )
-    SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-           bit_count(xor(x.simhash, y.simhash))::BIGINT AS hamming
-    FROM bands x JOIN bands y
-      ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-    WHERE bit_count(xor(x.simhash, y.simhash)) <= {SIMHASH_HAM_MAX}
-    ORDER BY a, b
-"""
-
-
-# --- multimodal payload plumbing ---------------------------------------------------
-
-def q_media_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opaque-binary column plumbing (multimodal path): payload bytes +
-    content hash + size, aggregated per source. The payload here is the
-    utf-8 text encoding — the schema/partitioning contract is identical for
-    image/audio bytes (decode stubs live in operators/multimodal.py)."""
-    d = _docs(spark, sf_dir).withColumn("payload", F.encode("text", "utf-8"))
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.octet_length("payload")).alias("total_bytes"),
-            F.max(F.octet_length("payload")).cast("long").alias("max_bytes"),
-        )
-        .orderBy("source")
-    )
-
-
-Q_MEDIA_PAYLOAD_STATS_SQL = """
-    SELECT source, COUNT(*) AS n_docs,
-           CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-           CAST(MAX(octet_length(encode(text))) AS BIGINT) AS max_bytes
-    FROM documents GROUP BY source ORDER BY source
-"""
-
-
-def q_media_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing under the oracle gate: the Arrow-batched decode
-    UDF (deterministic fake kernel) AND the frame-sampling UDF, joined per
-    media item — the DuckDB oracle recomputes the same dimension/frame
-    formulas from octet_length, so the whole mapInPandas path (schema,
-    batching, per-row math) is value-checked, not just executed."""
-    from job_crawler_spark.operators import multimodal as mm
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    feats = mm.decode_image_features(d).select("media_id", "width", "height")
-    frames = (
-        mm.sample_frames(d)
-        .groupBy("media_id")
-        .agg(F.count(F.lit(1)).alias("n_frames"))
-    )
-    return (
-        feats.join(frames, "media_id")
-        .select(
-            F.col("media_id").cast("long").alias("media_id"),
-            "width", "height", "n_frames",
-        )
-        .orderBy("media_id")
-    )
-
-
-Q_MEDIA_DECODE_SQL = """
-    WITH m AS (SELECT doc_id AS media_id,
-                      octet_length(encode(text)) AS n
-               FROM documents)
-    SELECT media_id,
-           CAST(16 + n % 64 AS INTEGER) AS width,
-           CAST(16 + (n // 64) % 64 AS INTEGER) AS height,
-           CAST(LEAST(8, GREATEST(1, n // 1024)) AS BIGINT) AS n_frames
-    FROM m ORDER BY media_id
-"""
-
-
 def q_doc_length_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-rank window functions — ntile / percent_rank /
     cume_dist, the within-group position class no other gated query
@@ -3348,8 +2891,6 @@ _DOC_LENGTH_RANKS_SQL = _doc_length_ranks_sql()
 
 QUERIES = {
     "doc_tech_stack": q_doc_tech_stack,
-    "doc_classification": q_doc_classification,
-    "token_counts": q_token_counts,
     "bpe_pair_stats": q_bpe_pair_stats,
     "bpe_learn_merges": q_bpe_learn_merges,
     "doc_bpe_tokens": q_doc_bpe_tokens,
@@ -3357,11 +2898,7 @@ QUERIES = {
     "doc_length_ranks": q_doc_length_ranks,
     "doc_shard_order": q_doc_shard_order,
     "quality_scores": q_quality_scores,
-    "lang_guess": q_lang_guess,
     "classifier_eval": q_classifier_eval,
-    "fingerprints": q_fingerprints,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "exact_dup_groups": q_exact_dup_groups,
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
     "ssjoin_prefix_pairs": q_ssjoin_prefix_pairs,
     "minhash_lsh_pairs": q_minhash_lsh_pairs,
@@ -3369,13 +2906,11 @@ QUERIES = {
     "dup_clusters": q_dup_clusters,
     "dup_keep_canonical": q_dup_keep_canonical,
     "cluster_split_assign": q_cluster_split_assign,
-    "star_cluster_labels": q_star_cluster_labels,
     "doc_unigram_freq": q_doc_unigram_freq,
     "doc_lm_perplexity": q_doc_lm_perplexity,
     "lm_quality_buckets": q_lm_quality_buckets,
     "tfidf_top_terms": q_tfidf_top_terms,
     "doc_repetition": q_doc_repetition,
-    "doc_split_assign": q_doc_split_assign,
     "doc_stratified_sample": q_stratified_sample,
     "doc_weighted_sample": q_doc_weighted_sample,
     "doc_decontaminate": q_doc_decontaminate,
@@ -3384,26 +2919,16 @@ QUERIES = {
     "doc_pack_stats": q_doc_pack_stats,
     "dup_passages": q_dup_passages,
     "doc_excise_dups": q_doc_excise_dups,
-    "media_decode_stats": q_media_decode_stats,
-    "doc_simhash": q_doc_simhash,
-    "simhash_dup_pairs": q_simhash_dup_pairs,
-    "media_payload_stats": q_media_payload_stats,
 }
 
 ORACLES = {
     "doc_tech_stack": Q_DOC_TECH_STACK_SQL,
-    "doc_classification": _classification_sql(),
-    "token_counts": Q_TOKEN_COUNTS_SQL,
     "bpe_pair_stats": _bpe_pair_stats_sql(),
     "bpe_learn_merges": _bpe_learn_merges_sql(),
     "doc_bpe_tokens": _doc_bpe_tokens_sql(),
     "doc_chunks": _doc_chunks_sql(),
     "quality_scores": _quality_scores_sql(),
-    "lang_guess": _lang_guess_sql(),
     "classifier_eval": _classifier_eval_sql(),
-    "fingerprints": Q_FINGERPRINTS_SQL,
-    "winnow_fingerprints": Q_WINNOW_SQL,
-    "exact_dup_groups": Q_EXACT_DUP_GROUPS_SQL,
     "ngram_jaccard_pairs": Q_NGRAM_JACCARD_PAIRS_SQL,
     "ssjoin_prefix_pairs": Q_SSJOIN_PREFIX_PAIRS_SQL,
     "minhash_lsh_pairs": _minhash_sql(),
@@ -3411,13 +2936,11 @@ ORACLES = {
     "dup_clusters": _dup_clusters_sql(),
     "dup_keep_canonical": _dup_keep_canonical_sql(),
     "cluster_split_assign": _cluster_split_sql(),
-    "star_cluster_labels": Q_STAR_CLUSTER_LABELS_SQL,
     "doc_unigram_freq": _doc_unigram_freq_sql(),
     "doc_lm_perplexity": _doc_lm_perplexity_sql(),
     "lm_quality_buckets": _lm_quality_buckets_sql(),
     "tfidf_top_terms": _tfidf_sql(),
     "doc_repetition": _doc_repetition_sql(),
-    "doc_split_assign": _DOC_SPLIT_SQL,
     "doc_length_ranks": _DOC_LENGTH_RANKS_SQL,
     "doc_shard_order": _DOC_SHARD_ORDER_SQL,
     "doc_stratified_sample": _stratified_sample_sql(),
@@ -3428,8 +2951,4 @@ ORACLES = {
     "doc_pack_stats": _doc_pack_sql(),
     "dup_passages": _dup_passages_sql(),
     "doc_excise_dups": _doc_excise_dups_sql(),
-    "media_decode_stats": Q_MEDIA_DECODE_SQL,
-    "doc_simhash": Q_DOC_SIMHASH_SQL,
-    "simhash_dup_pairs": Q_SIMHASH_DUP_PAIRS_SQL,
-    "media_payload_stats": Q_MEDIA_PAYLOAD_STATS_SQL,
 }

@@ -133,192 +133,11 @@ Q_NATION_REVENUE_SQL = f"""
 """
 
 
-def q_part_supplier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window top-k per group: 3 cheapest parts per brand by retail price —
-    the same two-phase-able rank pattern as the politeness scheduler."""
-    from pyspark.sql import Window
-
-    part = _t(spark, sf_dir, "part")
-    w = Window.partitionBy("p_brand").orderBy(
-        F.col("p_retailprice").asc(), F.col("p_partkey").asc()
-    )
-    return (
-        part.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("p_brand", "p_partkey", "p_retailprice", "rank")
-        .orderBy("p_brand", "rank")
-    )
-
-
-Q_PART_TOPK_SQL = """
-    WITH ranked AS (
-      SELECT p_brand, p_partkey, p_retailprice,
-             ROW_NUMBER() OVER (PARTITION BY p_brand
-                 ORDER BY p_retailprice ASC, p_partkey ASC) AS rank
-      FROM part
-    )
-    SELECT p_brand, p_partkey, p_retailprice, rank FROM ranked
-    WHERE rank <= 3 ORDER BY p_brand, rank
-"""
-
-
-def q_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q6 shape: scan-only forecast — every predicate must reach the parquet
-    reader (range filters on date/discount/quantity), zero joins, scalar agg."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            stable_round(
-                F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-Q_REVENUE_DELTA_SQL = f"""
-    SELECT {stable_round_sql("SUM(l_extendedprice * l_discount)", 2)} AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-"""
-
-
-def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q14 shape: fact-dim join (broadcast part) + conditional-aggregate
-    ratio. The CASE lives inside the agg so it's one pass, map-side combined."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
-    )
-    part = _t(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(F.lit(0.0))
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .agg(
-            stable_round(100.0 * F.sum(promo) / F.sum(rev), 4).alias(
-                "promo_revenue_pct"
-            ),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-Q_PROMO_REVENUE_SQL = f"""
-    SELECT {stable_round_sql(
-        "100.0 * SUM(CASE WHEN p_type LIKE 'PROMO%' "
-        "THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)"
-        " / SUM(l_extendedprice * (1 - l_discount))", 4)}
-               AS promo_revenue_pct,
-           COUNT(*) AS n_items
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1996-10-01 00:00:00'
-"""
-
-
-BIG_ORDER_QTY = 300
-
-
-def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q18 shape: aggregate-then-join. The HAVING aggregate runs FIRST so
-    only qualifying orderkeys (~0.1%) reach the join — never join-then-
-    aggregate, which would shuffle the whole fact table twice."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(stable_round(F.sum("l_quantity"), 2).alias("total_qty"))
-        .filter(F.col("total_qty") > BIG_ORDER_QTY)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .select(
-            "c_name", "o_orderkey", "o_orderdate", "o_totalprice", "total_qty"
-        )
-        .orderBy(
-            F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-        )
-        .limit(20)
-    )
-
-
-Q_BIG_ORDERS_SQL = f"""
-    WITH big AS (
-      SELECT l_orderkey, {stable_round_sql("SUM(l_quantity)", 2)} AS total_qty
-      FROM lineitem GROUP BY l_orderkey
-      HAVING {stable_round_sql("SUM(l_quantity)", 2)} > {BIG_ORDER_QTY}
-    )
-    SELECT c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-    FROM big JOIN orders ON l_orderkey = o_orderkey
-             JOIN customer ON o_custkey = c_custkey
-    ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20
-"""
-
-
-def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP (region -> nation -> total): multi-level aggregation in ONE
-    pass — Spark's Expand operator fans each row into its grouping sets
-    before the hash agg, so the cube costs one shuffle, not three queries."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return (
-        joined.rollup("r_name", "n_name")
-        .agg(
-            stable_round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(
-            F.col("r_name").asc_nulls_first(), F.col("n_name").asc_nulls_first()
-        )
-    )
-
-
-Q_ROLLUP_REVENUE_SQL = f"""
-    SELECT r_name, n_name,
-           {stable_round_sql("SUM(l_extendedprice * (1 - l_discount))", 2)}
-               AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    GROUP BY ROLLUP (r_name, n_name)
-    ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST
-"""
-
-
 def q_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE + GROUPING() — the full-lattice companion to
-    tpch_rollup_revenue (ROLLUP covers only the hierarchy's prefixes;
-    CUBE adds the cross-slices, here the per-priority totals across
-    statuses). One Expand + one hash-agg shuffle, exactly like rollup —
-    the 4 grouping sets cost a 4x map-side fan-out, never 4 scans.
+    """CUBE + GROUPING() — the full grouping lattice, here the per-status,
+    per-priority and cross-slice totals. Spark's Expand operator fans each
+    row into its grouping sets before one hash-agg shuffle, so the 4
+    grouping sets cost a 4x map-side fan-out, never 4 scans.
     grouping_id() is emitted so NULL-as-subtotal rows are
     distinguishable from NULL data values — both engines use the
     SQL-standard bit encoding (first grouping column = most significant
@@ -347,119 +166,6 @@ Q_STATUS_CUBE_SQL = f"""
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     ORDER BY gid ASC, o_orderstatus ASC NULLS FIRST,
              o_orderpriority ASC NULLS FIRST
-"""
-
-
-def q_late_ship_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS — orders with at least one
-    lineitem shipped >60 days after the order date. Catalyst plans the
-    EXISTS as a LEFT SEMI join (one probe per order, no fan-out), then a
-    partial/final count agg."""
-    o = _t(spark, sf_dir, "orders").alias("o")
-    li = _t(spark, sf_dir, "lineitem").alias("l")
-    late = F.col("l.l_shipdate") > (
-        F.col("o.o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    )
-    return (
-        o.join(li, (F.col("l.l_orderkey") == F.col("o.o_orderkey")) & late,
-               "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-Q_LATE_SHIP_SQL = """
-    SELECT o_orderpriority, COUNT(*) AS order_count
-    FROM orders o
-    WHERE EXISTS (SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey
-                    AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-    GROUP BY o_orderpriority ORDER BY o_orderpriority
-"""
-
-
-def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated SCALAR subquery — revenue of lineitems
-    whose quantity is below 20% of that part's average quantity. The
-    correlated AVG decorrelates to a per-part window average (one shuffle
-    on l_partkey), never a per-row subquery execution. Exact across
-    engines: quantities are integer-valued doubles, so AVG = exact-sum /
-    exact-count is bit-identical and the 0.2x filter can't flip."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    from pyspark.sql import Window
-
-    j = li.join(
-        F.broadcast(part.filter(F.col("p_brand") == "Brand#13")
-                    .select("p_partkey")),
-        li.l_partkey == F.col("p_partkey"),
-    )
-    avg_q = F.avg("l_quantity").over(Window.partitionBy("l_partkey"))
-    return (
-        j.withColumn("__avg_q", avg_q)
-        .filter(F.col("l_quantity") < 0.2 * F.col("__avg_q"))
-        .agg(
-            stable_round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly")
-        )
-    )
-
-
-Q_SMALL_QTY_SQL = f"""
-    SELECT {stable_round_sql("SUM(l_extendedprice) / 7.0", 2)} AS avg_yearly
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE p.p_brand = 'Brand#13'
-      AND l.l_quantity < 0.2 * (SELECT AVG(l2.l_quantity) FROM lineitem l2
-                                WHERE l2.l_partkey = l.l_partkey)
-"""
-
-
-def q_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: per-group argmin with join — for each brand, the
-    supplier quoting the lowest observed price, fully tie-broken
-    (price, s_name, l_orderkey, l_linenumber) so the winner is unique and
-    engine-independent. Window rank over at most |lineitem x part-match|
-    rows, supplier dim broadcast."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    sup = _t(spark, sf_dir, "supplier")
-    from pyspark.sql import Window
-
-    j = (
-        li.join(F.broadcast(part.select("p_partkey", "p_brand")),
-                li.l_partkey == F.col("p_partkey"))
-        .join(F.broadcast(sup.select("s_suppkey", "s_name")),
-              li.l_suppkey == F.col("s_suppkey"))
-        .select("p_brand", F.col("l_extendedprice").alias("price"),
-                "s_name", "l_orderkey", "l_linenumber")
-    )
-    w = Window.partitionBy("p_brand").orderBy(
-        F.col("price").asc(), F.col("s_name").asc(),
-        F.col("l_orderkey").asc(), F.col("l_linenumber").asc(),
-    )
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("p_brand", "price", "s_name")
-        .orderBy("p_brand")
-    )
-
-
-Q_MIN_PRICE_SQL = """
-    WITH j AS (
-      SELECT p_brand, l_extendedprice AS price, s_name,
-             l_orderkey, l_linenumber
-      FROM lineitem
-      JOIN part ON p_partkey = l_partkey
-      JOIN supplier ON s_suppkey = l_suppkey
-    ),
-    r AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY p_brand
-               ORDER BY price ASC, s_name ASC, l_orderkey ASC,
-                        l_linenumber ASC) AS rn
-      FROM j
-    )
-    SELECT p_brand, price, s_name FROM r WHERE rn = 1 ORDER BY p_brand
 """
 
 
@@ -528,32 +234,16 @@ ORDER BY name_a, name_b
 
 QUERIES = {
     "tpch_pricing_summary": q_pricing_summary,
-    "tpch_late_ship_exists": q_late_ship_exists,
-    "tpch_small_qty_revenue": q_small_qty_revenue,
-    "tpch_min_price_supplier": q_min_price_supplier,
     "tpch_top_revenue_orders": q_top_revenue_orders,
     "tpch_nation_revenue": q_nation_revenue,
-    "part_brand_topk": q_part_supplier_topk,
-    "tpch_revenue_delta": q_revenue_delta,
-    "tpch_promo_revenue": q_promo_revenue,
-    "tpch_big_orders": q_big_orders,
-    "tpch_rollup_revenue": q_rollup_revenue,
     "tpch_status_cube": q_status_cube,
     "fuzzy_name_pairs": q_fuzzy_name_pairs,
 }
 
 ORACLES = {
     "tpch_pricing_summary": Q_PRICING_SQL,
-    "tpch_late_ship_exists": Q_LATE_SHIP_SQL,
-    "tpch_small_qty_revenue": Q_SMALL_QTY_SQL,
-    "tpch_min_price_supplier": Q_MIN_PRICE_SQL,
     "tpch_top_revenue_orders": Q_TOP_REVENUE_SQL,
     "tpch_nation_revenue": Q_NATION_REVENUE_SQL,
-    "part_brand_topk": Q_PART_TOPK_SQL,
-    "tpch_revenue_delta": Q_REVENUE_DELTA_SQL,
-    "tpch_promo_revenue": Q_PROMO_REVENUE_SQL,
-    "tpch_big_orders": Q_BIG_ORDERS_SQL,
-    "tpch_rollup_revenue": Q_ROLLUP_REVENUE_SQL,
     "tpch_status_cube": Q_STATUS_CUBE_SQL,
     "fuzzy_name_pairs": Q_FUZZY_NAME_PAIRS_SQL,
 }

@@ -4,12 +4,11 @@ Runs EVERY query registered in __spark_entry__.queries() against its
 DuckDB oracle at a chosen scale factor with the same order-insensitive,
 type-faithful compare the pytest parity suite uses
 (tests/oracle_harness.compare), and prints a one-line-per-query verdict
-plus a final summary. This is the reproducible version of the ad-hoc
-"/tmp sweep harness" stamps quoted in BENCH/NOTES_r0*.md — the driver's
-own gate samples 50 queries per round; this sweeps all of them.
+plus a final summary. tests/test_oracle_parity.py runs the same check
+at sf0.001; this sweep repeats it at a larger scale factor.
 
 Usage:
-    python sweep.py                      # sf0.01 (the driver gate scale)
+    python sweep.py                      # sf0.01
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python sweep.py
 
 Exit code 0 iff every query matches. Run from the repo root: local-mode

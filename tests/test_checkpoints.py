@@ -70,7 +70,7 @@ def test_query_checkpoints_released_end_to_end(spark):
     sf = "/root/testdata/sf0.001"
     before = _storage_ids(spark)
     for name in ("emb_ivf_topk", "emb_neardup_pairs_ann", "dup_clusters",
-                 "star_cluster_labels", "dup_keep_canonical",
+                 "dup_keep_canonical",
                  "doc_unigram_freq", "cluster_split_assign",
                  "hourly_value_locf", "graph_authority_rank",
                  "cms_heavy_hitters", "hll_user_cardinality",

@@ -219,6 +219,24 @@ def test_resume_with_wrong_bloom_params_refuses(spark, tmp_path):
     assert res["round"] == 1
 
 
+def test_resume_without_bloom_meta_refuses(spark, tmp_path):
+    """bootstrap always pins the filter parameters; a catalog whose
+    bloom_meta row is missing, or lacks the backend field, cannot be
+    checked and must be refused rather than probed as if it matched."""
+    eng = _engine(spark, tmp_path, "nm")
+    eng.bootstrap(synth.seed_frontier(spark, 50))
+    eng.catalog.drop(eng.T_BLOOM_META)
+    with pytest.raises(ValueError, match="no bloom_meta row"):
+        eng.run_round(0)
+
+    no_backend = spark.createDataFrame(
+        [(16, 1 << 16, 5)], "n_shards int, m_bits long, k int"
+    )
+    eng.catalog.overwrite(no_backend, eng.T_BLOOM_META)
+    with pytest.raises(ValueError, match="no bloom_meta row"):
+        eng.run_round(0)
+
+
 def test_cuckoo_backend_matches_oracle(spark, tmp_path):
     """The seen-filter backend is correctness-neutral: a cuckoo-backed crawl
     produces the identical seen set and crawl order as the oracle (and hence

@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 from job_crawler_spark.operators import bloom
 from job_crawler_spark.operators.dedup import (
     anti_join_seen,
-    dedup_company_title,
-    exact_text_dedup,
     first_wins,
 )
 
@@ -23,35 +21,11 @@ def test_first_wins_is_arrival_deterministic(spark):
     assert got == {"k1": "a", "k2": "c"}
 
 
-def test_dedup_company_title_reference_semantics(spark):
-    rows = [
-        (0, "Engineer", "ACME"),
-        (1, "engineer", "acme"),      # dup (case-insensitive key)
-        (2, "", "acme"),              # dropped: empty title (P3)
-        (3, None, "acme"),            # dropped: null title
-        (4, "Engineer", "Other"),
-    ]
-    df = spark.createDataFrame(rows, "arrival_idx int, title string, company string")
-    got = sorted(r.arrival_idx for r in dedup_company_title(df).collect())
-    assert got == [0, 4]
-
-
 def test_anti_join_seen(spark):
     batch = spark.createDataFrame([("a",), ("b",), ("c",)], "url_canon string")
     seen = spark.createDataFrame([("b",)], "url_canon string")
     got = sorted(r.url_canon for r in anti_join_seen(batch, seen).collect())
     assert got == ["a", "c"]
-
-
-def test_exact_text_dedup(spark):
-    rows = [
-        ("d1", "Hello   World"),
-        ("d2", "hello world"),        # same after normalize
-        ("d3", "different"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    got = {r.doc_id: r.dup_count for r in exact_text_dedup(df).collect()}
-    assert got == {"d1": 2, "d3": 1}
 
 
 # --- Bloom -----------------------------------------------------------------

@@ -7,21 +7,8 @@ from pyspark.sql import functions as F
 from job_crawler_spark.functions.frameworks import (
     benefit_categories_col,
     career_track_col,
-    classify_skills_col,
-    enrich_jobs_with_frameworks,
     skill_gap_cols,
 )
-
-
-def test_skill_buckets_reference_semantics(spark):
-    # mirrors main.py:605-655: case-insensitive membership, user-list order
-    skills = ["Python", "React", "AWS", "PostgreSQL", "Excel", "go"]
-    df = spark.createDataFrame([(skills,)], "skills array<string>")
-    row = df.select(classify_skills_col(F.col("skills")).alias("b")).collect()[0].b
-    assert row.programming_languages == ["Python", "go"]
-    assert row.frameworks == ["React"]
-    assert row.tools == ["AWS"]
-    assert row.databases == ["PostgreSQL"]  # Excel in no bucket
 
 
 def test_benefit_categories_order_and_titlecase(spark):
@@ -65,29 +52,3 @@ def test_skill_gaps_order_and_slicing(spark):
     assert row.m == ["system design", "mentoring", "architecture"]
     assert row.i == ["system design", "mentoring"]  # first 2 (main.py:1455)
     assert row.t == ["architecture"]
-
-
-def test_enrich_jobs_end_to_end(spark):
-    jobs = spark.createDataFrame(
-        [
-            (1, "Senior Python Developer", "TechCorp",
-             "python django aws; remote work; pension and equity",
-             70000, 90000),
-            (2, "Office Clerk", "PaperCo", "filing in person", None, None),
-        ],
-        "id long, title string, company string, description string,"
-        " salary_min long, salary_max long",
-    )
-    out = enrich_jobs_with_frameworks(
-        jobs, ["Python", "AWS"], experience_years=5, salary_expectation=80000
-    ).collect()
-    by_id = {r.id: r for r in out}
-    good, bad = by_id[1], by_id[2]
-    assert good.compatibility > bad.compatibility
-    assert 1.0 <= bad.compatibility <= 10.0
-    assert good.framework.job_title == "Senior Python Developer"
-    assert "TechCorp" in good.framework.analysis_prompts.requirements_extraction
-    assert good.framework.criteria_weights["technical_skills"] == 40
-    assert "Pension" in list(good.benefit_categories)
-    # description truncation to 800 (main.py:380)
-    assert len(good.framework.job_description) <= 800

@@ -1,5 +1,5 @@
 """Every queries() entry must match its oracle_sql() on DuckDB at sf0.001 —
-the same gate the driver runs at sf0.01 (CORRECTNESS_r{N}.json)."""
+the same check sweep.py runs at sf0.01."""
 
 from __future__ import annotations
 
@@ -33,25 +33,27 @@ def test_query_matches_oracle(spark, con, name):
 
 
 def test_every_oracle_has_a_query():
-    assert set(ORACLES) <= set(QUERIES)
+    assert set(ORACLES) == set(QUERIES)
 
 
-def test_gate_order_is_least_recently_green_first():
-    """The driver samples a prefix-biased subset of queries() per round, so
-    insertion order decides freshness of gate evidence. The order must be
-    non-decreasing in last-green round (never-green entries first), derived
-    from the committed CORRECTNESS_r*.json artifacts — self-rotating, no
-    hand-maintained list to rot (r03 ADVICE)."""
-    import __spark_entry__ as entry
+def test_benchmark_queries_are_registered():
+    """perfbench's stored_analytics workload looks its queries up by name in
+    queries() and oracle_sql(); a name that goes from either map breaks the
+    benchmark, which tier-1 does not run. The QUERIES tuple is read from
+    the source so the benchmark package is not imported."""
+    import ast
+    from pathlib import Path
 
-    last = entry._last_green_rounds()
-    rounds = [last.get(name, 0) for name in QUERIES]
-    assert rounds == sorted(rounds), rounds
-    # Sanity: artifacts exist and name real queries (renames would orphan
-    # their history and re-prioritize the new name — loud here, not silent).
-    assert last, "no CORRECTNESS_r*.json parsed — gate ordering is blind"
-    known = set(last) & set(QUERIES)
-    assert len(known) >= len(last) * 0.9, sorted(set(last) - set(QUERIES))
+    src = Path(__file__).resolve().parents[1] / "perfbench" / "analytics.py"
+    bench = next(
+        ast.literal_eval(node.value)
+        for node in ast.parse(src.read_text()).body
+        if isinstance(node, ast.Assign)
+        and [getattr(t, "id", None) for t in node.targets] == ["QUERIES"]
+    )
+    assert bench, "no QUERIES tuple in perfbench/analytics.py"
+    assert set(bench) <= set(QUERIES), sorted(set(bench) - set(QUERIES))
+    assert set(bench) <= set(ORACLES), sorted(set(bench) - set(ORACLES))
 
 
 def test_outputs_are_driver_hashable(spark):
@@ -59,7 +61,8 @@ def test_outputs_are_driver_hashable(spark):
     array/struct/map columns make that die with `unhashable type: 'list'`
     (the one red r02 row). Every gated query must emit atomic columns only.
     No result materialization — though the iterative/eagerly-checkpointed
-    queries (the two CC ones and emb_ivf_topk's centroid training) do run
+    queries (the connected-components ones and emb_ivf_topk's centroid
+    training) do run
     Spark jobs at DataFrame-construction time."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -70,10 +73,3 @@ def test_outputs_are_driver_hashable(spark):
             if isinstance(f.dataType, (ArrayType, MapType, StructType)):
                 bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
     assert not bad, f"non-scalar output columns (driver cannot hash): {bad}"
-
-
-def test_rows_only_queries_run(spark):
-    """Entries without an oracle still must execute and return a DataFrame."""
-    for name in sorted(set(QUERIES) - set(ORACLES)):
-        df = QUERIES[name](spark, SF_DIR)
-        assert df.count() >= 0, name

@@ -351,14 +351,27 @@ def test_neardup_ann_recall(spark):
     under the old fixed k=8/nprobe=2, on a corpus whose tau sits barely
     above the random-pair cosine (hostile for any LSH; real near-dups at
     cos>=0.9 collide far more reliably)."""
+    from pyspark.sql import functions as F
+
     from job_crawler_spark.plans.similarity import (
-        q_neardup_pairs,
+        NEARDUP_TAU,
+        _cos4,
+        _emb,
         q_neardup_pairs_ann,
         release_checkpoints,
     )
 
     sf = "/root/testdata/sf0.001"
-    exact = {(r.a, r.b): r.cos for r in q_neardup_pairs(spark, sf).collect()}
+    emb = _emb(spark, sf)
+    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
+    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
+    baseline = (
+        a.crossJoin(b)
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b", _cos4(F.col("ea"), F.col("eb")).alias("cos"))
+        .filter(F.col("cos") >= NEARDUP_TAU)
+    )
+    exact = {(r.a, r.b): r.cos for r in baseline.collect()}
     ann_df = q_neardup_pairs_ann(spark, sf)
     ann = {(r.a, r.b): r.cos for r in ann_df.collect()}
     release_checkpoints(ann_df)

@@ -13,10 +13,8 @@ from pyspark.sql import functions as F
 from job_crawler_spark.operators.ring import (
     _md5_pos32,
     host_ring_pos,
-    ring_assign,
     ring_rebalance_plan,
     ring_vnodes,
-    vnodes_sql_struct_list,
 )
 
 
@@ -43,13 +41,6 @@ def test_vnodes_deterministic_sorted_and_sized():
     assert (_md5_pos32("shard:0:rep:0"), 0) in vn
 
 
-def test_vnodes_sql_struct_list_round_trips():
-    vn = ring_vnodes(2, 2)
-    lit = vnodes_sql_struct_list(vn)
-    for p, s in vn:
-        assert f"{{'pos': {p}, 'shard': {s}}}" in lit
-
-
 def test_host_ring_pos_matches_python_md5(spark):
     names = [f"h{i}.example.com" for i in range(20)]
     rows = (
@@ -65,8 +56,8 @@ def test_assignment_matches_python_successor_lookup(spark):
     vn = ring_vnodes(4, 16)
     names = [f"h{i}.example.com" for i in range(100)]
     got = {
-        r["host"]: (r["ring_pos"], r["shard"])
-        for r in ring_assign(_hosts(spark, names), n_shards=4).collect()
+        r["host"]: (r["ring_pos"], r["shard_a"])
+        for r in ring_rebalance_plan(_hosts(spark, names), n_shards=4).collect()
     }
     for h in names:
         pos = _md5_pos32(h)
@@ -83,8 +74,8 @@ def test_wrap_around_goes_to_first_vnode(spark):
         for h in (f"w{i}.example.com" for i in range(100_000))
         if _md5_pos32(h) > max_pos
     )
-    row = ring_assign(_hosts(spark, [wrap]), n_shards=4).collect()[0]
-    assert row["shard"] == vn[0][1]
+    row = ring_rebalance_plan(_hosts(spark, [wrap]), n_shards=4).collect()[0]
+    assert row["shard_a"] == vn[0][1]
 
 
 def test_rebalance_moved_hosts_land_on_new_shard_only(spark):
@@ -111,7 +102,7 @@ def test_validation():
 def test_assign_plan_is_narrow(spark):
     """ZERO joins, ZERO exchanges, no Python: assignment is a literal-
     array successor lookup projected per row."""
-    df = ring_assign(_hosts(spark, ["a.example.com"]), n_shards=4)
+    df = ring_rebalance_plan(_hosts(spark, ["a.example.com"]), n_shards=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Join" not in plan
